@@ -7,12 +7,17 @@ framework ships in this environment, and the transport layer is
 deliberately dumb: every route is one service call + JSON serialization.
 
 Error contract mirrors FastAPI's: non-2xx bodies are {"detail": "..."}.
+A 500 says only {"detail": "internal error", "error_id": ...}; the id
+and the traceback go to stderr, so no JVM stack reaches a client.
 """
 from __future__ import annotations
 
 import json
 import re
+import sys
 import threading
+import traceback
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable, Optional
 from urllib.parse import parse_qs, unquote, urlparse
@@ -578,6 +583,10 @@ def _job_list(service, m, qs, body):
 def _make_handler(service: OlapService):
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
+        # headers and body go out in two writes; with Nagle on, the
+        # body waits for the client's delayed ACK (~40 ms a reply on a
+        # keep-alive connection)
+        disable_nagle_algorithm = True
 
         def log_message(self, fmt, *args):   # quiet by default
             pass
@@ -607,8 +616,12 @@ def _make_handler(service: OlapService):
                     parse_qs(parsed.query), body)
             except (KeyError, ValueError) as exc:
                 status, payload = 400, {"detail": str(exc)}
-            except Exception as exc:        # mirror HTTPException(500, detail)
-                status, payload = 500, {"detail": str(exc)}
+            except Exception:
+                error_id = str(uuid.uuid4())
+                sys.stderr.write(f"error_id={error_id} {method} "
+                                 f"{parsed.path}\n{traceback.format_exc()}")
+                status, payload = 500, {"detail": "internal error",
+                                        "error_id": error_id}
             self._reply(status, payload)
 
         def do_GET(self):

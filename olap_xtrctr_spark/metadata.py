@@ -22,6 +22,7 @@ re-reads the view 2×levels times and is what this replaces.
 """
 from __future__ import annotations
 
+import threading
 from functools import reduce
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -181,6 +182,7 @@ def members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
 #            the cube's hierarchy structure (stale definitions can never
 #            serve: a changed cube changes the key)
 _MEMBERS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_MEMBERS_LOCK = threading.Lock()
 
 
 def _cube_fingerprint(cube: CubeDef) -> str:
@@ -239,10 +241,24 @@ def _evict_stale_spills(spark: SparkSession, cube: CubeDef,
 
 def cached_members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
                       disk_cache: bool = True) -> DataFrame:
+    """Single-flight: a miss builds under ``_MEMBERS_LOCK`` and checks
+    the memo again once it holds it, so concurrent first requests build
+    and spill once (two overwriting writers would each read files the
+    other deletes); a hit takes no lock."""
     key = (cube.name, sf_dir)
     df = _MEMBERS_CACHE.get(key)
     if df is not None:
         return df
+    with _MEMBERS_LOCK:
+        df = _MEMBERS_CACHE.get(key)
+        if df is None:
+            df = _MEMBERS_CACHE[key] = _build_members_cache(
+                spark, cube, sf_dir, disk_cache)
+    return df
+
+
+def _build_members_cache(spark: SparkSession, cube: CubeDef, sf_dir: str,
+                         disk_cache: bool) -> DataFrame:
     path = _disk_cache_path(spark, cube, sf_dir)
     if disk_cache:
         try:
@@ -259,35 +275,46 @@ def cached_members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
         # N*shuffle_partitions tiny partitions
         target = spark.sparkContext.defaultParallelism
         df = members_df(spark, cube, sf_dir).coalesce(target)
-    df = df.persist()
-    _MEMBERS_CACHE[key] = df
-    return df
+    return df.persist()
 
 
 # ---- static DMV rowsets (registry-derived) --------------------------------
+# Each rowset's rows come from one ``_*_rows`` function.  The ``*_df``
+# builders turn them into DataFrames with a plain ``createDataFrame``
+# and are the reference; register_dmv_views turns the same rows into
+# driver-local relations (``_local_df``).
+
+def catalog_rows(registry: CubeRegistry) -> list[Row]:
+    cats = sorted({c.catalog for c in registry._cubes.values()})
+    return [Row(CATALOG_NAME=c, DESCRIPTION=f"Catalogo {c}") for c in cats]
+
 
 def catalogs_df(spark: SparkSession, registry: CubeRegistry) -> DataFrame:
-    cats = sorted({c.catalog for c in registry._cubes.values()})
-    rows = [Row(CATALOG_NAME=c, DESCRIPTION=f"Catalogo {c}") for c in cats]
-    return spark.createDataFrame(rows)
+    return spark.createDataFrame(catalog_rows(registry))
+
+
+def _cubes_rows(registry: CubeRegistry) -> list[Row]:
+    return [Row(CATALOG_NAME=c.catalog, CUBE_NAME=c.name)
+            for c in registry._cubes.values()]
 
 
 def cubes_df(spark: SparkSession, registry: CubeRegistry) -> DataFrame:
-    rows = [Row(CATALOG_NAME=c.catalog, CUBE_NAME=c.name)
-            for c in registry._cubes.values()]
-    return spark.createDataFrame(rows)
+    return spark.createDataFrame(_cubes_rows(registry))
 
 
-def dimensions_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
-    rows = [Row(CUBE_NAME=cube.name,
+def _dimensions_rows(cube: CubeDef) -> list[Row]:
+    return [Row(CUBE_NAME=cube.name,
                 DIMENSION_NAME=d.name,
                 DIMENSION_UNIQUE_NAME=f"[{d.name}]")
             for d in cube.dimensions.values()]
-    return spark.createDataFrame(rows)
 
 
-def hierarchies_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
-    rows = [Row(CUBE_NAME=cube.name,
+def dimensions_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
+    return spark.createDataFrame(_dimensions_rows(cube))
+
+
+def _hierarchies_rows(cube: CubeDef) -> list[Row]:
+    return [Row(CUBE_NAME=cube.name,
                 DIMENSION_UNIQUE_NAME=f"[{d.name}]",
                 HIERARCHY_NAME=h.name,
                 HIERARCHY_UNIQUE_NAME=f"[{d.name}].[{h.name}]",
@@ -295,11 +322,14 @@ def hierarchies_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
                 HIERARCHY_IS_VISIBLE=True)
             for d in cube.dimensions.values()
             for h in d.hierarchies.values()]
-    return spark.createDataFrame(rows)
 
 
-def levels_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
-    rows = [Row(CUBE_NAME=cube.name,
+def hierarchies_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
+    return spark.createDataFrame(_hierarchies_rows(cube))
+
+
+def _levels_rows(cube: CubeDef) -> list[Row]:
+    return [Row(CUBE_NAME=cube.name,
                 DIMENSION_UNIQUE_NAME=f"[{d.name}]",
                 HIERARCHY_UNIQUE_NAME=f"[{d.name}].[{h.name}]",
                 LEVEL_NAME=lv.name,
@@ -309,25 +339,37 @@ def levels_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
             for d in cube.dimensions.values()
             for h in d.hierarchies.values()
             for i, lv in enumerate(h.levels)]
-    return spark.createDataFrame(rows)
 
 
-def measures_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
-    rows = [Row(CUBE_NAME=cube.name,
+def levels_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
+    return spark.createDataFrame(_levels_rows(cube))
+
+
+def _measures_rows(cube: CubeDef) -> list[Row]:
+    return [Row(CUBE_NAME=cube.name,
                 MEASURE_NAME=m.name,
                 MEASURE_UNIQUE_NAME=m.unique_name,
                 MEASURE_CAPTION=m.name,
                 MEASURE_AGGREGATOR=m.aggregator.upper(),
                 MEASURE_IS_VISIBLE=m.visible)
             for m in cube.measures.values()]
-    return spark.createDataFrame(rows)
 
 
-def properties_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
-    """MDSCHEMA_PROPERTIES (FIXTURES §2; reference consumes it for
-    DIMENSION PROPERTIES discovery, backend/actions_runner.py:342):
-    ancestor-level member properties per non-root level."""
-    rows = [Row(CUBE_NAME=cube.name,
+def measures_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
+    return spark.createDataFrame(_measures_rows(cube))
+
+
+def _string_schema(cols: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(c, T.StringType()) for c in cols])
+
+
+_PROPERTIES_SCHEMA = _string_schema([
+    "CUBE_NAME", "DIMENSION_UNIQUE_NAME", "LEVEL_UNIQUE_NAME",
+    "PROPERTY_NAME", "PROPERTY_CAPTION"])
+
+
+def _properties_rows(cube: CubeDef) -> list[Row]:
+    return [Row(CUBE_NAME=cube.name,
                 DIMENSION_UNIQUE_NAME=f"[{d.name}]",
                 LEVEL_UNIQUE_NAME=f"[{d.name}].[{h.name}].[{lv.name}]",
                 PROPERTY_NAME=f"{anc.name}_CAPTION",
@@ -336,21 +378,19 @@ def properties_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
             for h in d.hierarchies.values()
             for i, lv in enumerate(h.levels)
             for anc in h.levels[:i]]
+
+
+def properties_df(spark: SparkSession, cube: CubeDef) -> DataFrame:
+    """MDSCHEMA_PROPERTIES (FIXTURES §2; reference consumes it for
+    DIMENSION PROPERTIES discovery, backend/actions_runner.py:342):
+    ancestor-level member properties per non-root level."""
+    rows = _properties_rows(cube)
     if not rows:  # degenerate cube with single-level hierarchies only
-        schema = ("CUBE_NAME string, DIMENSION_UNIQUE_NAME string, "
-                  "LEVEL_UNIQUE_NAME string, PROPERTY_NAME string, "
-                  "PROPERTY_CAPTION string")
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], _PROPERTIES_SCHEMA)
     return spark.createDataFrame(rows)
 
 
-def mdschema_functions_df(spark: SparkSession) -> DataFrame:
-    """$system.MDSCHEMA_FUNCTIONS: the MDX functions this engine
-    parses — SSAS clients probe the rowset to light up UI affordances.
-    The rows-set wrapper block enumerates ``mdx._SET_WRAPPERS`` (the
-    literal dispatch list, so parser and rowset cannot drift); the
-    member/value functions are the grammar's remaining fixed surface.
-    Static by design — full-oracle checkable like DISCOVER_PROPERTIES."""
+def _functions_rows() -> list[Row]:
     from .mdx import _SET_WRAPPERS
 
     rows = [(f, "set function (rows-axis wrapper)", "(Set, ...)",
@@ -387,9 +427,18 @@ def mdschema_functions_df(spark: SparkSession) -> DataFrame:
         ("PARALLELPERIOD", "time intelligence (lag member)",
          "(Hierarchy, Integer)", "Member"),
     ]
-    return spark.createDataFrame(
-        [Row(FUNCTION_NAME=n, DESCRIPTION=d, PARAMETER_LIST=p,
-             RETURN_TYPE=t, ORIGIN=1) for n, d, p, t in rows])
+    return [Row(FUNCTION_NAME=n, DESCRIPTION=d, PARAMETER_LIST=p,
+                RETURN_TYPE=t, ORIGIN=1) for n, d, p, t in rows]
+
+
+def mdschema_functions_df(spark: SparkSession) -> DataFrame:
+    """$system.MDSCHEMA_FUNCTIONS: the MDX functions this engine
+    parses — SSAS clients probe the rowset to light up UI affordances.
+    The rows-set wrapper block enumerates ``mdx._SET_WRAPPERS`` (the
+    literal dispatch list, so parser and rowset cannot drift); the
+    member/value functions are the grammar's remaining fixed surface.
+    Static by design — full-oracle checkable like DISCOVER_PROPERTIES."""
+    return spark.createDataFrame(_functions_rows())
 
 
 DMV_BUILDERS = {
@@ -438,18 +487,14 @@ _SCHEMA_ROWSETS_COLS = ["SCHEMA_NAME", "SCHEMA_COLUMNS", "RESTRICTIONS",
 _SESSIONS_COLS = ["SESSION_ID", "SESSION_STATUS",
                   "SESSION_CURRENT_DATABASE", "SESSION_LAST_COMMAND",
                   "SESSION_START_TIME", "SESSION_LAST_UPDATE_TIME"]
+_SESSIONS_SCHEMA = _string_schema(_SESSIONS_COLS)
 _CONNECTIONS_COLS = ["CONNECTION_ID", "CONNECTION_USER_NAME",
                      "CONNECTION_HOST_NAME", "CONNECTION_START_TIME"]
 _PROPERTIES_COLS = ["PROPERTY_NAME", "PROPERTY_TYPE",
                     "PROPERTY_ACCESS_TYPE", "VALUE", "PROPERTY_DESCRIPTION"]
 
 
-def discover_properties_df(spark: SparkSession) -> DataFrame:
-    """$system.DISCOVER_PROPERTIES: engine identity plus the declared
-    operational defaults the reference surfaces through its properties
-    discovery (scanner/DGIS_SCAN_2_stable.py:338).  Static by design —
-    every row is a documented engine constant, so the rowset is
-    full-oracle checkable."""
+def _discover_properties_rows() -> list[Row]:
     from . import __version__
     from .query import CARDINALITY_WARN_THRESHOLD
 
@@ -472,14 +517,34 @@ def discover_properties_df(spark: SparkSession) -> DataFrame:
         ("MaxRowAxisDimensions", "int", "Read", "3",
          "CROSSJOIN chain depth accepted on the row axis (Q8)"),
     ]
-    return spark.createDataFrame(
-        [Row(PROPERTY_NAME=n, PROPERTY_TYPE=t, PROPERTY_ACCESS_TYPE=a,
-             VALUE=v, PROPERTY_DESCRIPTION=d) for n, t, a, v, d in props])
+    return [Row(PROPERTY_NAME=n, PROPERTY_TYPE=t, PROPERTY_ACCESS_TYPE=a,
+                VALUE=v, PROPERTY_DESCRIPTION=d) for n, t, a, v, d in props]
+
+
+def discover_properties_df(spark: SparkSession) -> DataFrame:
+    """$system.DISCOVER_PROPERTIES: engine identity plus the declared
+    operational defaults the reference surfaces through its properties
+    discovery (scanner/DGIS_SCAN_2_stable.py:338).  Static by design —
+    every row is a documented engine constant, so the rowset is
+    full-oracle checkable."""
+    return spark.createDataFrame(_discover_properties_rows())
+
+
+def _schema_rowsets_rows(columns: dict[str, list[str]]) -> list[Row]:
+    """One row per rowset; ``columns`` holds the column lists of the
+    DMV_BUILDERS rowsets other than MDSCHEMA_FUNCTIONS."""
+    cols = {**columns,
+            "DISCOVER_SCHEMA_ROWSETS": _SCHEMA_ROWSETS_COLS,
+            "DISCOVER_SESSIONS": _SESSIONS_COLS,
+            "DISCOVER_CONNECTIONS": _CONNECTIONS_COLS,
+            "DISCOVER_PROPERTIES": _PROPERTIES_COLS}
+    return [Row(SCHEMA_NAME=name, SCHEMA_COLUMNS=",".join(c),
+                RESTRICTIONS=True, DESCRIPTION=_ROWSET_DESCRIPTIONS[name])
+            for name, c in sorted(cols.items())]
 
 
 def discover_schema_rowsets_df(spark: SparkSession, registry: CubeRegistry,
-                               cube: CubeDef, sf_dir: str,
-                               prebuilt: dict | None = None) -> DataFrame:
+                               cube: CubeDef, sf_dir: str) -> DataFrame:
     """$system.DISCOVER_SCHEMA_ROWSETS: one row per queryable rowset
     with its column list — the view the reference's availability scan
     reconstructs by probing each rowset with ``WHERE 1=0`` and reading
@@ -487,40 +552,27 @@ def discover_schema_rowsets_df(spark: SparkSession, registry: CubeRegistry,
     Here the engine IS the catalog, so the rowset is a driver-side
     enumeration of DMV_BUILDERS plus the DISCOVER family itself; column
     lists come from the builders' declared schemas (schema analysis
-    only — no data job runs).
-
-    ``prebuilt`` (r13, guide §1.2 per-task work): a {rowset: DataFrame}
-    of already-constructed rowset frames whose ``.columns`` are read
-    instead of rebuilding each frame.  register_dmv_views passes the
-    frames it just registered — constructing MDSCHEMA_MEMBERS alone is
-    a 16-hierarchy union costing ~1.8 s of py4j plan construction, and
-    without sharing every register call built it (and every other
-    rowset) twice.  Column lists are identical either way."""
-    prebuilt = prebuilt or {}
-    builders = {
-        "DBSCHEMA_CATALOGS": lambda: catalogs_df(spark, registry),
-        "MDSCHEMA_CUBES": lambda: cubes_df(spark, registry),
-        "MDSCHEMA_DIMENSIONS": lambda: dimensions_df(spark, cube),
-        "MDSCHEMA_HIERARCHIES": lambda: hierarchies_df(spark, cube),
-        "MDSCHEMA_LEVELS": lambda: levels_df(spark, cube),
-        "MDSCHEMA_MEASURES": lambda: measures_df(spark, cube),
-        "MDSCHEMA_MEMBERS": lambda: members_df(spark, cube, sf_dir),
-        "MDSCHEMA_PROPERTIES": lambda: properties_df(spark, cube),
+    only — no data job runs)."""
+    frames = {
+        "DBSCHEMA_CATALOGS": catalogs_df(spark, registry),
+        "MDSCHEMA_CUBES": cubes_df(spark, registry),
+        "MDSCHEMA_DIMENSIONS": dimensions_df(spark, cube),
+        "MDSCHEMA_HIERARCHIES": hierarchies_df(spark, cube),
+        "MDSCHEMA_LEVELS": levels_df(spark, cube),
+        "MDSCHEMA_MEASURES": measures_df(spark, cube),
+        "MDSCHEMA_MEMBERS": members_df(spark, cube, sf_dir),
+        "MDSCHEMA_PROPERTIES": properties_df(spark, cube),
     }
-    rows = [Row(SCHEMA_NAME=name,
-                SCHEMA_COLUMNS=",".join(
-                    (prebuilt[name] if name in prebuilt else b()).columns),
-                RESTRICTIONS=True,
-                DESCRIPTION=_ROWSET_DESCRIPTIONS[name])
-            for name, b in builders.items()]
-    for name, cols in (("DISCOVER_SCHEMA_ROWSETS", _SCHEMA_ROWSETS_COLS),
-                       ("DISCOVER_SESSIONS", _SESSIONS_COLS),
-                       ("DISCOVER_CONNECTIONS", _CONNECTIONS_COLS),
-                       ("DISCOVER_PROPERTIES", _PROPERTIES_COLS)):
-        rows.append(Row(SCHEMA_NAME=name, SCHEMA_COLUMNS=",".join(cols),
-                        RESTRICTIONS=True,
-                        DESCRIPTION=_ROWSET_DESCRIPTIONS[name]))
-    return spark.createDataFrame(sorted(rows, key=lambda r: r.SCHEMA_NAME))
+    return spark.createDataFrame(_schema_rowsets_rows(
+        {name: df.columns for name, df in frames.items()}))
+
+
+def _sessions_rows(jobs) -> list[tuple]:
+    if jobs is None:
+        return []
+    return [(j["id"], j["status"], j["catalog_code"], j["mdx_query"],
+             j["created_at"], j["updated_at"])
+            for j in jobs.list(limit=1000)]
 
 
 def discover_sessions_df(spark: SparkSession, jobs=None) -> DataFrame:
@@ -528,30 +580,85 @@ def discover_sessions_df(spark: SparkSession, jobs=None) -> DataFrame:
     session-rowset shape the reference scans.  Dynamic by nature (ids
     and timings differ per process), so graded by tests rather than a
     value oracle."""
-    schema = ("SESSION_ID string, SESSION_STATUS string, "
-              "SESSION_CURRENT_DATABASE string, SESSION_LAST_COMMAND "
-              "string, SESSION_START_TIME string, "
-              "SESSION_LAST_UPDATE_TIME string")
-    if jobs is None:
-        return spark.createDataFrame([], schema)
-    rows = [(j["id"], j["status"], j["catalog_code"], j["mdx_query"],
-             j["created_at"], j["updated_at"])
-            for j in jobs.list(limit=1000)]
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(_sessions_rows(jobs), _SESSIONS_SCHEMA)
+
+
+def _connections_rows(spark: SparkSession) -> list[Row]:
+    sc = spark.sparkContext
+    import datetime as _dt
+    start = _dt.datetime.fromtimestamp(sc.startTime / 1000.0) \
+        .isoformat(sep=" ", timespec="seconds")
+    return [Row(CONNECTION_ID=sc.applicationId,
+                CONNECTION_USER_NAME=sc.sparkUser(),
+                CONNECTION_HOST_NAME=sc.master,
+                CONNECTION_START_TIME=start)]
 
 
 def discover_connections_df(spark: SparkSession) -> DataFrame:
     """$system.DISCOVER_CONNECTIONS: one row — the embedded engine's
     single 'connection' is its SparkSession."""
-    sc = spark.sparkContext
-    import datetime as _dt
-    start = _dt.datetime.fromtimestamp(sc.startTime / 1000.0) \
-        .isoformat(sep=" ", timespec="seconds")
-    return spark.createDataFrame(
-        [Row(CONNECTION_ID=sc.applicationId,
-             CONNECTION_USER_NAME=sc.sparkUser(),
-             CONNECTION_HOST_NAME=sc.master,
-             CONNECTION_START_TIME=start)])
+    return spark.createDataFrame(_connections_rows(spark))
+
+
+# ---- DMV views -------------------------------------------------------------
+
+def _local_df(spark: SparkSession, rows: list,
+              schema: T.StructType | None = None) -> DataFrame:
+    """``rows`` as a driver-local relation: Python rows → Arrow →
+    ``LocalRelation``, with the schema ``createDataFrame(rows)`` infers
+    when none is given.  Building it runs no Spark job, and a scan,
+    filter or limit over it collects on the driver without one, where
+    a plain ``createDataFrame(rows)`` is a Python RDD whose every
+    collect is a job that queues behind whatever else the session
+    runs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def _build_dmv_views(spark: SparkSession, registry: CubeRegistry,
+                     cube: CubeDef, sf_dir: str, prefix: str) -> None:
+    """Register every rowset but DISCOVER_SESSIONS under ``prefix``."""
+    frames = {
+        "DBSCHEMA_CATALOGS": _local_df(spark, catalog_rows(registry)),
+        "MDSCHEMA_CUBES": _local_df(spark, _cubes_rows(registry)),
+        "MDSCHEMA_DIMENSIONS": _local_df(spark, _dimensions_rows(cube)),
+        "MDSCHEMA_HIERARCHIES": _local_df(spark, _hierarchies_rows(cube)),
+        "MDSCHEMA_LEVELS": _local_df(spark, _levels_rows(cube)),
+        "MDSCHEMA_MEASURES": _local_df(spark, _measures_rows(cube)),
+        "MDSCHEMA_PROPERTIES": _local_df(spark, _properties_rows(cube),
+                                         _PROPERTIES_SCHEMA),
+        "MDSCHEMA_MEMBERS": members_df(spark, cube, sf_dir),
+    }
+    columns = {name: df.columns for name, df in frames.items()}
+    frames.update({
+        "MDSCHEMA_FUNCTIONS": _local_df(spark, _functions_rows()),
+        "DISCOVER_SCHEMA_ROWSETS": _local_df(spark,
+                                             _schema_rowsets_rows(columns)),
+        "DISCOVER_CONNECTIONS": _local_df(spark, _connections_rows(spark)),
+        "DISCOVER_PROPERTIES": _local_df(spark, _discover_properties_rows()),
+    })
+    for name, df in frames.items():
+        df.createOrReplaceTempView(f"{prefix}_{name}")
+
+
+def _dmv_key(registry: CubeRegistry, cube: CubeDef, sf_dir: str) -> tuple:
+    """Everything the rowsets other than DISCOVER_SESSIONS derive from."""
+    return (sf_dir, cube.name, _cube_fingerprint(cube),
+            tuple((m.name, m.unique_name, m.aggregator, m.visible)
+                  for m in cube.measures.values()),
+            tuple((c.catalog, c.name) for c in registry._cubes.values()))
+
+
+# (session, prefix) -> (_dmv_key, DISCOVER_SESSIONS rows) of the views
+# registered under that prefix
+_DMV_VIEWS: dict[tuple[SparkSession, str], tuple[tuple, list]] = {}
+_DMV_LOCK = threading.Lock()
 
 
 def register_dmv_views(spark: SparkSession, registry: CubeRegistry,
@@ -564,31 +671,24 @@ def register_dmv_views(spark: SparkSession, registry: CubeRegistry,
     different catalogs never overwrite each other's shared view names
     (temp views are session-global and the HTTP server is threaded).
     ``jobs``: the JobRegistry backing DISCOVER_SESSIONS (empty rowset
-    when omitted)."""
-    # Build each rowset frame ONCE and share it with the
-    # DISCOVER_SCHEMA_ROWSETS column enumeration (r13: the members
-    # union alone is ~1.8 s of py4j plan construction; every register
-    # call used to pay it — and every other rowset build — twice).
-    built = {
-        "DBSCHEMA_CATALOGS": catalogs_df(spark, registry),
-        "MDSCHEMA_CUBES": cubes_df(spark, registry),
-        "MDSCHEMA_DIMENSIONS": dimensions_df(spark, cube),
-        "MDSCHEMA_HIERARCHIES": hierarchies_df(spark, cube),
-        "MDSCHEMA_LEVELS": levels_df(spark, cube),
-        "MDSCHEMA_MEASURES": measures_df(spark, cube),
-        "MDSCHEMA_PROPERTIES": properties_df(spark, cube),
-        "MDSCHEMA_MEMBERS": members_df(spark, cube, sf_dir),
-    }
-    for name, df in built.items():
-        df.createOrReplaceTempView(f"{prefix}_{name}")
-    mdschema_functions_df(spark).createOrReplaceTempView(
-        f"{prefix}_MDSCHEMA_FUNCTIONS")
-    discover_schema_rowsets_df(spark, registry, cube, sf_dir,
-                               prebuilt=built) \
-        .createOrReplaceTempView(f"{prefix}_DISCOVER_SCHEMA_ROWSETS")
-    discover_sessions_df(spark, jobs).createOrReplaceTempView(
-        f"{prefix}_DISCOVER_SESSIONS")
-    discover_connections_df(spark).createOrReplaceTempView(
-        f"{prefix}_DISCOVER_CONNECTIONS")
-    discover_properties_df(spark).createOrReplaceTempView(
-        f"{prefix}_DISCOVER_PROPERTIES")
+    when omitted).
+
+    The views are built once per cube structure: while the session,
+    prefix, ``sf_dir``, cube structure and measures and the registry's
+    cubes match the last build under ``prefix``, a call only refreshes
+    DISCOVER_SESSIONS, and only when the jobs it lists changed.  Every
+    rowset but MDSCHEMA_MEMBERS is a driver-local relation, so neither
+    building nor scanning it runs a Spark job.  One lock covers the
+    check and the build, so concurrent requests neither build twice
+    nor replace views another request is registering."""
+    key = _dmv_key(registry, cube, sf_dir)
+    with _DMV_LOCK:
+        built, sessions = _DMV_VIEWS.get((spark, prefix), (None, None))
+        if built != key:
+            _build_dmv_views(spark, registry, cube, sf_dir, prefix)
+            sessions = None
+        rows = _sessions_rows(jobs)
+        if rows != sessions:
+            _local_df(spark, rows, _SESSIONS_SCHEMA) \
+                .createOrReplaceTempView(f"{prefix}_DISCOVER_SESSIONS")
+        _DMV_VIEWS[(spark, prefix)] = (key, rows)

@@ -241,8 +241,11 @@ def _simhash_kernel(docs: DataFrame, text_col: str, id_col: str,
     def build(batches):
         for b in batches:
             arr = b.column(1)
-            keep = pc.and_(pc.is_valid(arr),
-                           pc.greater(pc.list_value_length(arr), 0))
+            # a NULL list has a NULL length, so the AND is NULL there:
+            # fill it with False, or pc.all() skips it and reads True
+            keep = pc.fill_null(
+                pc.and_(pc.is_valid(arr),
+                        pc.greater(pc.list_value_length(arr), 0)), False)
             if not pc.all(keep).as_py():
                 b = b.filter(keep)
                 arr = b.column(1)

@@ -41,9 +41,8 @@ class OlapService:
     # ---- metadata endpoints ----------------------------------------------
 
     def get_catalogs(self) -> list[dict[str, Any]]:
-        df = metadata.catalogs_df(self.spark, self.registry)
-        return [r.asDict() for r in
-                df.filter(~df.CATALOG_NAME.startswith("$")).collect()]
+        return [r.asDict() for r in metadata.catalog_rows(self.registry)
+                if not r.CATALOG_NAME.startswith("$")]
 
     def get_cubes(self, catalog: str) -> list[str]:
         return [c.name for c in self.registry.cubes_in_catalog(catalog)]

@@ -189,3 +189,53 @@ def test_mdschema_functions_matches_parser_dispatch(spark):
     for f in ("SUM", "AGGREGATE", "MEDIAN", "MIN", "MAX", "RANK"):
         assert by_name[f]["RETURN_TYPE"] == "Scalar"
     assert len(by_name) == len(rows)      # no duplicate names
+
+
+def test_members_cache_miss_is_single_flight(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    """Two threads missing the same (cube, sf_dir) build and spill the
+    members table once and get the same cached frame; without the lock
+    both overwrite the spill, each reading files the other deletes."""
+    import threading
+    import time
+
+    from olap_xtrctr_spark import metadata
+    cube = sales_cube()
+    key = (cube.name, sf_dir)
+    builds = []
+    build = metadata.members_df
+
+    def slow_build(*a, **kw):
+        builds.append(threading.current_thread().name)
+        time.sleep(1.0)     # hold the miss open for the other thread
+        return build(*a, **kw)
+    monkeypatch.setattr(metadata, "members_df", slow_build)
+    monkeypatch.setattr(metadata, "_disk_cache_path",
+                        lambda spark, cube, sf: str(tmp_path / "spill"))
+    prev = metadata._MEMBERS_CACHE.pop(key, None)
+    start = threading.Barrier(2)
+    got, errors = {}, []
+
+    def first_request(name):
+        start.wait()
+        try:
+            got[name] = metadata.cached_members_df(spark, cube, sf_dir)
+        except Exception as exc:   # the race surfaces as a read failure
+            errors.append(exc)
+    threads = [threading.Thread(target=first_request, args=(n,), name=n)
+               for n in ("a", "b")]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not errors, errors
+        assert len(builds) == 1, builds
+        assert got["a"] is got["b"]
+        assert got["a"].count() == build(spark, cube, sf_dir).count()
+    finally:
+        cached = metadata._MEMBERS_CACHE.pop(key, None)
+        if cached is not None:
+            cached.unpersist()
+        if prev is not None:
+            metadata._MEMBERS_CACHE[key] = prev
