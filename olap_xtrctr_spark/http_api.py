@@ -71,6 +71,15 @@ def query_request_from_json(payload: dict[str, Any]) -> QueryRequest:
     )
 
 
+class _Reply(Exception):
+    """A client-error reply raised by a check shared between routes;
+    dispatch answers it as ``(status, {"detail": detail})``."""
+
+    def __init__(self, status: int, detail: str) -> None:
+        super().__init__(detail)
+        self.status, self.detail = status, detail
+
+
 class _Routes:
     """Route table: (method, compiled-path-regex) -> handler(service,
     path_groups, query_params, body) -> (status, payload)."""
@@ -94,6 +103,8 @@ class _Routes:
             if match:
                 try:
                     return fn(service, match, qs, body)
+                except _Reply as r:
+                    return r.status, {"detail": r.detail}
                 finally:
                     # Request-scoped cache hygiene (ADVICE r11): the
                     # diamond-shaped operators pin intermediates for
@@ -315,20 +326,58 @@ def _index_dir(name: str) -> Optional[str]:
     return os.path.join(base, name)
 
 
+def _index_request(body: dict[str, Any], kind: str, query: bool):
+    """The checks the four index routes share.  A build gets the index
+    dir once the name is bare and the table registered; a query gets
+    (dir, meta, ids) once the index is built and ``query_ids`` are
+    valid.  A failed check raises the route's 400/404 reply."""
+    import os
+
+    from .session import TABLES
+    d = _index_dir(body.get("name", ""))
+    if d is None:
+        raise _Reply(400, "body needs a bare index 'name'" if query else
+                     "body needs a bare index 'name' (no directories — "
+                     "indexes land in $OLAP_INDEX_DIR)")
+    if not query:
+        table = body.get("table", "embeddings")
+        if table not in TABLES:
+            raise _Reply(400, f"unknown table {table!r} "
+                              f"(one of {sorted(TABLES)})")
+        return d
+    try:
+        with open(os.path.join(d, "_INDEX_META.json"),
+                  encoding="utf-8") as f:
+            meta = json.load(f)
+    except (OSError, ValueError):
+        raise _Reply(404, f"index {body.get('name')!r} not built "
+                          f"(POST /api/index/{kind}/build first)")
+    qids = body.get("query_ids") or []
+    if not isinstance(qids, list) or not qids or len(qids) > 1000:
+        raise _Reply(400, "body needs 'query_ids': a non-empty list of "
+                          "at most 1000 vector ids")
+    # Client input validation (ADVICE r11): a non-numeric id used to
+    # raise an uncaught ValueError out of int() and surface as a 500.
+    # bool is excluded explicitly — int(True) would silently query id 1.
+    ids: list[int] = []
+    for q in qids:
+        try:
+            if isinstance(q, bool):
+                raise TypeError
+            ids.append(int(q))
+        except (TypeError, ValueError):
+            raise _Reply(400, f"query_ids entries must be integer "
+                              f"vector ids, got {q!r}")
+    return d, meta, ids
+
+
 @ROUTES.add("POST", r"/api/index/ivf/build")
 def _ivf_build(service, m, qs, body):
     from .operators.similarity import ivf_build_index
-    from .session import TABLES, load_table
-    d = _index_dir(body.get("name", ""))
-    if d is None:
-        return 400, {"detail": "body needs a bare index 'name' (no "
-                               "directories — indexes land in "
-                               "$OLAP_INDEX_DIR)"}
-    table = body.get("table", "embeddings")
-    if table not in TABLES:
-        return 400, {"detail": f"unknown table {table!r} "
-                               f"(one of {sorted(TABLES)})"}
-    emb = load_table(service.spark, service.sf_dir, table)
+    from .session import load_table
+    d = _index_request(body, "ivf", query=False)
+    emb = load_table(service.spark, service.sf_dir,
+                     body.get("table", "embeddings"))
     meta = ivf_build_index(emb, d,
                            n_clusters=int(body.get("n_clusters", 8)),
                            id_col=body.get("id_col", "vec_id"),
@@ -339,39 +388,11 @@ def _ivf_build(service, m, qs, body):
 
 @ROUTES.add("POST", r"/api/index/ivf/query")
 def _ivf_query(service, m, qs, body):
-    import json
-    import os
+    from pyspark.sql import functions as F
 
     from .operators.similarity import ivf_query_index
     from .session import load_table
-    from pyspark.sql import functions as F
-    d = _index_dir(body.get("name", ""))
-    if d is None:
-        return 400, {"detail": "body needs a bare index 'name'"}
-    try:
-        with open(os.path.join(d, "_INDEX_META.json"),
-                  encoding="utf-8") as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        return 404, {"detail": f"index {body.get('name')!r} not built "
-                               f"(POST /api/index/ivf/build first)"}
-    qids = body.get("query_ids") or []
-    if not isinstance(qids, list) or not qids or len(qids) > 1000:
-        return 400, {"detail": "body needs 'query_ids': a non-empty "
-                               "list of at most 1000 vector ids"}
-    # Client input validation (ADVICE r11): a non-numeric id used to
-    # raise an uncaught ValueError out of int() and surface as a 500.
-    # bool is excluded explicitly — int(True) would silently query id 1.
-    ids: list[int] = []
-    for q in qids:
-        if isinstance(q, bool):
-            return 400, {"detail": f"query_ids entries must be integer "
-                                   f"vector ids, got {q!r}"}
-        try:
-            ids.append(int(q))
-        except (TypeError, ValueError):
-            return 400, {"detail": f"query_ids entries must be integer "
-                                   f"vector ids, got {q!r}"}
+    d, meta, ids = _index_request(body, "ivf", query=True)
     table = body.get("table", "embeddings")
     queries = load_table(service.spark, service.sf_dir, table).filter(
         F.col(meta["id_col"]).isin(ids))
@@ -387,17 +408,10 @@ def _ivf_query(service, m, qs, body):
 @ROUTES.add("POST", r"/api/index/ivfpq/build")
 def _ivfpq_build(service, m, qs, body):
     from .operators.similarity import ivfpq_build_index
-    from .session import TABLES, load_table
-    d = _index_dir(body.get("name", ""))
-    if d is None:
-        return 400, {"detail": "body needs a bare index 'name' (no "
-                               "directories — indexes land in "
-                               "$OLAP_INDEX_DIR)"}
-    table = body.get("table", "embeddings")
-    if table not in TABLES:
-        return 400, {"detail": f"unknown table {table!r} "
-                               f"(one of {sorted(TABLES)})"}
-    emb = load_table(service.spark, service.sf_dir, table)
+    from .session import load_table
+    d = _index_request(body, "ivfpq", query=False)
+    emb = load_table(service.spark, service.sf_dir,
+                     body.get("table", "embeddings"))
     meta = ivfpq_build_index(emb, d,
                              id_col=body.get("id_col", "vec_id"),
                              vec_col=body.get("vec_col", "embedding"))
@@ -406,37 +420,11 @@ def _ivfpq_build(service, m, qs, body):
 
 @ROUTES.add("POST", r"/api/index/ivfpq/query")
 def _ivfpq_query(service, m, qs, body):
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
     from .operators.similarity import ivfpq_query_index
     from .session import load_table
-    d = _index_dir(body.get("name", ""))
-    if d is None:
-        return 400, {"detail": "body needs a bare index 'name'"}
-    try:
-        with open(os.path.join(d, "_INDEX_META.json"),
-                  encoding="utf-8") as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        return 404, {"detail": f"index {body.get('name')!r} not built "
-                               f"(POST /api/index/ivfpq/build first)"}
-    qids = body.get("query_ids") or []
-    if not isinstance(qids, list) or not qids or len(qids) > 1000:
-        return 400, {"detail": "body needs 'query_ids': a non-empty "
-                               "list of at most 1000 vector ids"}
-    ids: list[int] = []
-    for q in qids:
-        if isinstance(q, bool):
-            return 400, {"detail": f"query_ids entries must be integer "
-                                   f"vector ids, got {q!r}"}
-        try:
-            ids.append(int(q))
-        except (TypeError, ValueError):
-            return 400, {"detail": f"query_ids entries must be integer "
-                                   f"vector ids, got {q!r}"}
+    d, meta, ids = _index_request(body, "ivfpq", query=True)
     table = body.get("table", "embeddings")
     corpus = load_table(service.spark, service.sf_dir, table)
     queries = corpus.filter(F.col(meta["id_col"]).isin(ids))

@@ -178,10 +178,10 @@ def members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
 # backend/DGIS_SCAN_2.py:700-702).  The members table is bounded metadata
 # (~1.7M rows at reference scale), read by every navigation call:
 #   tier 1 — in-process memo + .persist()
-#   tier 2 — parquet spill under the warehouse, keyed by a fingerprint of
-#            the cube's hierarchy structure (stale definitions can never
-#            serve: a changed cube changes the key)
-_MEMBERS_CACHE: dict[tuple[str, str], DataFrame] = {}
+#   tier 2 — parquet spill under the warehouse
+# Both tiers are keyed by a fingerprint of the cube's hierarchy structure
+# (stale definitions can never serve: a changed cube changes the key).
+_MEMBERS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _MEMBERS_LOCK = threading.Lock()
 
 
@@ -239,13 +239,19 @@ def _evict_stale_spills(spark: SparkSession, cube: CubeDef,
                 pass   # eviction is hygiene, never query-blocking
 
 
-def cached_members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
-                      disk_cache: bool = True) -> DataFrame:
+def _members_key(cube: CubeDef, sf_dir: str) -> tuple[str, str, str]:
+    return (cube.name, _cube_fingerprint(cube), sf_dir)
+
+
+def cached_members_df(spark: SparkSession, cube: CubeDef,
+                      sf_dir: str) -> DataFrame:
     """Single-flight: a miss builds under ``_MEMBERS_LOCK`` and checks
     the memo again once it holds it, so concurrent first requests build
     and spill once (two overwriting writers would each read files the
-    other deletes); a hit takes no lock."""
-    key = (cube.name, sf_dir)
+    other deletes); a hit takes no lock.  The key carries the cube's
+    fingerprint, so a cube redefined under the same name never serves
+    the old members."""
+    key = _members_key(cube, sf_dir)
     df = _MEMBERS_CACHE.get(key)
     if df is not None:
         return df
@@ -253,28 +259,22 @@ def cached_members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
         df = _MEMBERS_CACHE.get(key)
         if df is None:
             df = _MEMBERS_CACHE[key] = _build_members_cache(
-                spark, cube, sf_dir, disk_cache)
+                spark, cube, sf_dir)
     return df
 
 
-def _build_members_cache(spark: SparkSession, cube: CubeDef, sf_dir: str,
-                         disk_cache: bool) -> DataFrame:
+def _build_members_cache(spark: SparkSession, cube: CubeDef,
+                         sf_dir: str) -> DataFrame:
     path = _disk_cache_path(spark, cube, sf_dir)
-    if disk_cache:
-        try:
-            df = spark.read.parquet(path)
-        except Exception:
-            # miss → build once, spill, re-read (the re-read gives the
-            # compact file-backed plan instead of the 8-branch union)
-            members_df(spark, cube, sf_dir).write.mode("overwrite") \
-                .parquet(path)
-            _evict_stale_spills(spark, cube, sf_dir)
-            df = spark.read.parquet(path)
-    else:
-        # coalesce: the union of N hierarchy branches otherwise persists
-        # N*shuffle_partitions tiny partitions
-        target = spark.sparkContext.defaultParallelism
-        df = members_df(spark, cube, sf_dir).coalesce(target)
+    try:
+        df = spark.read.parquet(path)
+    except Exception:
+        # miss → build once, spill, re-read (the re-read gives the
+        # compact file-backed plan instead of the 8-branch union)
+        members_df(spark, cube, sf_dir).write.mode("overwrite") \
+            .parquet(path)
+        _evict_stale_spills(spark, cube, sf_dir)
+        df = spark.read.parquet(path)
     return df.persist()
 
 

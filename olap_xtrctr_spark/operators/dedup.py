@@ -68,7 +68,7 @@ def shingle_docs(docs: DataFrame, text_col: str = "text",
     Arrow gram kernel was A/B'd on the real entries and LOST —
     docs_ngram_novelty 1.71 -> 2.02 s, docs_contamination_check
     0.51 -> 0.83 s, docs_containment_pairs_prefix 9.9 -> 12.1 s
-    (scripts/gram_sweep_probe.py, alternating passes).  The r13
+    (393a7ba:scripts/gram_sweep_probe.py, alternating passes).  The r13
     pair-core kernel win was the 1:1 replacement of the chain inside a
     SINGLE pass feeding one aggregate; shingle_docs consumers either
     re-evaluate the gram subtree per consumer (novelty's first-owner
@@ -142,7 +142,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     #    array, so every xxhash64 input is value-identical to the old
     #    per-column form and the emitted pairs are bit-identical
     #    (verified by exceptAll at sf0.001/0.01/0.1,
-    #    scripts/minhash_variants_probe.py).
+    #    094431e:scripts/minhash_variants_probe.py).
     # 2. The signature table is persisted (tracked): it feeds FOUR
     #    subtree copies (both bucket-join sides + both scoring rejoins)
     #    and the old plan re-shingled and re-aggregated the corpus four

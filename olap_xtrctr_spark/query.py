@@ -40,44 +40,21 @@ from pyspark.sql import functions as F
 from . import naming
 from .cube import CubeDef, CubeRegistry, Dimension, Hierarchy, Level, Measure
 
-# ---- fact ⋈ dim-view join-side policy (r13, guide §3.1) --------------------
-# Catalyst's post-pruning size ESTIMATE for the slim fact projection can
-# undercut the dim-view chain's (path tables carry no CBO stats; join
-# views estimate as products), and the static planner then broadcasts
-# the FACT: cube_nation_sales built a 600k-row hash relation of lineitem
-# and streamed the 150k-row orders bridge — inverted locally, fatal at
-# real scale.  Policy (measured, see OPTIMIZATION_r13.md):
-#   "hint"   — broadcast-hint the view side, SIZE-GATED (r14, VERDICT
-#              r13 item 4): the unconditional r13 hint was the
-#              local-mode winner but would broadcast an SF-growing
-#              bridge view (orders_wide at 100 TB) just the same.  The
-#              gate cannot use the view's own Catalyst estimate — path
-#              tables carry no CBO stats, so join views estimate as
-#              row-count PRODUCTS (orders_wide "estimates" 2.7 EB at
-#              sf0.1 while actually being ~150k rows; gating on that
-#              would deny every hint and reinstate the fact
-#              broadcast).  Instead the gate sums the view's LEAF
-#              relation estimates — the parquet scan footprint, which
-#              is real (file-size-based), an upper bound on a
-#              FK-join view's output bytes before projection, and
-#              grows with the fact for bridge views.  Under the gate
-#              (default: the session's autoBroadcastJoinThreshold;
-#              SPARK_GRAFT_DIM_HINT_MAX_BYTES overrides) the view is
-#              broadcast-hinted; over it, the join is pinned to
-#              sort-merge ("merge" hint) so the product-inflated /
-#              inverted static estimates can't broadcast EITHER side,
-#              and AQE still coalesces and skew-splits at runtime.
-#   "aqe"    — no hint; defer every estimate-based broadcast to AQE's
-#              runtime sizes.
-#   "off"    — pre-r13 behavior (static estimates decide).
-import os as _os
+# ---- fact ⋈ dim-view join-side policy (OPTIMIZATION_r13/r14.md) ----------
+# Catalyst's estimate for the slim fact projection can undercut the
+# dim-view chain's (path tables carry no CBO stats, so join views
+# estimate as row-count PRODUCTS), and the static planner then
+# broadcasts the FACT.  So the view side is broadcast-hinted, but only
+# while its LEAF scan footprint (file-size based, real, and growing
+# with the fact for bridge views) is within the session's
+# autoBroadcastJoinThreshold.  The view's own estimate can't serve as
+# the gate: orders_wide "estimates" 2.7 EB at sf0.1.  Over the gate the
+# join is pinned to sort-merge, so neither side is broadcast on an
+# inflated estimate, and AQE still coalesces and skew-splits at runtime.
 
-_DIM_JOIN_MODE = _os.environ.get("SPARK_GRAFT_DIM_JOIN", "hint")
-
-# gate decisions memoized per (applicationId, cube, view, sf_dir): the
-# leaf walk costs a handful of py4j round-trips and the answer is a
-# pure function of the registered view + the files under sf_dir
-_DIM_HINT_GATE: dict[tuple, bool] = {}
+# leaf-scan bytes per (applicationId, cube, view, sf_dir): the walk
+# costs a handful of py4j round-trips; the gate is read live per query
+_LEAF_SCAN_BYTES: dict[tuple, Optional[int]] = {}
 
 
 def _leaf_scan_bytes(view: DataFrame) -> int:
@@ -91,11 +68,10 @@ def _leaf_scan_bytes(view: DataFrame) -> int:
 
 
 def _hint_gate_bytes(spark) -> int:
-    env = _os.environ.get("SPARK_GRAFT_DIM_HINT_MAX_BYTES")
-    if env is not None:
-        return int(env)
     raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
                          "10485760")
+    if raw.isdigit():       # plain bytes: skip the JVM parser's py4j trips
+        return int(raw)
     try:
         return int(spark._jvm.org.apache.spark.network.util.JavaUtils
                    .byteStringAsBytes(raw))
@@ -103,20 +79,19 @@ def _hint_gate_bytes(spark) -> int:
         return 10 * 1024 * 1024
 
 
-def _dim_join_side(view: DataFrame, gate_key: tuple | None = None) -> DataFrame:
-    if _DIM_JOIN_MODE != "hint":
-        return view
-    allowed = _DIM_HINT_GATE.get(gate_key) if gate_key else None
-    if allowed is None:
-        spark = view.sparkSession
-        gate = _hint_gate_bytes(spark)
+def _dim_join_side(view: DataFrame, key: tuple, gate: int) -> DataFrame:
+    if gate <= 0:
+        return view.hint("merge")
+    if key not in _LEAF_SCAN_BYTES:
         try:
-            allowed = gate > 0 and _leaf_scan_bytes(view) <= gate
-        except Exception:       # plan shape the leaf walk can't read —
-            allowed = True      # keep the r13 behavior for it
-        if gate_key:
-            _DIM_HINT_GATE[gate_key] = allowed
-    return F.broadcast(view) if allowed else view.hint("merge")
+            _LEAF_SCAN_BYTES[key] = _leaf_scan_bytes(view)
+        except Exception:   # leaves the walk can't size: hint ungated
+            _LEAF_SCAN_BYTES[key] = None
+    size = _LEAF_SCAN_BYTES[key]
+    if size is None or size <= gate:
+        return F.broadcast(view)
+    return view.hint("merge")
+
 
 # Reference guard constants (BASELINE.md)
 CARDINALITY_WARN_THRESHOLD = 100_000
@@ -715,6 +690,25 @@ class CubeQueryEngine:
             self._view_cache[key] = cube.views[view_name](self.spark, self.sf_dir)
         return self._view_cache[key]
 
+    def _join_views(self, cube: CubeDef,
+                    dims: list[Dimension]) -> DataFrame:
+        """fact ⋈ each physical view the dimensions ride, once per view
+        even when several logical dimensions share it."""
+        needed: dict[str, Dimension] = {}
+        for dim in dims:
+            if dim.view is not None:
+                needed.setdefault(dim.view, dim)
+        joined = cube.fact(self.spark, self.sf_dir)
+        gate = _hint_gate_bytes(self.spark)
+        for view_name, dim in needed.items():
+            view = _dim_join_side(
+                self._view(cube, view_name),
+                (self.spark.sparkContext.applicationId,
+                 cube.name, view_name, self.sf_dir), gate)
+            joined = joined.join(
+                view, F.col(dim.fact_key) == view[dim.view_key], "inner")
+        return joined
+
     # ---- analysis ----------------------------------------------------------
 
     def _resolve_level(self, hier: Hierarchy, item: AxisItem) -> Level:
@@ -1074,26 +1068,13 @@ class CubeQueryEngine:
                             slicer_groups[key]))
 
         from .session import load_table
-        fact = cube.fact(self.spark, self.sf_dir)
         # natural columns = the raw fact table's (derived degenerate-
         # dim columns like anio/mes are query-time sugar, not source)
         fact_cols = load_table(self.spark, self.sf_dir,
                                cube.fact_table).columns
-        joined = fact
-        needed: dict[str, Dimension] = {}
-        for dim in ([a.dimension for a in axes]
-                    + [d for d, _, _ in filters]
-                    + [d for d, _, _ in slicers]):
-            if dim.view is not None:
-                needed.setdefault(dim.view, dim)
-        for view_name, dim in needed.items():
-            view = _dim_join_side(
-                self._view(cube, view_name),
-                (self.spark.sparkContext.applicationId,
-                 cube.name, view_name, self.sf_dir))
-            joined = joined.join(
-                view, F.col(dim.fact_key) == view[dim.view_key],
-                "inner")
+        joined = self._join_views(
+            cube, [a.dimension for a in axes]
+            + [d for d, _, _ in filters + slicers])
         for ax in axes:
             if ax.member_constraints:
                 joined = joined.filter(
@@ -1377,25 +1358,11 @@ class CubeQueryEngine:
                  f"{CARDINALITY_WARN_THRESHOLD:,}")
 
         # ---- build the joined relation (one join per physical view) -------
-        fact = cube.fact(self.spark, self.sf_dir)
-        needed_views: dict[str, Dimension] = {}
-        for dim in ([a.dimension for a in axes]
-                    + [d for d, _, _ in filters]
-                    + [d for d, _, _ in slicer_parsed]
-                    + [d for d, _, _ in setagg_dims]
-                    + [d for d, _, _ in setstat_dims]
-                    + ([var_dim] if var_dim else [])):
-            if dim.view is not None:
-                needed_views.setdefault(dim.view, dim)
-
-        joined = fact
-        for view_name, dim in needed_views.items():
-            view = _dim_join_side(
-                self._view(cube, view_name),
-                (self.spark.sparkContext.applicationId,
-                 cube.name, view_name, self.sf_dir))
-            joined = joined.join(
-                view, F.col(dim.fact_key) == view[dim.view_key], "inner")
+        joined = self._join_views(
+            cube, [a.dimension for a in axes]
+            + [d for d, _, _ in
+               filters + slicer_parsed + setagg_dims + setstat_dims]
+            + ([var_dim] if var_dim else []))
 
         # ---- predicates ----------------------------------------------------
         for ax in axes:

@@ -36,7 +36,6 @@ class OlapService:
         self.registry = registry or default_registry()
         self.engine = CubeQueryEngine(spark, self.registry, sf_dir)
         self.jobs = JobRegistry(store_dir=job_store_dir)
-        self._members_cache: dict[str, Any] = {}
 
     # ---- metadata endpoints ----------------------------------------------
 
@@ -72,11 +71,8 @@ class OlapService:
     def _members(self, catalog: str):
         """Members metadata per catalog through the two-tier X5 cache
         (in-process persist + fingerprint-keyed parquet spill)."""
-        if catalog not in self._members_cache:
-            cube = self.registry.resolve(catalog)
-            self._members_cache[catalog] = metadata.cached_members_df(
-                self.spark, cube, self.sf_dir)
-        return self._members_cache[catalog]
+        return metadata.cached_members_df(
+            self.spark, self.registry.resolve(catalog), self.sf_dir)
 
     def get_members(self, catalog: str, dimension: str, hierarchy: str,
                     level: str, limit: int = MEMBER_PAGE_SIZE,

@@ -179,7 +179,7 @@ def run_stream_to_memory(spark: SparkSession, streaming_df: DataFrame,
     session's default of 200 would be worse still; measured on sf0.1:
     32-wide 1.84 s, 8-wide 1.13 s for the same rollup; the r13 probe
     put the 3-replay trio at 2.84 s for width 8 vs 2.27 s for width 4,
-    width 2 flat-to-worse — scripts/stream_replay_probe.py).  State
+    width 2 flat-to-worse — 11d0584:scripts/stream_replay_probe.py).  State
     partitioning is fixed at the first micro-batch, and ``start()``
     plans asynchronously, so the caller restores the conf AFTER
     ``awaitTermination`` (see ``drain_stream_to_table``).  A real

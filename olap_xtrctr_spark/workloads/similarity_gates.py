@@ -30,8 +30,8 @@ def register(add) -> None:
     # so these gates legitimately need n_probe=5 of 8 cells — the
     # regime where IVF pruning is weakest.  The CLUSTERED regime the
     # index family was designed for is measured separately
-    # (scripts/ann_clustered_probe.py: recall@10=1.0 at n_probe=2/32,
-    # residual-PQ gain +0.207) and pinned by the clustered-corpus tests
+    # (2852f4c:scripts/ann_clustered_probe.py: recall@10=1.0 at
+    # n_probe=2/32, residual-PQ gain +0.207) and pinned by the clustered-corpus tests
     # in tests/test_recall.py; both corpus shapes are test-locked.
     _ANN_GATE_MAX_VECS = 100_000
 

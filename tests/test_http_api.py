@@ -518,6 +518,24 @@ def test_ivfpq_index_http_lifecycle(base_url, tmp_path, monkeypatch):
     assert ref["columns"] == ["query_id", "rank", "neighbor_id",
                               "cosine"]
 
+    # the same query_ids validation as the IVF route
+    for bad in ([], list(range(1001))):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(base_url + "/api/index/ivfpq/query",
+                  {"name": "pq1", "query_ids": bad})
+        assert e.value.code == 400
+        assert _json.loads(e.value.read()) == {
+            "detail": "body needs 'query_ids': a non-empty list of at "
+                      "most 1000 vector ids"}
+    for bad_ids in (["abc"], [1, None], [True], [[1]]):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(base_url + "/api/index/ivfpq/query",
+                  {"name": "pq1", "query_ids": bad_ids})
+        assert e.value.code == 400
+        assert _json.loads(e.value.read()) == {
+            "detail": f"query_ids entries must be integer vector ids, "
+                      f"got {bad_ids[-1]!r}"}
+
     # a stale codebook signature is a conflict, not a 500
     mp = os.path.join(str(tmp_path / "indexes"), "pq1",
                       "_INDEX_META.json")

@@ -191,6 +191,51 @@ def test_mdschema_functions_matches_parser_dispatch(spark):
     assert len(by_name) == len(rows)      # no duplicate names
 
 
+def test_members_memo_follows_cube_redefinition(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """A cube redefined in-process under the same name serves its own
+    members, through the memo and the service alike, with no manual
+    memo clear: the memo is keyed by the cube's structure fingerprint,
+    as the disk spill is."""
+    from olap_xtrctr_spark import metadata
+    from olap_xtrctr_spark.cube import CubeRegistry
+    from olap_xtrctr_spark.service import OlapService
+
+    monkeypatch.setattr(
+        metadata, "_disk_cache_path",
+        lambda spark, cube, sf: str(
+            tmp_path / metadata._cube_fingerprint(cube)))
+    hier = "Dim Customer.Segmento"
+
+    def define(with_segment: bool):
+        cube = sales_cube(catalog="MEMO_PROBE", name="memo_probe")
+        if not with_segment:
+            del cube.dimensions["Dim Customer"].hierarchies["Segmento"]
+        reg = CubeRegistry()
+        reg.register(cube)
+        return cube, OlapService(spark, sf_dir, registry=reg)
+
+    def hierarchies(df):
+        return {r[0] for r in df.select("JERARQUIA").distinct().collect()}
+
+    before = dict(metadata._MEMBERS_CACHE)
+    try:
+        cube, svc = define(with_segment=True)
+        assert hier in hierarchies(
+            metadata.cached_members_df(spark, cube, sf_dir))
+        assert svc.get_members("MEMO_PROBE", "Dim Customer", hier,
+                               "Segmento")["total"] > 0
+
+        cube, svc = define(with_segment=False)
+        assert hier not in hierarchies(
+            metadata.cached_members_df(spark, cube, sf_dir))
+        assert svc.get_members("MEMO_PROBE", "Dim Customer", hier,
+                               "Segmento")["total"] == 0
+    finally:
+        for key in set(metadata._MEMBERS_CACHE) - set(before):
+            metadata._MEMBERS_CACHE.pop(key).unpersist()
+
+
 def test_members_cache_miss_is_single_flight(spark, sf_dir, tmp_path,
                                              monkeypatch):
     """Two threads missing the same (cube, sf_dir) build and spill the
@@ -201,7 +246,7 @@ def test_members_cache_miss_is_single_flight(spark, sf_dir, tmp_path,
 
     from olap_xtrctr_spark import metadata
     cube = sales_cube()
-    key = (cube.name, sf_dir)
+    key = metadata._members_key(cube, sf_dir)
     builds = []
     build = metadata.members_df
 

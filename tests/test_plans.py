@@ -761,19 +761,45 @@ def test_dim_hint_gate_denies_grown_bridge_view(spark, sf_dir, monkeypatch):
         "VENTAS_2025", measures=["Sum Extendedprice"],
         rows=[AxisItem("Dim Customer", "Geografía", level="Nation")])
 
-    monkeypatch.setenv("SPARK_GRAFT_DIM_HINT_MAX_BYTES", "64")
-    Q._DIM_HINT_GATE.clear()
+    gate = Q._hint_gate_bytes
+    monkeypatch.setattr(Q, "_hint_gate_bytes", lambda spark: 64)
     denied = _plan(eng.execute(req))
     assert "SortMergeJoin" in denied            # fact⋈view pinned to SMJ
     assert not _broadcast_ancestors(denied, "lineitem")
     assert not _broadcast_ancestors(denied, "customer")
 
-    monkeypatch.delenv("SPARK_GRAFT_DIM_HINT_MAX_BYTES")
-    Q._DIM_HINT_GATE.clear()
+    monkeypatch.setattr(Q, "_hint_gate_bytes", gate)
     allowed = _plan(eng.execute(req))
     assert "SortMergeJoin" not in allowed       # r13 shape intact
     assert _broadcast_ancestors(allowed, "customer")
     assert not _broadcast_ancestors(allowed, "lineitem")
+
+
+def test_dim_hint_gate_follows_session_threshold(spark, sf_dir):
+    """The gate compares the memoized leaf-scan bytes with the LIVE
+    autoBroadcastJoinThreshold: changing the threshold mid-session
+    flips the fact⋈view join between broadcast and sort-merge with no
+    memo cleared (a memoized allow/deny decision kept the old plan)."""
+    eng = CubeQueryEngine(spark, default_registry(), sf_dir)
+    req = QueryRequest(
+        "VENTAS_2025", measures=["Sum Extendedprice"],
+        rows=[AxisItem("Dim Customer", "Geografía", level="Nation")])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        allowed = _plan(eng.execute(req))
+        assert "SortMergeJoin" not in allowed
+        assert _broadcast_ancestors(allowed, "customer")
+        spark.conf.set(key, "64")
+        denied = _plan(eng.execute(req))
+        assert "SortMergeJoin" in denied
+        assert not _broadcast_ancestors(denied, "customer")
+        spark.conf.set(key, old)
+        again = _plan(eng.execute(req))
+        assert "SortMergeJoin" not in again
+        assert _broadcast_ancestors(again, "customer")
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_simhash_signature_zero_exchange_kernel(spark, sf_dir):

@@ -203,7 +203,7 @@ def test_members_cache_evicts_stale_fingerprints(spark, sf_dir):
         json.dump({"old": 1}, f)
 
     # force a rebuild through the disk-cache write path
-    metadata._MEMBERS_CACHE.pop((cube.name, sf_dir), None)
+    metadata._MEMBERS_CACHE.pop(metadata._members_key(cube, sf_dir), None)
     shutil.rmtree(current, ignore_errors=True)
     metadata.cached_members_df(spark, cube, sf_dir)
 
