@@ -163,11 +163,14 @@ def build_parser() -> argparse.ArgumentParser:
     g.add_argument("--semantic", dest="mode", action="store_const",
                    const="semantic",
                    help="embedding-space survivors (frozen-cell "
-                        "SemDeDup over a vector table; defaults "
-                        "switch to --table embeddings / vec_id)")
+                        "SemDeDup over a vector table)")
     s.set_defaults(mode="soft")
-    s.add_argument("--table", default="documents")
-    s.add_argument("--id-col", default="doc_id")
+    s.add_argument("--table", default=None,
+                   help="registered table (default by mode: documents, "
+                        "or embeddings for --semantic)")
+    s.add_argument("--id-col", default=None,
+                   help="id column (default by mode: doc_id, or vec_id "
+                        "for --semantic)")
     s.add_argument("--max-dist", type=int, default=20,
                    help="Levenshtein threshold over the prefix")
     s.add_argument("--prefix-chars", type=int, default=80)
@@ -242,6 +245,28 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _emit(df, out: dict, export, limit=None) -> dict:
+    """Write ``--export`` (.json envelope, else one CSV file) and, when
+    the command has a ``--limit``, add the first ``limit`` rows as
+    ``preview``/``truncated`` (or ``n_rows`` for a limit of 0)."""
+    if export:
+        from .sinks import write_csv, write_json
+        if export.endswith(".json"):
+            write_json(df, export)
+        else:
+            write_csv(df, export, single_file=True)
+        out["exported_to"] = export
+    if limit is None:
+        return out
+    if limit > 0:
+        rows = df.limit(limit + 1).collect()
+        out["preview"] = [r.asDict() for r in rows[:limit]]
+        out["truncated"] = len(rows) > limit
+    else:
+        out["n_rows"] = df.count()
+    return out
+
+
 def run(args, service=None) -> dict:
     """Dispatch one command; ``service`` injectable for tests."""
     if service is None:
@@ -277,13 +302,8 @@ def run(args, service=None) -> dict:
                                   preview=args.preview)
         if args.export:
             from .mdx import parse_mdx
-            from .sinks import write_csv, write_json
-            df = service.engine.execute(parse_mdx(args.mdx, args.catalog))
-            if args.export.endswith(".json"):
-                write_json(df, args.export)
-            else:
-                write_csv(df, args.export, single_file=True)
-            res["exported_to"] = args.export
+            _emit(service.engine.execute(parse_mdx(args.mdx, args.catalog)),
+                  res, args.export)
         return res
     if args.cmd == "explain":
         from .mdx import parse_mdx
@@ -297,87 +317,25 @@ def run(args, service=None) -> dict:
         serve(service, host=args.host, port=args.port)   # blocks
         return {"status": "stopped"}
     if args.cmd == "dedup":
-        from .operators.dedup import dedup_frame
-        from .session import TABLES, load_table
-        semantic = args.mode == "semantic"
-        # semantic mode operates on a vector table: unless the caller
-        # overrode them, the defaults switch from documents/doc_id
-        table = args.table
-        id_col = args.id_col
-        if semantic and table == "documents" and id_col == "doc_id":
-            table, id_col = "embeddings", "vec_id"
-        if table not in TABLES:
-            raise SystemExit(f"unknown table {table!r} "
-                             f"(one of {sorted(TABLES)})")
-        docs = load_table(service.spark, service.sf_dir, table)
-        if semantic:
-            df = dedup_frame(docs, "semantic", id_col=id_col,
-                             threshold=args.threshold)
-        else:
-            df = dedup_frame(docs, args.mode, id_col=id_col,
-                             max_dist=args.max_dist,
-                             prefix_chars=args.prefix_chars,
-                             block_width=args.block_width)
-        out = {"mode": args.mode, "table": table,
-               "columns": df.columns}
-        if args.export:
-            from .sinks import write_csv, write_json
-            if args.export.endswith(".json"):
-                write_json(df, args.export)
-            else:
-                write_csv(df, args.export, single_file=True)
-            out["exported_to"] = args.export
-        if args.limit > 0:
-            rows = df.limit(args.limit + 1).collect()
-            out["preview"] = [r.asDict() for r in rows[:args.limit]]
-            out["truncated"] = len(rows) > args.limit
-        else:
-            out["n_rows"] = df.count()
-        return out
+        try:
+            table, df = service.dedup(
+                args.mode, args.table, args.id_col, max_dist=args.max_dist,
+                prefix_chars=args.prefix_chars,
+                block_width=args.block_width, threshold=args.threshold)
+        except ValueError as exc:
+            raise SystemExit(str(exc))
+        return _emit(df, {"mode": args.mode, "table": table,
+                          "columns": df.columns}, args.export, args.limit)
     if args.cmd == "sources":
-        from pyspark.sql import functions as F
-        from .session import load_table
-        if args.mode in ("rank", "audit"):
-            if not 1 <= args.iters <= 20:
-                raise SystemExit("--iters must be in 1..20 (iterations "
-                                 "are unrolled into the plan)")
-            if not 0 <= args.damping_pct <= 100:
-                raise SystemExit("--damping-pct must be in 0..100")
-            if args.mode == "audit" and args.top_seeds < 1:
-                raise SystemExit("--top-seeds must be >= 1")
-            from .operators import graph as G
-            docs = load_table(service.spark, service.sf_dir, "documents")
-            edges = G.shared_shingle_group_edges(
-                docs, n=args.ngram, max_groups=args.max_groups)
-            nodes = docs.select(F.col("source").alias("node")).distinct()
-            seeds = (G.contamination_seed_sources(docs,
-                                                  top_k=args.top_seeds)
-                     if args.mode == "audit" else None)
-            df = (G.weighted_pagerank(edges, nodes, iters=args.iters,
-                                      damping_pct=args.damping_pct,
-                                      teleport=seeds)
-                  .select(F.col("node").alias("source"), "pr_ppb")
-                  .orderBy(F.desc("pr_ppb"), "source"))
-        else:
-            from .operators import similarity as S
-            docs = load_table(service.spark, service.sf_dir, "documents")
-            emb = load_table(service.spark, service.sf_dir, "embeddings")
-            df = S.source_dim_drift(emb, docs, k=args.top_dims)
-        out = {"mode": args.mode, "columns": df.columns}
-        if args.export:
-            from .sinks import write_csv, write_json
-            if args.export.endswith(".json"):
-                write_json(df, args.export)
-            else:
-                write_csv(df, args.export, single_file=True)
-            out["exported_to"] = args.export
-        if args.limit > 0:
-            rows = df.limit(args.limit + 1).collect()
-            out["preview"] = [r.asDict() for r in rows[:args.limit]]
-            out["truncated"] = len(rows) > args.limit
-        else:
-            out["n_rows"] = df.count()
-        return out
+        try:
+            df = service.sources(
+                args.mode, ngram=args.ngram, max_groups=args.max_groups,
+                iters=args.iters, damping_pct=args.damping_pct,
+                top_dims=args.top_dims, top_seeds=args.top_seeds)
+        except ValueError as exc:
+            raise SystemExit(str(exc))
+        return _emit(df, {"mode": args.mode, "columns": df.columns},
+                     args.export, args.limit)
     if args.cmd == "workload":
         from .workload import WORKLOAD
         if args.list or not args.name:
@@ -391,99 +349,51 @@ def run(args, service=None) -> dict:
         if args.audit:
             from .plans import audit
             out["plan_audit"] = audit(df)
-        if args.export:
-            from .sinks import write_csv, write_json
-            if args.export.endswith(".json"):
-                write_json(df, args.export)
-            else:
-                write_csv(df, args.export, single_file=True)
-            out["exported_to"] = args.export
-        if args.limit > 0:
-            rows = df.limit(args.limit + 1).collect()
-            out["preview"] = [r.asDict() for r in rows[:args.limit]]
-            out["truncated"] = len(rows) > args.limit
-        else:
-            out["n_rows"] = df.count()
-        return out
+        return _emit(df, out, args.export, args.limit)
     if args.cmd == "maintain":
         from .sources import maintenance as MT
         from .sources import shards as SH
         spark = service.spark
-        if args.op == "ivf-build":
-            from .operators.similarity import ivf_build_index
+        if args.op in ("ivf-build", "ivfpq-build"):
+            from .operators import similarity as S
             if not args.dst:
-                raise SystemExit("--dst (index dir) required for "
-                                 "ivf-build")
-            return ivf_build_index(spark.read.parquet(args.src),
-                                   args.dst,
-                                   n_clusters=args.n_clusters)
-        if args.op == "ivf-query":
-            import json
-            import os
-
+                raise SystemExit(f"--dst (index dir) required for "
+                                 f"{args.op}")
+            emb = spark.read.parquet(args.src)
+            if args.op == "ivf-build":
+                return S.ivf_build_index(emb, args.dst,
+                                         n_clusters=args.n_clusters)
+            return S.ivfpq_build_index(emb, args.dst)
+        if args.op in ("ivf-query", "ivfpq-query"):
             from pyspark.sql import functions as F
 
-            from .operators.similarity import ivf_query_index
+            from .operators import similarity as S
             if not args.queries:
-                raise SystemExit("--queries (parquet of query vectors) "
-                                 "required for ivf-query")
+                raise SystemExit(f"--queries (parquet of query vectors) "
+                                 f"required for {args.op}")
             try:
-                with open(os.path.join(args.src, "_INDEX_META.json"),
-                          encoding="utf-8") as f:
-                    meta = json.load(f)
+                meta = S.read_index_meta(args.src)
             except (OSError, ValueError):
-                raise SystemExit(f"no index at {args.src!r} "
-                                 f"(run --op ivf-build first)")
+                raise SystemExit(f"no index at {args.src!r} (run --op "
+                                 f"{args.op.replace('query', 'build')} "
+                                 f"first)")
             q = spark.read.parquet(args.queries)
             if args.query_ids:
                 q = q.filter(F.col(meta["id_col"]).isin(args.query_ids))
-            df = ivf_query_index(spark, args.src, q, k=args.k,
-                                 n_probe=args.n_probe,
-                                 id_col=meta["id_col"],
-                                 vec_col=meta["vec_col"])
-            return {"columns": df.columns,
-                    "rows": [r.asDict() for r in df.collect()]}
-        if args.op == "ivfpq-build":
-            from .operators.similarity import ivfpq_build_index
-            if not args.dst:
-                raise SystemExit("--dst (index dir) required for "
-                                 "ivfpq-build")
-            return ivfpq_build_index(spark.read.parquet(args.src),
-                                     args.dst)
-        if args.op == "ivfpq-query":
-            import json
-            import os
-
-            from pyspark.sql import functions as F
-
-            from .operators.similarity import ivfpq_query_index
-            if not args.queries:
-                raise SystemExit("--queries (parquet of query vectors) "
-                                 "required for ivfpq-query")
-            try:
-                with open(os.path.join(args.src, "_INDEX_META.json"),
-                          encoding="utf-8") as f:
-                    meta = json.load(f)
-            except (OSError, ValueError):
-                raise SystemExit(f"no index at {args.src!r} "
-                                 f"(run --op ivfpq-build first)")
-            q = spark.read.parquet(args.queries)
-            if args.query_ids:
-                q = q.filter(F.col(meta["id_col"]).isin(args.query_ids))
-            # --refine re-ranks against the FULL corpus: --corpus if
-            # given, else --queries (documented fallback — the
-            # re-rank raises on any shortlist neighbor missing from
-            # it, so a queries-only table fails loudly instead of
-            # silently truncating the top-k; ADVICE r12).
-            refine_with = None
-            if args.refine:
-                refine_with = (spark.read.parquet(args.corpus)
-                               if args.corpus else
-                               spark.read.parquet(args.queries))
-            df = ivfpq_query_index(
-                spark, args.src, q, k=args.k, n_probe=args.n_probe,
-                id_col=meta["id_col"], vec_col=meta["vec_col"],
-                refine_with=refine_with)
+            kw = dict(k=args.k, n_probe=args.n_probe,
+                      id_col=meta["id_col"], vec_col=meta["vec_col"])
+            if args.op == "ivf-query":
+                df = S.ivf_query_index(spark, args.src, q, **kw)
+            else:
+                # --refine re-ranks against the FULL corpus: --corpus
+                # if given, else --queries (the re-rank raises on any
+                # shortlist neighbor missing from it, so a queries-only
+                # table fails loudly instead of truncating the top-k)
+                refine_with = (spark.read.parquet(args.corpus
+                                                  or args.queries)
+                               if args.refine else None)
+                df = S.ivfpq_query_index(spark, args.src, q,
+                                         refine_with=refine_with, **kw)
             return {"columns": df.columns,
                     "rows": [r.asDict() for r in df.collect()]}
         if args.op == "verify-shards":

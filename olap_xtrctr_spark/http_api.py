@@ -331,8 +331,7 @@ def _index_request(body: dict[str, Any], kind: str, query: bool):
     dir once the name is bare and the table registered; a query gets
     (dir, meta, ids) once the index is built and ``query_ids`` are
     valid.  A failed check raises the route's 400/404 reply."""
-    import os
-
+    from .operators.similarity import read_index_meta
     from .session import TABLES
     d = _index_dir(body.get("name", ""))
     if d is None:
@@ -346,9 +345,7 @@ def _index_request(body: dict[str, Any], kind: str, query: bool):
                               f"(one of {sorted(TABLES)})")
         return d
     try:
-        with open(os.path.join(d, "_INDEX_META.json"),
-                  encoding="utf-8") as f:
-            meta = json.load(f)
+        meta = read_index_meta(d)
     except (OSError, ValueError):
         raise _Reply(404, f"index {body.get('name')!r} not built "
                           f"(POST /api/index/{kind}/build first)")
@@ -441,110 +438,56 @@ def _ivfpq_query(service, m, qs, body):
                  "columns": df.columns, "rows": rows}
 
 
-@ROUTES.add("POST", r"/api/dedup")
-def _dedup(service, m, qs, body):
-    """Near-duplicate analysis over a registered table (VERDICT r11
-    task 5 — the soft-dedup/CC pipeline behind docs_softdedup_weights,
-    driven through the service façade like ivf-build/ivf-query).
-    Body: {"mode": "soft"|"groups"|"keep", "table": ..., "max_dist":
-    ..., "prefix_chars": ..., "block_width": ..., "limit": ...}."""
-    from .operators.dedup import dedup_frame
-    from .session import TABLES, load_table
-    mode = body.get("mode", "soft")
-    if mode not in ("soft", "groups", "keep", "semantic"):
-        return 400, {"detail": f"mode must be soft|groups|keep|"
-                               f"semantic, got {mode!r}"}
-    semantic = mode == "semantic"
-    table = body.get("table", "embeddings" if semantic else "documents")
-    if table not in TABLES:
-        return 400, {"detail": f"unknown table {table!r} "
-                               f"(one of {sorted(TABLES)})"}
+def _analysis_knobs(body: dict[str, Any], ints: tuple[str, ...],
+                    floats: tuple[str, ...] = ()):
+    """The numeric knobs a corpus-analysis body names, coerced (the
+    service owns their defaults), and the row ``limit`` (default 100,
+    1..10000).  A bad value raises the route's 400 reply."""
     try:
-        max_dist = int(body.get("max_dist", 20))
-        prefix_chars = int(body.get("prefix_chars", 80))
-        block_width = int(body.get("block_width", 100))
-        # 0.995 = near-duplicate semantics, matching the trained
-        # SemDeDup twin's default (ADVICE r12: the 0.45 it used to
-        # inherit drops far more aggressively than "near-dup" implies)
-        threshold = float(body.get("threshold", 0.995))
+        knobs = {k: int(body[k]) for k in ints if k in body}
+        knobs.update({k: float(body[k]) for k in floats if k in body})
         limit = int(body.get("limit", 100))
     except (TypeError, ValueError):
-        return 400, {"detail": "max_dist/prefix_chars/block_width/"
-                               "limit must be integers (threshold: "
-                               "float)"}
+        raise _Reply(400, "/".join((*ints, "limit")) + " must be integers"
+                     + "".join(f" ({k}: float)" for k in floats))
     if not (0 < limit <= 10_000):
-        return 400, {"detail": "limit must be in 1..10000"}
-    docs = load_table(service.spark, service.sf_dir, table)
-    id_col = body.get("id_col", "vec_id" if semantic else "doc_id")
-    if semantic:
-        df = dedup_frame(docs, "semantic", id_col=id_col,
-                         threshold=threshold)
-    else:
-        df = dedup_frame(docs, mode, id_col=id_col,
-                         max_dist=max_dist, prefix_chars=prefix_chars,
-                         block_width=block_width)
+        raise _Reply(400, "limit must be in 1..10000")
+    return knobs, limit
+
+
+def _rows_page(df, limit: int) -> dict[str, Any]:
     rows = [r.asDict() for r in df.limit(limit + 1).collect()]
-    return 200, {"mode": mode, "table": table, "columns": df.columns,
-                 "rows": rows[:limit], "truncated": len(rows) > limit}
+    return {"columns": df.columns, "rows": rows[:limit],
+            "truncated": len(rows) > limit}
+
+
+@ROUTES.add("POST", r"/api/dedup")
+def _dedup(service, m, qs, body):
+    """Near-duplicate analysis over a registered table
+    (``OlapService.dedup``).  Body: {"mode": "soft"|"groups"|"keep"|
+    "semantic", "table": ..., "id_col": ..., "max_dist": ...,
+    "prefix_chars": ..., "block_width": ..., "threshold": ...,
+    "limit": ...}."""
+    knobs, limit = _analysis_knobs(
+        body, ("max_dist", "prefix_chars", "block_width"), ("threshold",))
+    mode = body.get("mode", "soft")
+    table, df = service.dedup(mode, body.get("table"), body.get("id_col"),
+                              **knobs)
+    return 200, {"mode": mode, "table": table, **_rows_page(df, limit)}
 
 
 @ROUTES.add("POST", r"/api/sources")
 def _sources(service, m, qs, body):
-    """Source/domain governance over the registered corpus (round 13):
-    mode "rank" = weighted PageRank over the shared-shingle source
-    graph (exact integer fixed-point, iterations plan-unrolled); mode
-    "drift" = top drifted embedding dimensions per source vs the
-    global centroid.  Body: {"mode": "rank"|"drift", "ngram": ...,
-    "max_groups": ..., "iters": ..., "damping_pct": ...,
-    "top_dims": ..., "limit": ...}."""
-    from pyspark.sql import functions as F
-
-    from .session import load_table
+    """Source/domain governance over the registered corpus
+    (``OlapService.sources``).  Body: {"mode": "rank"|"drift"|"audit",
+    "ngram": ..., "max_groups": ..., "iters": ..., "damping_pct": ...,
+    "top_dims": ..., "top_seeds": ..., "limit": ...}."""
+    knobs, limit = _analysis_knobs(
+        body, ("ngram", "max_groups", "iters", "damping_pct", "top_dims",
+               "top_seeds"))
     mode = body.get("mode", "rank")
-    if mode not in ("rank", "drift", "audit"):
-        return 400, {"detail": f"mode must be rank|drift|audit, "
-                               f"got {mode!r}"}
-    try:
-        ngram = int(body.get("ngram", 3))
-        max_groups = int(body.get("max_groups", 8))
-        iters = int(body.get("iters", 5))
-        damping_pct = int(body.get("damping_pct", 85))
-        top_dims = int(body.get("top_dims", 5))
-        top_seeds = int(body.get("top_seeds", 5))
-        limit = int(body.get("limit", 100))
-    except (TypeError, ValueError):
-        return 400, {"detail": "ngram/max_groups/iters/damping_pct/"
-                               "top_dims/top_seeds/limit must be "
-                               "integers"}
-    if not (0 < limit <= 10_000):
-        return 400, {"detail": "limit must be in 1..10000"}
-    if not 1 <= iters <= 20:
-        return 400, {"detail": "iters must be in 1..20 (iterations "
-                               "are unrolled into the plan)"}
-    if not 0 <= damping_pct <= 100:
-        return 400, {"detail": "damping_pct must be in 0..100"}
-    if mode == "audit" and top_seeds < 1:
-        return 400, {"detail": "top_seeds must be >= 1"}
-    docs = load_table(service.spark, service.sf_dir, "documents")
-    if mode in ("rank", "audit"):
-        from .operators import graph as G
-        edges = G.shared_shingle_group_edges(docs, n=ngram,
-                                             max_groups=max_groups)
-        nodes = docs.select(F.col("source").alias("node")).distinct()
-        seeds = (G.contamination_seed_sources(docs, top_k=top_seeds)
-                 if mode == "audit" else None)
-        df = (G.weighted_pagerank(edges, nodes, iters=iters,
-                                  damping_pct=damping_pct,
-                                  teleport=seeds)
-              .select(F.col("node").alias("source"), "pr_ppb")
-              .orderBy(F.desc("pr_ppb"), "source"))
-    else:
-        from .operators import similarity as S
-        emb = load_table(service.spark, service.sf_dir, "embeddings")
-        df = S.source_dim_drift(emb, docs, k=top_dims)
-    rows = [r.asDict() for r in df.limit(limit + 1).collect()]
-    return 200, {"mode": mode, "columns": df.columns,
-                 "rows": rows[:limit], "truncated": len(rows) > limit}
+    df = service.sources(mode, **knobs)
+    return 200, {"mode": mode, **_rows_page(df, limit)}
 
 
 @ROUTES.add("POST", r"/api/jobs")

@@ -1187,6 +1187,80 @@ def random_projection(emb: DataFrame, out_dims: int = 16,
 # set; verified by tests/test_plans.py).  Build is idempotent via a
 # meta marker keyed to (n_clusters, seed, corpus count).
 
+INDEX_META = "_INDEX_META.json"
+
+
+def read_index_meta(index_dir: str) -> dict:
+    """A persisted index's meta marker, the build's commit point.
+    Raises OSError when the index was never built (or a rebuild is
+    under way) and ValueError when the marker is torn."""
+    import json
+    import os
+
+    with open(os.path.join(index_dir, INDEX_META), encoding="utf-8") as f:
+        meta = json.load(f)
+    if not isinstance(meta, dict):
+        raise ValueError(f"{INDEX_META} in {index_dir!r} is not an object")
+    return meta
+
+
+def _corpus_signature(emb: DataFrame) -> tuple[int, str]:
+    """(row count, content signature) of an index corpus.  The
+    signature hashes the source files' (path, size, mtime) triples, so
+    a REGENERATED corpus with the same row count never serves a stale
+    index; in-memory inputs (no files) sign as the row count alone."""
+    import hashlib
+    import os
+
+    parts = []
+    for p in sorted(emb.inputFiles()):
+        local = p[len("file:"):] if p.startswith("file:") else p
+        try:
+            st = os.stat(local)
+            parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
+        except OSError:
+            parts.append(p)               # remote FS: path-only term
+    return (emb.count(),
+            hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16])
+
+
+def _index_is_current(index_dir: str, meta: dict,
+                      data_dirs: tuple[str, ...]) -> bool:
+    """True when the built index already carries ``meta`` (an
+    idempotent rebuild).  Otherwise invalidate it for a rebuild: drop
+    the marker FIRST (a crash mid-build can never serve a half-written
+    index), then the old data trees whole — mode("overwrite") under
+    dynamic partitionOverwriteMode only replaces the partitions the new
+    build writes, so a rebuild with FEWER cells would leave stale
+    partition directories for the query to read."""
+    import os
+    import shutil
+
+    try:
+        if read_index_meta(index_dir) == meta:
+            return True
+    except (OSError, ValueError):
+        pass
+    for name in (INDEX_META, *data_dirs):
+        stale = os.path.join(index_dir, name)
+        if os.path.isdir(stale):
+            shutil.rmtree(stale, ignore_errors=True)
+        elif os.path.exists(stale):
+            os.remove(stale)
+    return False
+
+
+def _commit_index(index_dir: str, meta: dict) -> dict:
+    import json
+    import os
+
+    os.makedirs(index_dir, exist_ok=True)
+    with open(os.path.join(index_dir, INDEX_META), "w",
+              encoding="utf-8") as f:
+        json.dump(meta, f)                # marker LAST: commit point
+    return meta
+
+
 def ivf_build_index(emb: DataFrame, index_dir: str, n_clusters: int = 8,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     seed: int = 42) -> dict:
@@ -1194,52 +1268,18 @@ def ivf_build_index(emb: DataFrame, index_dir: str, n_clusters: int = 8,
     ``centroids.parquet`` (bucket, center) and ``assignments.parquet``
     partitioned by ``bucket``.  Returns the meta dict.  Re-building
     over an unchanged corpus signature is a no-op."""
-    import hashlib
-    import json
     import os
-    import shutil
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    # corpus content signature: the source files' (path, size, mtime)
-    # triples — a REGENERATED corpus with the same row count must not
-    # serve a stale index (ADVICE r10).  In-memory inputs (no files)
-    # sign as the row count alone, the pre-r11 behavior.
-    sig_parts = []
-    for p in sorted(emb.inputFiles()):
-        local = p[len("file:"):] if p.startswith("file:") else p
-        try:
-            st = os.stat(local)
-            sig_parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
-        except OSError:
-            sig_parts.append(p)           # remote FS: path-only term
-    n = emb.count()
-    corpus_sig = hashlib.sha256(
-        "\n".join(sig_parts).encode()).hexdigest()[:16]
+    n, corpus_sig = _corpus_signature(emb)
     meta = {"n_clusters": n_clusters, "seed": seed, "n_vectors": n,
             "corpus_sig": corpus_sig,
             "id_col": id_col, "vec_col": vec_col, "version": 2}
-    meta_path = os.path.join(index_dir, "_INDEX_META.json")
-    try:
-        with open(meta_path, encoding="utf-8") as f:
-            if json.load(f) == meta:
-                return meta               # idempotent rebuild
-    except (OSError, ValueError):
-        pass
-    # Invalidate-then-rebuild: drop the marker FIRST (a crash mid-build
-    # can never serve a half-written index), then delete the old
-    # assignments tree — mode("overwrite") under dynamic
-    # partitionOverwriteMode only replaces partitions the new build
-    # writes, so a rebuild with FEWER clusters would leave stale
-    # bucket=K directories for ivf_query_index to read (ADVICE r10).
-    for stale in (meta_path,
-                  os.path.join(index_dir, "assignments.parquet"),
-                  os.path.join(index_dir, "centroids.parquet")):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        elif os.path.exists(stale):
-            os.remove(stale)
+    if _index_is_current(index_dir, meta,
+                         ("assignments.parquet", "centroids.parquet")):
+        return meta
     feats = emb.select(
         F.col(id_col), F.col(vec_col),
         array_to_vector(F.col(vec_col).cast("array<double>"))
@@ -1258,10 +1298,7 @@ def ivf_build_index(emb: DataFrame, index_dir: str, n_clusters: int = 8,
                   F.col("prediction").alias("bucket"))
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(os.path.join(index_dir, "assignments.parquet")))
-    os.makedirs(index_dir, exist_ok=True)
-    with open(meta_path, "w", encoding="utf-8") as f:
-        json.dump(meta, f)                # marker LAST: commit point
-    return meta
+    return _commit_index(index_dir, meta)
 
 
 def ivf_query_index(spark, index_dir: str, queries: DataFrame,
@@ -1869,43 +1906,18 @@ def ivfpq_build_index(emb: DataFrame, index_dir: str,
     (corpus signature, codebook signature) meta marker as
     ivf_build_index; a retrained frozen codebook or regenerated corpus
     forces a rebuild."""
-    import hashlib
-    import json
     import os
-    import shutil
 
     from . import frozen_codebooks as FC
 
-    sig_parts = []
-    for p in sorted(emb.inputFiles()):
-        local = p[len("file:"):] if p.startswith("file:") else p
-        try:
-            st = os.stat(local)
-            sig_parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
-        except OSError:
-            sig_parts.append(p)
-    n = emb.count()
-    corpus_sig = hashlib.sha256(
-        "\n".join(sig_parts).encode()).hexdigest()[:16]
+    n, corpus_sig = _corpus_signature(emb)
     meta = {"kind": "ivfpq-frozen", "n_vectors": n,
             "corpus_sig": corpus_sig,
             "codebook_sig": _frozen_codebook_sig(),
             "m": FC.PQ_M, "id_col": id_col, "vec_col": vec_col,
             "version": 1}
-    meta_path = os.path.join(index_dir, "_INDEX_META.json")
-    try:
-        with open(meta_path, encoding="utf-8") as f:
-            if json.load(f) == meta:
-                return meta               # idempotent rebuild
-    except (OSError, ValueError):
-        pass
-    # invalidate-then-rebuild: marker dropped FIRST, stale partition
-    # dirs removed whole (same ADVICE-r10 reasoning as ivf_build_index)
-    for stale in (meta_path, os.path.join(index_dir, "codes.parquet")):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        elif os.path.exists(stale):
-            os.remove(stale)
+    if _index_is_current(index_dir, meta, ("codes.parquet",)):
+        return meta
     # the same Arrow-batch assignment as the inline operator (VERDICT
     # r12 task 4); the persisted schema keeps one code_s column per
     # subspace — a cheap JVM projection off the struct
@@ -1918,10 +1930,7 @@ def ivfpq_build_index(emb: DataFrame, index_dir: str,
                        for s in range(FC.PQ_M)]))
     (coded.write.mode("overwrite").partitionBy("cell")
           .parquet(os.path.join(index_dir, "codes.parquet")))
-    os.makedirs(index_dir, exist_ok=True)
-    with open(meta_path, "w", encoding="utf-8") as f:
-        json.dump(meta, f)                # marker LAST: commit point
-    return meta
+    return _commit_index(index_dir, meta)
 
 
 def ivfpq_query_index(spark, index_dir: str, queries: DataFrame,
@@ -1939,14 +1948,11 @@ def ivfpq_query_index(spark, index_dir: str, queries: DataFrame,
     raw-vector table as ``refine_with`` to re-rank the k·refine
     shortlist with the exact cosine (the two-stage serving tail),
     which changes the output contract to (…, cosine)."""
-    import json
     import os
 
     from . import frozen_codebooks as FC
 
-    with open(os.path.join(index_dir, "_INDEX_META.json"),
-              encoding="utf-8") as f:
-        meta = json.load(f)
+    meta = read_index_meta(index_dir)
     if meta.get("codebook_sig") != _frozen_codebook_sig():
         raise ValueError(
             "ivfpq_query_index: the frozen codebooks changed since "

@@ -69,8 +69,10 @@ def _leaf_scan_bytes(view: DataFrame) -> int:
 
 def _hint_gate_bytes(spark) -> int:
     raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-                         "10485760")
-    if raw.isdigit():       # plain bytes: skip the JVM parser's py4j trips
+                         "10485760").strip()
+    # plain (signed) bytes skip the JVM parser's py4j trips; the parser
+    # also rejects the sign, so -1 (broadcast disabled) must stop here
+    if re.fullmatch(r"[+-]?\d+", raw):
         return int(raw)
     try:
         return int(spark._jvm.org.apache.spark.network.util.JavaUtils

@@ -1,7 +1,9 @@
 """Service façade mirroring the reference's API surface
 (backend/api_server.py:101-347, workers/api/src/routes/*): catalogs,
 cubes, measures, dimensions+hierarchies+levels, apartados, variables,
-members (paged + search), query execute (structured or raw MDX), jobs.
+members (paged + search), query execute (structured or raw MDX), jobs,
+plus the corpus analyses beyond the reference (near-dup, source
+governance) that the CLI and HTTP front-ends both call.
 
 Transport-agnostic: returns plain dicts/lists, ready for any HTTP layer.
 All responses go through the same result shaping as the reference
@@ -11,7 +13,7 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from . import members as M
 from . import metadata
@@ -202,6 +204,78 @@ class OlapService:
                                     jobs=self.jobs)
         df = execute_dmv(self.spark, sql, view_prefix=prefix)
         return to_json_result(df, limit=MEMBER_PAGE_SIZE, stringify=False)
+
+    # ---- corpus analysis ---------------------------------------------------
+
+    def dedup(self, mode: str, table: Optional[str] = None,
+              id_col: Optional[str] = None, *, max_dist: int = 20,
+              prefix_chars: int = 80, block_width: int = 100,
+              threshold: float = 0.995) -> tuple[str, DataFrame]:
+        """Near-duplicate analysis over a registered table: ``soft``
+        1/|group| training weights, ``groups`` transitive component
+        labels, ``keep`` canonical min-id survivors, ``semantic``
+        embedding-space survivors (frozen-cell SemDeDup; ``threshold``
+        0.995 = near-duplicates, the trained default).  ``table`` and
+        ``id_col`` default by mode: embeddings/vec_id for ``semantic``,
+        documents/doc_id otherwise.  Returns (table, frame); bad input
+        raises ValueError."""
+        from .operators.dedup import dedup_frame
+        from .session import TABLES, load_table
+        if mode not in ("soft", "groups", "keep", "semantic"):
+            raise ValueError(f"mode must be soft|groups|keep|semantic, "
+                             f"got {mode!r}")
+        semantic = mode == "semantic"
+        if table is None:
+            table = "embeddings" if semantic else "documents"
+        if id_col is None:
+            id_col = "vec_id" if semantic else "doc_id"
+        if table not in TABLES:
+            raise ValueError(f"unknown table {table!r} "
+                             f"(one of {sorted(TABLES)})")
+        knobs = ({"threshold": threshold} if semantic else
+                 {"max_dist": max_dist, "prefix_chars": prefix_chars,
+                  "block_width": block_width})
+        docs = load_table(self.spark, self.sf_dir, table)
+        return table, dedup_frame(docs, mode, id_col=id_col, **knobs)
+
+    def sources(self, mode: str, *, ngram: int = 3, max_groups: int = 8,
+                iters: int = 5, damping_pct: int = 85, top_dims: int = 5,
+                top_seeds: int = 5) -> DataFrame:
+        """Source/domain governance over the documents corpus: ``rank``
+        = weighted PageRank (exact integer fixed-point, ``iters``
+        unrolled into the plan) over the shared-shingle source graph,
+        ``audit`` = the same with teleport mass on the ``top_seeds``
+        most-contaminated sources, ``drift`` = the ``top_dims`` most
+        drifted embedding dimensions per source vs the global
+        centroid.  Bad input raises ValueError."""
+        from pyspark.sql import functions as F
+
+        from .session import load_table
+        if mode not in ("rank", "drift", "audit"):
+            raise ValueError(f"mode must be rank|drift|audit, got {mode!r}")
+        if not 1 <= iters <= 20:
+            raise ValueError("iters must be in 1..20 (iterations are "
+                             "unrolled into the plan)")
+        if not 0 <= damping_pct <= 100:
+            raise ValueError("damping_pct must be in 0..100")
+        if mode == "audit" and top_seeds < 1:
+            raise ValueError("top_seeds must be >= 1")
+        docs = load_table(self.spark, self.sf_dir, "documents")
+        if mode == "drift":
+            from .operators.similarity import source_dim_drift
+            emb = load_table(self.spark, self.sf_dir, "embeddings")
+            return source_dim_drift(emb, docs, k=top_dims)
+        from .operators import graph as G
+        edges = G.shared_shingle_group_edges(docs, n=ngram,
+                                             max_groups=max_groups)
+        nodes = docs.select(F.col("source").alias("node")).distinct()
+        seeds = (G.contamination_seed_sources(docs, top_k=top_seeds)
+                 if mode == "audit" else None)
+        return (G.weighted_pagerank(edges, nodes, iters=iters,
+                                    damping_pct=damping_pct,
+                                    teleport=seeds)
+                .select(F.col("node").alias("source"), "pr_ppb")
+                .orderBy(F.desc("pr_ppb"), "source"))
 
     # ---- jobs --------------------------------------------------------------
 

@@ -10,10 +10,10 @@ Cross-engine exactness strategy:
 * ranked outputs carry an explicit deterministic rank (ties broken by
   unique ids) instead of relying on row order.
 
-Round-6 structure: the entry builders live in per-family modules under
-``olap_xtrctr_spark/workloads/`` (cube, tpch, members_nav, docs_text,
-similarity, events — moved verbatim; VERDICT r5 item 8) with the
-shared helpers in ``workload_shared``.  This module keeps the public
+Structure: the entry builders live in per-family modules under
+``olap_xtrctr_spark/workloads/`` (cube, tpch_*, members_nav, docs_text,
+similarity_*, events_*, ...) with the shared helpers in
+``workload_shared``.  This module keeps the public
 surface: ``WORKLOAD``, ``build_workload``, the gate-window manifest,
 and compat re-exports.
 """
@@ -22,9 +22,11 @@ from __future__ import annotations
 from .workload_shared import (AVG_D, CATALOG, MES_CASE,  # noqa: F401
                               QuerySpec, SUM_D)
 from .workloads import (cube, curation, docs_segments,  # noqa: F401
-                        docs_text, events, members_nav, multimodal_real,
-                        similarity, tpch, wave9, wave10, wave11, wave12,
-                        wave13)
+                        docs_text, events_batch, events_joins,
+                        events_wave4, members_nav, multimodal_real,
+                        similarity_core, similarity_gates,
+                        similarity_misc, similarity_textpairs, tpch_a,
+                        tpch_b, wave9, wave10, wave11, wave12, wave13)
 
 # ---- driver gate-window manifest -----------------------------------------
 # The external correctness gate grades the FIRST _GATE_WINDOW entries of
@@ -135,14 +137,21 @@ def build_workload() -> dict[str, QuerySpec]:
     # docs_segments / multimodal_real (round-7 additions) register
     # last: existing build order stays byte-stable, new entries appear
     # past the legacy tail.
-    for mod in (cube, tpch, members_nav, docs_text, similarity, events,
-                docs_segments, multimodal_real, curation):
+    for mod in (cube, tpch_a, tpch_b, members_nav, docs_text,
+                similarity_core, similarity_gates, similarity_textpairs,
+                similarity_misc):
+        mod.register(add)
+    similarity_textpairs.register_r8(add)
+    for mod in (events_batch, events_joins, events_wave4):
+        mod.register(add)
+    events_wave4.register_r8(add)
+    for mod in (docs_segments, multimodal_real, curation):
         mod.register(add)
     curation.register_r8(add)     # round-8 additions append last
     docs_segments.register_r8(add)
     cube.register_r9(add)         # round-9 additions append after r8
     wave9.register(add)
-    similarity.similarity_textpairs.register_r10(add)  # round-10 tail
+    similarity_textpairs.register_r10(add)  # round-10 tail
     cube.register_r10(add)
     wave10.register(add)          # round-10 wave 2 (prefix family)
     wave11.register(add)          # round-11 (ADVICE-fix path pins)

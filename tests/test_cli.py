@@ -503,3 +503,14 @@ def test_cli_sources_rank_and_drift(svc, tmp_path):
     assert out["columns"] == ["source", "pr_ppb"] and out["n_rows"] == 20
     with pytest.raises(SystemExit):
         _run(svc, "sources", "--audit", "--top-seeds", "0")
+
+
+def test_cli_dedup_semantic_named_table_keeps_vector_id(svc):
+    """Naming the vector table leaves the id column to the mode's
+    default: ``--semantic --table embeddings`` keys on ``vec_id``,
+    exactly like bare ``--semantic``."""
+    named = _run(svc, "dedup", "--semantic", "--table", "embeddings",
+                 "--limit", "0")
+    assert named["table"] == "embeddings"
+    assert named["n_rows"] == _run(svc, "dedup", "--semantic",
+                                   "--limit", "0")["n_rows"]

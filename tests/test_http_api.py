@@ -604,3 +604,40 @@ def test_sources_route_rank_and_drift(base_url):
         with pytest.raises(urllib.error.HTTPError) as e:
             _post(base_url + "/api/sources", bad)
         assert e.value.code == 400, bad
+
+
+def test_cli_and_http_run_one_path(base_url, spark, sf_dir):
+    """dedup and sources answer the same rows through the CLI and over
+    HTTP, and a bad input gets the same text from both front-ends."""
+    from olap_xtrctr_spark.__main__ import build_parser, run
+    svc = OlapService(spark, sf_dir)
+
+    def cli(*argv):
+        return run(build_parser().parse_args(argv), service=svc)
+
+    def canon(rows):
+        return sorted(json.dumps(r, sort_keys=True, default=str)
+                      for r in json.loads(json.dumps(rows, default=str)))
+
+    for argv, body in ((["dedup", "--soft"], {"mode": "soft"}),
+                       (["dedup", "--semantic"], {"mode": "semantic"}),
+                       (["sources", "--rank"], {"mode": "rank"}),
+                       (["sources", "--drift"], {"mode": "drift"})):
+        out = cli(*argv, "--limit", "10000")
+        _, http = _post(f"{base_url}/api/{argv[0]}",
+                        {**body, "limit": 10000})
+        assert out["columns"] == http["columns"], argv
+        assert out.get("table") == http.get("table"), argv
+        assert not out["truncated"] and not http["truncated"]
+        assert http["rows"] and canon(out["preview"]) == canon(http["rows"])
+
+    for argv, body in ((["dedup", "--table", "nope"], {"table": "nope"}),
+                       (["sources", "--rank", "--iters", "0"],
+                        {"mode": "rank", "iters": 0})):
+        with pytest.raises(SystemExit) as cli_err:
+            cli(*argv)
+        with pytest.raises(urllib.error.HTTPError) as http_err:
+            _post(f"{base_url}/api/{argv[0]}", body)
+        assert http_err.value.code == 400
+        assert cli_err.value.code == json.loads(
+            http_err.value.read())["detail"]

@@ -802,6 +802,26 @@ def test_dim_hint_gate_follows_session_threshold(spark, sf_dir):
         spark.conf.set(key, old)
 
 
+def test_disabled_broadcast_threshold_denies_dim_hint(spark, sf_dir):
+    """``autoBroadcastJoinThreshold=-1`` switches broadcasting off for
+    the session, and the dim-view hint follows it: the fact⋈view join
+    of the flagship cube entry is a sort-merge join with neither side
+    broadcast.  (Inside the view, the constant-size region/nation
+    tables keep their explicit broadcast, as at any threshold.)"""
+    from olap_xtrctr_spark.workload import WORKLOAD
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        plan = _plan(WORKLOAD["cube_nation_sales"].fn(spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin [l_orderkey" in plan
+    assert not _broadcast_ancestors(plan, "lineitem")
+    assert not _broadcast_ancestors(plan, "orders")
+    assert not _broadcast_ancestors(plan, "customer")
+
+
 def test_simhash_signature_zero_exchange_kernel(spark, sf_dir):
     """r14 structural pin: the simhash signature (both hash families)
     is ONE rowwise projection — a MapInArrow stage over the pruned

@@ -2,6 +2,7 @@
 scripts that exist.  No Spark session is started here."""
 import py_compile
 import re
+import shlex
 import subprocess
 import sys
 from pathlib import Path
@@ -46,3 +47,36 @@ def test_docs_name_only_existing_scripts(doc):
     missing = sorted(n for n in named
                      if not (ROOT / "scripts" / f"{n}.py").exists())
     assert not missing, missing
+
+
+def _readme_cli_commands() -> list[list[str]]:
+    """Every ``python -m olap_xtrctr_spark ...`` command in README.md's
+    fenced code blocks as an argv list: ``\\`` continuations joined,
+    a trailing ``&``, a ``&& ...`` chain and a ``# ...`` comment
+    dropped."""
+    text = (ROOT / "README.md").read_text(encoding="utf-8")
+    prefix = "python -m olap_xtrctr_spark"
+    cmds = []
+    for block in re.findall(r"^```[^\n]*\n(.*?)^```", text, re.S | re.M):
+        for line in block.replace("\\\n", " ").splitlines():
+            for tail in line.split(prefix)[1:]:
+                argv = shlex.split(tail.split("&&")[0], comments=True)
+                if argv and argv[-1] == "&":
+                    argv.pop()
+                cmds.append(argv)
+    return cmds
+
+
+def test_readme_cli_examples_parse():
+    """The documented CLI flags stay in step with the parser."""
+    from olap_xtrctr_spark.__main__ import build_parser
+
+    cmds = _readme_cli_commands()
+    assert len(cmds) >= 20, cmds
+    bad = []
+    for argv in cmds:
+        try:
+            build_parser().parse_args(argv)
+        except SystemExit:
+            bad.append(" ".join(argv))
+    assert not bad, bad
