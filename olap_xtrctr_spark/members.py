@@ -5,11 +5,17 @@ Spark-native re-expression of the reference's pandas dataflow
 backend/olap_service.py:160-279).  Every operator is a declarative
 DataFrame expression — filters push down, nothing loops per member,
 and the only collects are bounded metadata (level maps).
+
+``MemberIndex`` is the serving twin of the N8-N16 operators: the same
+table held driver-local in Arrow, so a navigation request runs no
+Spark job.
 """
 from __future__ import annotations
 
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -272,3 +278,112 @@ def estimate_query_cardinality(members: DataFrame,
             & (F.col("NIVEL_NOMBRE") == level)).collect()
         est *= row[0]["n_members"] if row else 1
     return est
+
+
+# Driver-local index: N8-N16 without a Spark job ---------------------------
+
+INDEX_KEY = ("DIMENSION", "JERARQUIA", "NIVEL_NOMBRE", "MIEMBRO_CAPTION",
+             "MIEMBRO_UNIQUE_NAME")
+INDEX_COLUMNS = INDEX_KEY + ("PARENT_UNIQUE_NAME", "CHILDREN_CARDINALITY")
+_LEVEL = INDEX_KEY[:3]
+
+
+def _pylist(col: pa.ChunkedArray) -> list:
+    """Python values of ``col``.  Strings go through numpy: to_pylist
+    builds an Arrow scalar per value, about 30x slower."""
+    if pa.types.is_string(col.type):
+        return col.to_numpy().tolist()
+    return col.to_pylist()
+
+
+def _rows(table: pa.Table, columns: list[str]) -> list[dict]:
+    vals = [_pylist(table[c]) for c in columns]
+    return [dict(zip(columns, v)) for v in zip(*vals)]
+
+
+class MemberIndex:
+    """The members table as one Arrow table sorted by ``INDEX_KEY``,
+    with each level's row range — the reference's pandas navigation
+    over its cached members table (PAPER.md §0 item 2).  A page of
+    ``paginate_members`` is a slice and its total a subtraction;
+    ``search_members``, ``get_apartados`` and ``children_of`` keep
+    their filters and answer in key order, the reference's
+    ``ORDER BY caption``.  Rows whose caption is NULL or 'All' are
+    dropped, as ``!= 'All'`` drops them on every DataFrame path."""
+
+    def __init__(self, table: pa.Table):
+        table = table.select(list(INDEX_COLUMNS))
+        table = table.filter(pc.not_equal(table["MIEMBRO_CAPTION"], "All"))
+        order = pc.sort_indices(
+            table, sort_keys=[(c, "ascending") for c in INDEX_KEY],
+            null_placement="at_start")      # Spark's ascending order
+        self.table = table.take(order).combine_chunks()
+        # Python's str.upper folds as Java's upper() does ('ß' → 'SS',
+        # 'ﬁ' → 'FI'); pc.utf8_upper gives 'ẞ' and leaves 'ﬁ'
+        self._upper = pa.array(
+            [c.upper() for c in _pylist(self.table["MIEMBRO_CAPTION"])],
+            pa.string())
+        n = self.table.num_rows
+        starts = [0] if n else []
+        if n > 1:
+            # a level starts where any level column differs from the row
+            # before it
+            change = None
+            for c in _LEVEL:
+                col = self.table[c]
+                ne = pc.fill_null(
+                    pc.not_equal(col.slice(1), col.slice(0, n - 1)), True)
+                change = ne if change is None else pc.or_(change, ne)
+            starts += (pc.indices_nonzero(change).to_numpy() + 1).tolist()
+        keys = zip(*(_pylist(self.table[c].take(starts)) for c in _LEVEL))
+        self.levels = {k: (a, b) for k, a, b in
+                       zip(keys, starts, starts[1:] + [n])}
+
+    @classmethod
+    def read(cls, path: str) -> "MemberIndex":
+        """Index of a members parquet spill, read without Spark."""
+        import pyarrow.parquet as pq
+        return cls(pq.read_table(path, columns=list(INDEX_COLUMNS)))
+
+    def page(self, dimension: str, hierarchy: str, level: str,
+             limit: int, offset: int) -> tuple[list[dict], int]:
+        """``paginate_members`` rows (``offset < rn <= offset + limit``)
+        and the level's member count."""
+        start, stop = self.levels.get((dimension, hierarchy, level), (0, 0))
+        total = stop - start
+        lo, hi = max(offset, 0), min(offset + limit, total)
+        if hi <= lo:
+            return [], total
+        part = self.table.slice(start + lo, hi - lo)
+        return [{"rn": rn, "MIEMBRO_CAPTION": cap, "MIEMBRO_UNIQUE_NAME": name}
+                for rn, cap, name in zip(
+                    range(lo + 1, hi + 1),
+                    _pylist(part["MIEMBRO_CAPTION"]),
+                    _pylist(part["MIEMBRO_UNIQUE_NAME"]))], total
+
+    def search(self, term: str, dimension: str | None = None,
+               limit: int = 1000) -> list[dict]:
+        """``search_members``: the first ``limit`` hits in key order."""
+        hit = pc.match_substring(self._upper, term.upper())
+        if dimension is not None:
+            hit = pc.and_(hit, pc.equal(self.table["DIMENSION"], dimension))
+        rows = pc.indices_nonzero(hit)[:limit]
+        return _rows(self.table.take(rows), list(INDEX_KEY))
+
+    def apartados(self) -> list[dict]:
+        """``get_apartados`` by the level column, in key order."""
+        out: list[dict] = []
+        for (_dim, hier, level), (a, b) in self.levels.items():
+            if level == "Apartado" and "APARTADO" in (hier or "").upper():
+                out += _rows(self.table.slice(a, b - a),
+                             ["MIEMBRO_CAPTION", "MIEMBRO_UNIQUE_NAME",
+                              "CHILDREN_CARDINALITY"])
+        return out
+
+    def children(self, parent_unique_names: list[str]) -> list[dict]:
+        """``children_of`` by exact parent, in key order."""
+        hit = pc.is_in(self.table["PARENT_UNIQUE_NAME"],
+                       value_set=pa.array(parent_unique_names, pa.string()))
+        return _rows(self.table.filter(hit),
+                     ["MIEMBRO_CAPTION", "MIEMBRO_UNIQUE_NAME",
+                      "PARENT_UNIQUE_NAME"])

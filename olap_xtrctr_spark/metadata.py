@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from . import naming
 from .cube import CubeDef, CubeRegistry, Dimension, Hierarchy
+from .members import MemberIndex
 from .session import load_table
 
 MEMBER_COLS = [
@@ -177,11 +178,13 @@ def members_df(spark: SparkSession, cube: CubeDef, sf_dir: str,
 # and version-suffixed invalidation, scanner/DGIS_SCAN_2_stable.py:686-705,
 # backend/DGIS_SCAN_2.py:700-702).  The members table is bounded metadata
 # (~1.7M rows at reference scale), read by every navigation call:
-#   tier 1 — in-process memo + .persist()
+#   tier 1 — in-process memo + .persist(), and the spill's driver-local
+#            MemberIndex the service's navigation calls answer from
 #   tier 2 — parquet spill under the warehouse
 # Both tiers are keyed by a fingerprint of the cube's hierarchy structure
 # (stale definitions can never serve: a changed cube changes the key).
 _MEMBERS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_MEMBER_INDEX: dict[tuple[str, str, str], MemberIndex] = {}
 _MEMBERS_LOCK = threading.Lock()
 
 
@@ -250,7 +253,8 @@ def cached_members_df(spark: SparkSession, cube: CubeDef,
     and spill once (two overwriting writers would each read files the
     other deletes); a hit takes no lock.  The key carries the cube's
     fingerprint, so a cube redefined under the same name never serves
-    the old members."""
+    the old members.  The miss also loads the spill's MemberIndex, and
+    stores it before the frame, so a hit always finds both."""
     key = _members_key(cube, sf_dir)
     df = _MEMBERS_CACHE.get(key)
     if df is not None:
@@ -258,9 +262,18 @@ def cached_members_df(spark: SparkSession, cube: CubeDef,
     with _MEMBERS_LOCK:
         df = _MEMBERS_CACHE.get(key)
         if df is None:
-            df = _MEMBERS_CACHE[key] = _build_members_cache(
-                spark, cube, sf_dir)
+            df = _build_members_cache(spark, cube, sf_dir)
+            _MEMBER_INDEX[key] = MemberIndex.read(
+                _disk_cache_path(spark, cube, sf_dir))
+            _MEMBERS_CACHE[key] = df
     return df
+
+
+def cached_member_index(spark: SparkSession, cube: CubeDef,
+                        sf_dir: str) -> MemberIndex:
+    """The driver-local index of ``cached_members_df``'s memo entry."""
+    cached_members_df(spark, cube, sf_dir)
+    return _MEMBER_INDEX[_members_key(cube, sf_dir)]
 
 
 def _build_members_cache(spark: SparkSession, cube: CubeDef,

@@ -79,6 +79,14 @@ def _apply_merge(syms_col, left: str, right: str):
         ).otherwise(F.concat(acc, F.array(x))))
 
 
+def release_local_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint()`` frame now.
+    ``df.unpersist()`` frees nothing here: the blocks belong to the
+    checkpointed RDD under the plan, which the cache manager never saw,
+    so they would stay until the context cleaner collects that RDD."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def train_bpe(docs: DataFrame, num_merges: int = 24,
               text_col: str = "text",
               checkpoint_every: int = 6) -> tuple[list, DataFrame]:
@@ -108,11 +116,11 @@ def train_bpe(docs: DataFrame, num_merges: int = 24,
             # session otherwise accumulates one superseded vocab copy
             # per checkpoint interval per training run)
             new = syms.localCheckpoint()
-            ckpt.unpersist(blocking=False)
+            release_local_checkpoint(ckpt)
             syms = ckpt = new
     # the returned plan still reads the LAST live checkpoint; hand the
     # caller its handle so it can free the blocks once it has drained
-    # the symbols table (collect / write) — see docs_segments._trained
+    # the symbols table (collect / write) — see docs_segments._trained_bpe
     syms._sgr_ckpt = ckpt
     return merges, syms
 

@@ -15,7 +15,6 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import members as M
 from . import metadata
 from .cube import CubeRegistry, default_registry
 from .jobs import JobRegistry
@@ -76,15 +75,17 @@ class OlapService:
         return metadata.cached_members_df(
             self.spark, self.registry.resolve(catalog), self.sf_dir)
 
+    def _member_index(self, catalog: str):
+        """The driver-local index of ``_members``: navigation calls
+        answer from it with no Spark job, in key order."""
+        return metadata.cached_member_index(
+            self.spark, self.registry.resolve(catalog), self.sf_dir)
+
     def get_members(self, catalog: str, dimension: str, hierarchy: str,
                     level: str, limit: int = MEMBER_PAGE_SIZE,
                     offset: int = 0) -> dict[str, Any]:
-        mdf = self._members(catalog)
-        page = M.paginate_members(mdf, dimension, hierarchy, level,
-                                  limit=limit, offset=offset)
-        rows = [r.asDict() for r in page.collect()]
-        total = (M.get_dimension_members(mdf, dimension, hierarchy, level)
-                 .count())
+        rows, total = self._member_index(catalog).page(
+            dimension, hierarchy, level, limit=limit, offset=offset)
         return {"members": rows, "total": total,
                 "limit": limit, "offset": offset}
 
@@ -93,17 +94,15 @@ class OlapService:
         term = sanitize_search(term)
         if not term:
             return []
-        df = M.search_members(self._members(catalog), term, dimension)
-        return [r.asDict() for r in df.limit(MEMBER_PAGE_SIZE).collect()]
+        return self._member_index(catalog).search(
+            term, dimension, limit=MEMBER_PAGE_SIZE)
 
     def get_apartados(self, catalog: str) -> list[dict[str, Any]]:
-        return [r.asDict()
-                for r in M.get_apartados(self._members(catalog)).collect()]
+        return self._member_index(catalog).apartados()
 
     def get_variables(self, catalog: str,
                       apartado_unique_names: list[str]) -> list[dict[str, Any]]:
-        df = M.children_of(self._members(catalog), apartado_unique_names)
-        return [r.asDict() for r in df.collect()]
+        return self._member_index(catalog).children(apartado_unique_names)
 
     # ---- query execution ---------------------------------------------------
 
@@ -236,6 +235,12 @@ class OlapService:
                  {"max_dist": max_dist, "prefix_chars": prefix_chars,
                   "block_width": block_width})
         docs = load_table(self.spark, self.sf_dir, table)
+        # the schema comes from the parquet footer: no job runs
+        need = [id_col, "embedding"] if semantic else [id_col, "text", "lang"]
+        missing = [c for c in need if c not in docs.columns]
+        if missing:
+            raise ValueError(f"table {table!r} lacks column(s) {missing} "
+                             f"for mode {mode!r}")
         return table, dedup_frame(docs, mode, id_col=id_col, **knobs)
 
     def sources(self, mode: str, *, ngram: int = 3, max_groups: int = 8,

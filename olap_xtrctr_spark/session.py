@@ -8,6 +8,7 @@ real statistics instead of hardcoded for the test scale.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -90,7 +91,16 @@ def get_spark(app_name: str = "olap-xtrctr-spark") -> SparkSession:
         # reader rejects; read as long and convert (see load_events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # the -D options above hold only for a JVM this call starts; one that
+    # already runs keeps its own default, so check it on every call
+    locale = spark._jvm.java.util.Locale
+    current = locale.getDefault().toString()
+    if current != "en_US":
+        sys.stderr.write(f"get_spark: JVM default locale {current} "
+                         f"reset to en_US\n")
+        locale.setDefault(locale.US)
+    return spark
 
 
 # Tables whose queries do heavy PER-ROW compute (shingling, vector math).

@@ -70,6 +70,47 @@ _DUP_SPAN_SQL = r"""WITH t AS (
         FROM t LEFT JOIN pd USING (doc_id)"""
 
 
+_BPE_MERGES = 24
+_BPE_GATE_MAX_VOCAB = 200_000
+
+
+def _trained_bpe(spark, sf):
+    """(merges, local_syms) of one BPE training run over the corpus.
+
+    Trains PER CALL, deliberately: the former module-level memo
+    (keyed on (sf, file size)) was a cross-entry result cache —
+    exactly the accounting the optimization rounds prohibit (every
+    invocation must compute from the parquet inputs), and it also
+    outlived the Spark session that produced its localCheckpoint.
+    Training is deterministic (word-count argmax with total
+    tie-breaks, gated against the pure-Python reference), so per-call
+    recompute changes no entry's rows; the three consumers each pay
+    their own training cost.
+
+    The symbols table comes back as a LAZY supplier of a driver-local
+    frame (ADVICE r14): an eager localCheckpoint() left
+    lineage-truncated cached blocks that nothing ever unpersisted, and
+    charged the materialization to the two consumers that use only
+    ``merges``.  The table is vocabulary-sized and its one consumer
+    broadcasts it, so collecting it is the same bytes the broadcast
+    would move.  The first call collects it and frees the trainer's
+    checkpoint, which cannot be recomputed; every call builds a new
+    frame from the kept rows."""
+    from ..operators import bpe as B
+    merges, syms = B.gated_train_bpe(
+        _docs(spark, sf), num_merges=_BPE_MERGES,
+        gate_max_vocab=_BPE_GATE_MAX_VOCAB)
+    kept: list = []
+
+    def local_syms():
+        if not kept:
+            kept.append(syms.collect())
+            B.release_local_checkpoint(syms._sgr_ckpt)
+        return spark.createDataFrame(kept[0], syms.schema)
+
+    return merges, local_syms
+
+
 def register(add) -> None:
 
     # corpus-wide first-occurrence segment dedup (CCNet / Lee et al.
@@ -116,44 +157,8 @@ def register(add) -> None:
     # capped with a logged skip so the gate can't become the scale
     # bottleneck).  A wrong merge order, count, or tie-break fails the
     # entry loudly rather than shipping plausible-looking merges.
-    _BPE_MERGES = 24
-    _BPE_GATE_MAX_VOCAB = 200_000
-
-    def _trained(spark, sf):
-        # Trains PER CALL, deliberately: the former module-level memo
-        # (keyed on (sf, file size)) was a cross-entry result cache —
-        # exactly the accounting the optimization rounds prohibit
-        # (every invocation must compute from the parquet inputs), and
-        # it also outlived the Spark session that produced its
-        # localCheckpoint.  Training is deterministic (word-count
-        # argmax with total tie-breaks, gated against the pure-Python
-        # reference), so per-call recompute changes no entry's rows;
-        # the three consumers each pay their own training cost.
-        #
-        # The symbols table comes back as a LAZY supplier of a
-        # driver-local frame (ADVICE r14): the former eager
-        # localCheckpoint() left lineage-truncated cached blocks that
-        # nothing ever unpersisted, and charged the materialization to
-        # the two consumers that use only `merges`.  The table is
-        # vocabulary-sized and its one consumer broadcasts it, so
-        # collecting it is the same bytes the broadcast would move;
-        # the trainer's internal checkpoint is freed once drained.
-        from ..operators import bpe as B
-        merges, syms = B.gated_train_bpe(
-            _docs(spark, sf), num_merges=_BPE_MERGES,
-            gate_max_vocab=_BPE_GATE_MAX_VOCAB)
-
-        def local_syms():
-            rows = syms.collect()
-            ckpt = getattr(syms, "_sgr_ckpt", None)
-            if ckpt is not None:
-                ckpt.unpersist(blocking=False)
-            return spark.createDataFrame(rows, syms.schema)
-
-        return merges, local_syms
-
     def bpe_train(spark, sf):
-        merges, _ = _trained(spark, sf)
+        merges, _ = _trained_bpe(spark, sf)
         return spark.createDataFrame(
             [(r, a, b, a + b, c) for r, a, b, c in merges],
             "rank int, left string, right string, merged string, "
@@ -166,7 +171,7 @@ def register(add) -> None:
     # training table — the corpus itself never enters Python
     def bpe_token_count(spark, sf):
         from pyspark.sql import functions as F
-        _, syms_f = _trained(spark, sf)
+        _, syms_f = _trained_bpe(spark, sf)
         vocab = syms_f().select("word", F.size("syms").alias("n_sub"))
         toks = (_docs(spark, sf).select(
             "doc_id",
@@ -228,7 +233,7 @@ def register(add) -> None:
     # dropped symbol, double-merge or marker leak breaks the hash.
     def bpe_roundtrip(spark, sf):
         from ..operators import bpe as B
-        merges, _ = _trained(spark, sf)
+        merges, _ = _trained_bpe(spark, sf)
         return B.bpe_roundtrip(_docs(spark, sf), merges)
 
     add("docs_bpe_roundtrip", bpe_roundtrip,

@@ -150,3 +150,20 @@ def test_encode_and_roundtrip_emit_rows_for_empty_docs(spark):
     assert rt[3]["n_bad_words"] == 0 and rt[3]["recon_chars"] == 0
     assert rt[1]["n_bad_words"] == 0
     assert rt[1]["recon_chars"] == len("lowlower")
+
+
+def test_trained_symbols_supplier_serves_every_call(spark, sf_dir):
+    """The BPE entries' symbols supplier frees the trainer's local
+    checkpoint after its first collect; a second call must still give
+    the same rows, not read the freed blocks."""
+    from olap_xtrctr_spark.workloads import docs_segments
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+    _, local_syms = docs_segments._trained_bpe(spark, sf_dir)
+    before = persisted()
+    first = sorted(map(tuple, local_syms().collect()))
+    assert first
+    assert persisted() < before           # the checkpoint is freed
+    assert sorted(map(tuple, local_syms().collect())) == first

@@ -641,3 +641,25 @@ def test_cli_and_http_run_one_path(base_url, spark, sf_dir):
         assert http_err.value.code == 400
         assert cli_err.value.code == json.loads(
             http_err.value.read())["detail"]
+
+
+def test_dedup_on_table_without_mode_columns_is_400(base_url, spark,
+                                                    sf_dir):
+    """A registered table that lacks the mode's columns is a client
+    error with the same text from both front-ends, not a 500 from the
+    planner."""
+    from olap_xtrctr_spark.__main__ import build_parser, run
+    svc = OlapService(spark, sf_dir)
+    for mode, table, missing in (
+            ("soft", "lineitem", ["doc_id", "text", "lang"]),
+            ("semantic", "documents", ["vec_id", "embedding"])):
+        detail = (f"table {table!r} lacks column(s) {missing} "
+                  f"for mode {mode!r}")
+        with pytest.raises(urllib.error.HTTPError) as http_err:
+            _post(base_url + "/api/dedup", {"mode": mode, "table": table})
+        assert http_err.value.code == 400
+        assert json.loads(http_err.value.read()) == {"detail": detail}
+        with pytest.raises(SystemExit) as cli_err:
+            run(build_parser().parse_args(
+                ["dedup", f"--{mode}", "--table", table]), service=svc)
+        assert cli_err.value.code == detail

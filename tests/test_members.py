@@ -284,3 +284,112 @@ def test_members_cache_miss_is_single_flight(spark, sf_dir, tmp_path,
             cached.unpersist()
         if prev is not None:
             metadata._MEMBERS_CACHE[key] = prev
+
+
+# ---- the driver-local index against the Spark path ------------------------
+
+def _spark_pages(mdf, level, cases):
+    """``paginate_members`` bodies for every (offset, limit) in
+    ``cases``, one job: the branches of a union, tagged by case."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+    pages = [M.paginate_members(mdf, *level, limit=lim, offset=off)
+             .withColumn("_case", F.lit(i))
+             for i, (off, lim) in enumerate(cases)]
+    out = [[] for _ in cases]
+    for r in reduce(lambda a, b: a.unionByName(b), pages).collect():
+        row = r.asDict()
+        out[row.pop("_case")].append(row)
+    return out
+
+
+def _index_key(row):
+    return tuple(row[c] for c in M.INDEX_KEY)
+
+
+def _assert_twin(mdf, index, levels, terms):
+    """Pages, search, apartados and variables from ``index`` equal the
+    Spark path over ``mdf``: pages as JSON bodies (key order kept),
+    search as the first 1,000 of the full hit set in key order."""
+    import json
+    for level in levels:
+        total = M.get_dimension_members(mdf, *level).count()
+        cases = [(off, lim)
+                 for off in (0, total // 2, total - 1, total, total + 5, -3)
+                 for lim in (0, 1, 1000)]
+        for (off, lim), rows in zip(cases, _spark_pages(mdf, level, cases)):
+            spark_body = {"members": rows, "total": total}
+            got, got_total = index.page(*level, limit=lim, offset=off)
+            assert json.dumps({"members": got, "total": got_total}) \
+                == json.dumps(spark_body), (level, off, lim)
+    for term in terms:
+        hits = [r.asDict() for r in M.search_members(mdf, term).collect()]
+        assert index.search(term) == sorted(hits, key=_index_key)[:1000], \
+            term
+    apartados = [r.asDict() for r in M.get_apartados(mdf).collect()]
+    assert index.apartados() == apartados
+    names = [a["MIEMBRO_UNIQUE_NAME"] for a in apartados]
+    for sel in (names[:1], names[:3], names):
+        got = index.children(sel)
+        want = [r.asDict() for r in M.children_of(mdf, sel).collect()]
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+        assert got == sorted(
+            got, key=lambda r: (r["MIEMBRO_CAPTION"],
+                                r["MIEMBRO_UNIQUE_NAME"]))
+
+
+def test_member_index_equals_spark_path(spark, sf_dir):
+    """Every level of the sales cube, every benchmark search term: the
+    index the service answers from gives the Spark path's replies."""
+    import sys
+    from pathlib import Path
+
+    from olap_xtrctr_spark.service import OlapService
+    perfbench = str(Path(__file__).resolve().parents[1] / "perfbench")
+    if perfbench not in sys.path:
+        sys.path.insert(0, perfbench)
+    from sessions import SEARCH_TERMS
+
+    svc = OlapService(spark, sf_dir)
+    cube = svc.registry.resolve("VENTAS_2025")
+    levels = [(d.name, f"{d.name}.{h.name}", lv.name)
+              for d in cube.dimensions.values()
+              for h in d.hierarchies.values() for lv in h.levels]
+    index = svc._member_index("VENTAS_2025")
+    assert set(index.levels) == set(levels)
+    assert index.apartados()
+    _assert_twin(svc._members("VENTAS_2025"), index, levels,
+                 SEARCH_TERMS + ["EUROPE"])
+
+
+def test_member_index_folds_case_as_the_jvm(spark):
+    """Captions whose upper case differs between Java (and Python) and
+    Arrow's utf8_upper: 'ß' → 'SS' and 'ﬁ' → 'FI', where utf8_upper
+    gives 'ẞ' and keeps 'ﬁ'; dotted and dotless i under the en-US
+    locale the session pins."""
+    import pyarrow as pa
+    caps = ["straße", "ﬁne", "Año", "İx", "ıi", "All", None, "Ärger",
+            "fine"]
+    level = ("Dim X", "Dim X.H", "L")
+    table = pa.table({
+        "DIMENSION": [level[0]] * len(caps),
+        "JERARQUIA": [level[1]] * len(caps),
+        "NIVEL_NOMBRE": [level[2]] * len(caps),
+        "MIEMBRO_CAPTION": caps,
+        "MIEMBRO_UNIQUE_NAME": [f"[Dim X].[H].&[{i}]"
+                                for i in range(len(caps))],
+        "PARENT_UNIQUE_NAME": ["[Dim X].[H].&[p]"] * len(caps),
+        "CHILDREN_CARDINALITY": pa.array([0] * len(caps), pa.int64()),
+    })
+    index = M.MemberIndex(table)
+    assert index.levels == {level: (0, len(caps) - 2)}
+    mdf = spark.createDataFrame(table.to_pandas())
+    _assert_twin(mdf, index, [level],
+                 ["strasse", "ß", "SS", "fi", "año", "AÑO", "İ", "ı", "i",
+                  "x", "ä"])
+    assert [r["MIEMBRO_CAPTION"] for r in index.search("fi")] \
+        == ["fine", "ﬁne"]
+    hits = [r.asDict() for r in M.search_members(mdf, "e").collect()]
+    assert len(hits) == 4
+    assert index.search("e", limit=2) == sorted(hits, key=_index_key)[:2]

@@ -263,3 +263,23 @@ def test_select_star_over_static_rowset_runs_no_job(spark, svc):
     cube = next(iter(svc.registry._cubes.values()))
     assert _jobs_in_group(spark, f"ref-{tag}", lambda: metadata.levels_df(
         spark, cube).collect()) > 0
+
+
+def test_members_navigation_runs_no_job(spark, svc):
+    """Members pages, search, apartados and variables answer from the
+    driver-local member index: after one warm call, no Spark job."""
+    cat = "VENTAS_2025"
+    apartados = svc.get_apartados(cat)
+    names = [a["MIEMBRO_UNIQUE_NAME"] for a in apartados[:3]]
+    calls = {
+        "members": lambda: svc.get_members(
+            cat, "Dim Customer", "Dim Customer.Geografía", "Customer",
+            limit=1000, offset=100),
+        "search": lambda: svc.search_members(cat, "red"),
+        "apartados": lambda: svc.get_apartados(cat),
+        "variables": lambda: svc.get_variables(cat, names),
+    }
+    tag = uuid.uuid4().hex
+    for name, call in calls.items():
+        assert call()
+        assert _jobs_in_group(spark, f"{name}-{tag}", call) == 0, name
