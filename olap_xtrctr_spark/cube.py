@@ -12,7 +12,11 @@ Scale design notes
   (e.g. customer-geography and order-attributes both riding the
   ``orders`` bridge) cost ONE fact join, not two.
 * ``region``/``nation`` are constant-size (5/25 rows at every scale
-  factor) → hard ``F.broadcast``.  ``customer``/``supplier``/``part``
+  factor) → hard ``F.broadcast``.  Spark honours an explicit hint at
+  any ``autoBroadcastJoinThreshold``, ``-1`` included, so these two
+  stay broadcast even in a session that turns broadcasting off; that
+  is the intended policy for tables this small, not an oversight.
+  ``customer``/``supplier``/``part``
   grow with SF → left to AQE's runtime broadcast conversion instead of
   a hardcoded hint that would be wrong at 100 TB.
 * Degenerate dimensions (time from ``l_shipdate``) are computed columns

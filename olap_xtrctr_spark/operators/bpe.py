@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import release_local_checkpoint
+
 END_WORD = "</w>"   # end-of-word marker symbol (Sennrich convention)
 
 
@@ -77,14 +79,6 @@ def _apply_merge(syms_col, left: str, right: str):
             F.concat(F.slice(acc, 1, F.size(acc) - 1),
                      F.array(F.concat(a, b)))
         ).otherwise(F.concat(acc, F.array(x))))
-
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of a ``localCheckpoint()`` frame now.
-    ``df.unpersist()`` frees nothing here: the blocks belong to the
-    checkpointed RDD under the plan, which the cache manager never saw,
-    so they would stay until the context cleaner collects that RDD."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def train_bpe(docs: DataFrame, num_merges: int = 24,

@@ -841,9 +841,10 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 10,
     edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
              .unionByName(pairs.select(F.col(id_b).alias("src"),
                                        F.col(id_a).alias("dst"))))
+    from ..session import release_local_checkpoint
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("cluster", F.col("id")))
-    for _ in range(max_iterations):
+    for i in range(max_iterations):
         neighbor_min = (edges.join(labels, edges.dst == labels.id)
                         .groupBy("src")
                         .agg(F.min("cluster").alias("nmin")))
@@ -859,6 +860,8 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 10,
                    .join(labels.alias("l"), "id")
                    .filter(F.col("u.cluster") != F.col("l.cluster"))
                    .limit(1).count())
+        if i:                  # round 0's labels are a plan, not blocks
+            release_local_checkpoint(labels)
         labels = updated
         if changed == 0:
             break

@@ -101,10 +101,13 @@ def connected_components(edges: DataFrame, src: str = "u",
                 f"non-integer ids to longs first (e.g. xxhash64)")
     e = _canon(edges.select(F.col(src).cast("long").alias("u"),
                             F.col(dst).cast("long").alias("v")))
+    from ..session import release_local_checkpoint
     e = e.localCheckpoint(eager=True)
     prev = _checksum(e)
     for _ in range(_MAX_ROUNDS):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        nxt = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        release_local_checkpoint(e)       # the replaced round
+        e = nxt
         cur = _checksum(e)
         if cur == prev:
             break
@@ -244,6 +247,7 @@ def weighted_pagerank(edges: DataFrame, nodes: DataFrame,
     sym = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
     wout = sym.groupBy("u").agg(F.sum("w").alias("wt"))
+    # ecw and nodes stay checkpointed: the returned pr plan reads both
     ecw = sym.join(wout, "u").localCheckpoint()
     nodes = nodes.select(F.col(node_col).alias("_n"))
     if teleport is None:

@@ -10,7 +10,7 @@ UDF signatures) is real and tested.  Codec status is split by format:
   header parse + ``np.frombuffer``), plus a real nearest-neighbor
   resize (``resize_nearest``).  The synthetic fixtures for these carry
   *closed-form* sample/pixel content, so an external SQL oracle can
-  verify the decoded values bit-exactly (see workloads/multimodal_real).
+  verify the decoded values bit-exactly (see workloads/multimodal).
 * **Compressed formats (JPEG/MP3/MP4)** — env-blocked: no PIL/ffmpeg
   in this container.  ``real_decode`` stays an honest
   NotImplementedError slot; the deterministic ``_fake_decode`` digest

@@ -89,9 +89,10 @@ def _floordiv(expr: str, step: int) -> str:
     milestone indices standardize on FLOOR, the symmetric boundary
     convention, so a drawdown (negative running total) crosses the
     same boundaries on every engine; SQL oracles over signed streams
-    must spell floor out the same way (see
-    workloads/wave11.events_value_drawdown_milestones).  All-integer:
-    a double ``floor(x / step)`` would lose crossings past 2**53."""
+    must spell floor out the same way (see the
+    events_value_drawdown_milestones entry in workloads/events_running).
+    All-integer: a double ``floor(x / step)`` would lose crossings
+    past 2**53."""
     d = f"(({expr}) div {step})"
     return (f"({d} - (CASE WHEN ({expr}) % {step} < 0 "
             f"THEN 1 ELSE 0 END))")

@@ -317,6 +317,10 @@ def duplicate_spans_incremental_bucketed(
     new_grams = new_grams.localCheckpoint(eager=True)
     (new_grams.select(F.col("_sh").alias("gram"), "_bucket")
      .write.partitionBy("_bucket").mode("append").parquet(store_dir))
+    # the report is its own checkpoint: nothing reads these two again
+    from ..session import release_local_checkpoint
+    release_local_checkpoint(batch_keys)
+    release_local_checkpoint(new_grams)
     return report
 
 

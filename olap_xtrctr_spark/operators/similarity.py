@@ -1209,19 +1209,8 @@ def _corpus_signature(emb: DataFrame) -> tuple[int, str]:
     signature hashes the source files' (path, size, mtime) triples, so
     a REGENERATED corpus with the same row count never serves a stale
     index; in-memory inputs (no files) sign as the row count alone."""
-    import hashlib
-    import os
-
-    parts = []
-    for p in sorted(emb.inputFiles()):
-        local = p[len("file:"):] if p.startswith("file:") else p
-        try:
-            st = os.stat(local)
-            parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
-        except OSError:
-            parts.append(p)               # remote FS: path-only term
-    return (emb.count(),
-            hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16])
+    from ..session import input_files_signature
+    return emb.count(), input_files_signature(emb)[:16]
 
 
 def _index_is_current(index_dir: str, meta: dict,

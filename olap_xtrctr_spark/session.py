@@ -272,6 +272,31 @@ def track_persist(df: DataFrame, storage_level=None) -> DataFrame:
     return df
 
 
+def input_files_signature(df: DataFrame) -> str:
+    """sha256 over the (path, size, mtime_ns) of ``df``'s input files,
+    so a source regenerated at the same size still changes it; a file
+    that cannot be stat-ed (remote FS) signs by its path alone."""
+    import hashlib
+
+    parts = []
+    for p in sorted(df.inputFiles()):
+        local = p[len("file:"):] if p.startswith("file:") else p
+        try:
+            st = os.stat(local)
+            parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
+        except OSError:
+            parts.append(p)
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
+
+
+def release_local_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint()`` frame now.
+    ``df.unpersist()`` frees nothing here: the blocks belong to the
+    checkpointed RDD under the plan, which the cache manager never saw,
+    so they would stay until the context cleaner collects that RDD."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 from contextlib import contextmanager as _contextmanager
 
 

@@ -10,39 +10,33 @@ Cross-engine exactness strategy:
 * ranked outputs carry an explicit deterministic rank (ties broken by
   unique ids) instead of relying on row order.
 
-Structure: the entry builders live in per-family modules under
-``olap_xtrctr_spark/workloads/`` (cube, tpch_*, members_nav, docs_text,
-similarity_*, events_*, ...) with the shared helpers in
-``workload_shared``.  This module keeps the public
-surface: ``WORKLOAD``, ``build_workload``, the gate-window manifest,
-and compat re-exports.
+The entry builders live in one module per entry family under
+``olap_xtrctr_spark/workloads/``; each exposes one ``register(add)``.
+Shared helpers live in ``workload_shared``.  This module keeps the
+public surface: ``WORKLOAD``, ``build_workload`` and the gate-window
+manifest.
 """
 from __future__ import annotations
 
-from .workload_shared import (AVG_D, CATALOG, MES_CASE,  # noqa: F401
-                              QuerySpec, SUM_D)
-from .workloads import (cube, curation, docs_segments,  # noqa: F401
-                        docs_text, events_batch, events_joins,
-                        events_wave4, members_nav, multimodal_real,
-                        similarity_core, similarity_gates,
-                        similarity_misc, similarity_textpairs, tpch_a,
-                        tpch_b, wave9, wave10, wave11, wave12, wave13)
+from .workload_shared import QuerySpec
+from .workloads import (cube, cube_requests, docs_contamination,
+                        docs_corpus, docs_dedup, docs_segments,
+                        docs_sources, docs_text, docs_tokens, emb_ann,
+                        emb_vectors, events_batch, events_joins,
+                        events_running, events_sketches, events_stream,
+                        members_nav, multimodal, tpch)
 
-# ---- driver gate-window manifest -----------------------------------------
-# The external correctness gate grades the FIRST _GATE_WINDOW entries of
-# queries().  Instead of rotating the dict by a count (fragile — ADVICE r3),
-# an explicit manifest names the entries that need a fresh driver row this
-# round; everything after the front keeps build order, so the gate's
-# remaining slots re-grade the round-1/2 block (cube_*/tpch_*/members_*)
-# for regression coverage.  Entries past the window all have green rows
-# from earlier rounds; WORKLOAD.md documents which round graded what.
+_MODULES = (cube, cube_requests, tpch, members_nav, docs_text, docs_tokens,
+            docs_segments, docs_dedup, docs_sources, docs_contamination,
+            docs_corpus, emb_vectors, emb_ann, events_batch, events_joins,
+            events_running, events_sketches, events_stream, multimodal)
+
+# The external correctness gate grades only the FIRST _GATE_WINDOW
+# entries of queries(); this manifest names them explicitly, so which
+# entries get graded never depends on registration order.  Everything
+# after the front keeps build order.
 _GATE_WINDOW = 50
 _GATE_FRONT = [
-    # ---- Round-13 rotation (VERDICT r12 task 1, executed exactly) ---
-    # (a) the 8 r6-stale TPC-H re-grades — the oldest surviving green
-    #     rows in the ledger, deliberately deferred from r12's window;
-    #     pure Catalyst SQL translations, re-graded here so the oldest
-    #     surviving green row moves from r6 to r7:
     "tpch_q2_min_cost_supplier",
     "tpch_q4_order_priority",
     "tpch_q11_important_stock",
@@ -51,22 +45,11 @@ _GATE_FRONT = [
     "tpch_q17_small_quantity",
     "tpch_q20_excess_shippers",
     "tpch_q22_global_sales_opportunity",
-    # (b) the 5 LATE round-12 additions that have NEVER received a
-    #     driver row (landed after the r12 manifest was sized): the
-    #     frozen-codebook IVF / balanced-cluster / quality-classifier
-    #     exact twins, the streaming semantic-dedup fold, and the
-    #     persisted-IVFPQ-index query path:
     "docs_quality_classifier_exact",
     "emb_ivf_topk_exact",
     "emb_cluster_balanced_exact",
     "emb_stream_semantic_dedup",
     "emb_ivfpq_index_topk",
-    # (c) 37 of the 45-entry r7 staleness tail (all full-oracle),
-    #     chosen to include every r7-green CHANGED-PATH consumer of
-    #     the r11 zip-chain shingle rework and the r12 regime
-    #     pre-probe (docs_ngram_jaccard_pairs, the contamination /
-    #     span-dedup / segment-dedup families) plus the rest of the
-    #     r7 block oldest-first:
     "docs_ngram_jaccard_pairs",
     "docs_contamination_check",
     "docs_duplicate_spans",
@@ -105,62 +88,19 @@ _GATE_FRONT = [
     "multimodal_ppm_decode_stats",
     "multimodal_ppm_resize_real",
 ]
-# Deliberately DEFERRED to the r14 window (8 + 5 + 45 = 58 candidates
-# for 50 slots, plus the 5 never-graded late-r13 additions
-# docs_source_pagerank / emb_source_dim_drift /
-# docs_interleave_sources / docs_budget_allocation /
-# docs_contamination_pagerank, which queue with
-# the front per the late-entry precedent): the 8 remaining r7-green entries —
-# cube_bottomcount_nations, cube_order_by_unselected_measure,
-# dmv_discover_properties, dmv_discover_schema_rowsets,
-# members_full_view, members_level_cardinalities, members_pagination,
-# events_hourly_rollup — chosen because they are pure Catalyst /
-# metadata paths with no custom-operator code in their lineage (the
-# lowest regression risk of the r7 block); they queue FIRST for r14,
-# followed by the oldest of the r8 block (43 entries), keeping the
-# oldest-surviving-green treadmill at "oldest ≥ r8 by end of r14"
-# (VERDICT r12 task 5).
-
-
-
 
 
 def build_workload() -> dict[str, QuerySpec]:
     q: dict[str, QuerySpec] = {}
 
     def add(name, fn, sql):
+        if name in q:
+            raise ValueError(f"workload entry {name!r} registered twice")
         q[name] = QuerySpec(name, fn, sql)
 
-    # Registration order == the pre-split file's build order (cube ->
-    # tpch -> members -> text -> similarity -> events); each module's
-    # internal order is verbatim, so build order is byte-stable.
-    # docs_segments / multimodal_real (round-7 additions) register
-    # last: existing build order stays byte-stable, new entries appear
-    # past the legacy tail.
-    for mod in (cube, tpch_a, tpch_b, members_nav, docs_text,
-                similarity_core, similarity_gates, similarity_textpairs,
-                similarity_misc):
+    for mod in _MODULES:
         mod.register(add)
-    similarity_textpairs.register_r8(add)
-    for mod in (events_batch, events_joins, events_wave4):
-        mod.register(add)
-    events_wave4.register_r8(add)
-    for mod in (docs_segments, multimodal_real, curation):
-        mod.register(add)
-    curation.register_r8(add)     # round-8 additions append last
-    docs_segments.register_r8(add)
-    cube.register_r9(add)         # round-9 additions append after r8
-    wave9.register(add)
-    similarity_textpairs.register_r10(add)  # round-10 tail
-    cube.register_r10(add)
-    wave10.register(add)          # round-10 wave 2 (prefix family)
-    wave11.register(add)          # round-11 (ADVICE-fix path pins)
-    wave12.register(add)          # round-12 (frozen-codebook ANN twins)
-    wave13.register(add)          # round-13 (source governance analytics)
-    wave13.register_wave2(add)    # round-13 wave 2 (curriculum/allocation)
-    wave13.register_wave3(add)    # round-13 wave 3 (personalized PPR)
 
-    # Order per the gate-window manifest (see _GATE_FRONT above).
     missing = [n for n in _GATE_FRONT if n not in q]
     assert not missing, f"gate manifest names unknown entries: {missing}"
     assert len(_GATE_FRONT) == _GATE_WINDOW, (

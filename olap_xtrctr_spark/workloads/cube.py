@@ -1,138 +1,26 @@
-"""Cube / MDX workload entries (SURVEY §2.4-§2.5).
+"""Cube / MDX workload entries: MDX strings parsed and run through the
+cube engine, each against a DuckDB oracle over the reference views
+(SURVEY §2.4-§2.5).  The cube entries built as ``QueryRequest`` objects
+live in ``cube_requests``.
 
-Entry builders moved VERBATIM from ``workload.py`` (round-6 split);
-build order inside this module is unchanged.
+Every entry calls the module-global ``parse_mdx``, so a tracer can wrap
+MDX parsing in one place.
 """
 from __future__ import annotations
 
 from ..mdx import parse_mdx
-from ..oracle import view_cte
-from ..query import AxisItem, FilterSpec, QueryRequest
-from ..workload_shared import (AVG_D, CATALOG, MES_CASE, SUM_D, _FACT_OW,
-                               _OW, _OW_PART, _SUPP, _eng)
+from ..workload_shared import (AVG_D, CATALOG, MES_CASE, SUM_D, _FACT_OW, _OW,
+                               _eng)
+
+
+_REGION_SET = ("{ [Dim Customer].[Geografía].[Region].&[0], "
+               "[Dim Customer].[Geografía].[Region].&[1], "
+               "[Dim Customer].[Geografía].[Region].&[2], "
+               "[Dim Customer].[Geografía].[Region].&[3], "
+               "[Dim Customer].[Geografía].[Region].&[4] }")
 
 
 def register(add) -> None:
-    # ================= cube queries (SURVEY §2.4/§2.5) ====================
-
-    add("cube_nation_sales",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG,
-            measures=["Sum Extendedprice", "Total Registros", "Sum Quantity"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Nation")])),
-        f"""WITH {_OW}
-        SELECT cust_nation AS nation,
-               {SUM_D('l_extendedprice')} AS sum_extendedprice,
-               COUNT(*) AS total_registros,
-               {SUM_D('l_quantity')} AS sum_quantity
-        FROM {_FACT_OW}
-        GROUP BY cust_nation""")
-
-    add("cube_region_priority_crossjoin",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Extendedprice"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Region"),
-                  AxisItem("Dim Orders", "Prioridad", level="Prioridad")])),
-        f"""WITH {_OW}
-        SELECT cust_region AS region, order_prioridad AS prioridad,
-               {SUM_D('l_extendedprice')} AS sum_extendedprice
-        FROM {_FACT_OW}
-        GROUP BY 1, 2""")
-
-    add("cube_member_literal_rows",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Quantity"],
-            rows=[AxisItem("Dim Customer", "Geografía", members=[
-                "[Dim Customer].[Geografía].[Region].&[0]",
-                "[Dim Customer].[Geografía].[Region].&[2]"])])),
-        f"""WITH {_OW}
-        SELECT cust_region AS region, {SUM_D('l_quantity')} AS sum_quantity
-        FROM {_FACT_OW}
-        WHERE cust_region_key IN (0, 2)
-        GROUP BY 1""")
-
-    add("cube_slicer_where_tuple",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Extendedprice", "Total Registros"],
-            rows=[AxisItem("Dim Producto", "Producto", level="Brand")],
-            slicers=["[Dim Orders].[Estado].[Estado].&[F]"])),
-        f"""WITH {_OW_PART}
-        SELECT prod_brand AS brand,
-               {SUM_D('l_extendedprice')} AS sum_extendedprice,
-               COUNT(*) AS total_registros
-        FROM {_FACT_OW}
-        JOIN part_view ON l_partkey = p_partkey
-        WHERE order_estado = 'F'
-        GROUP BY 1""")
-
-    add("cube_time_rollup",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Quantity"],
-            rows=[AxisItem("D Tiempo", "Calendario", level="Mes",
-                           properties=True)])),
-        f"""SELECT anio, mes, {SUM_D('l_quantity')} AS sum_quantity
-        FROM (SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
-                     {MES_CASE} AS mes,
-                     l_quantity
-              FROM lineitem)
-        GROUP BY 1, 2""")
-
-    add("cube_all_measures_global",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, all_measures=True)),
-        f"""SELECT {SUM_D('l_extendedprice')} AS sum_extendedprice,
-               COUNT(*) AS total_registros,
-               {SUM_D('l_quantity')} AS sum_quantity,
-               {AVG_D('l_discount')} AS avg_discount,
-               COUNT(DISTINCT l_orderkey) AS distinct_orders
-        FROM lineitem""")
-
-    add("cube_variables_pivot",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG,
-            variables=[
-                "[DIM VARIABLES2025].[Apartado y Variable].[Apartado].&[Brand#11]",
-                "[DIM VARIABLES2025].[Apartado y Variable].[Apartado].&[Brand#12]"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Region")])),
-        f"""WITH {_OW_PART}
-        SELECT cust_region AS region,
-               COUNT(CASE WHEN prod_brand = 'Brand#11' THEN 1 END) AS "Brand#11",
-               COUNT(CASE WHEN prod_brand = 'Brand#12' THEN 1 END) AS "Brand#12"
-        FROM {_FACT_OW}
-        JOIN part_view ON l_partkey = p_partkey
-        WHERE prod_brand IN ('Brand#11', 'Brand#12')
-        GROUP BY 1""")
-
-    add("cube_empty_preserving_axis",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Extendedprice"], non_empty=False,
-            rows=[AxisItem("Dim Orders", "Estado", level="Estado"),
-                  AxisItem("D Tiempo", "Calendario", level="Año")]),
-            empty_preserving=True),
-        f"""WITH {view_cte('orders_wide', 'time_view')},
-        ax1 AS (SELECT DISTINCT order_estado AS estado FROM orders_wide),
-        ax2 AS (SELECT DISTINCT anio FROM time_view),
-        agg AS (
-          SELECT order_estado AS estado,
-                 CAST(year(l_shipdate) AS INTEGER) AS anio,
-                 {SUM_D('l_extendedprice')} AS sum_extendedprice
-          FROM {_FACT_OW}
-          GROUP BY 1, 2)
-        SELECT ax1.estado, ax2.anio, agg.sum_extendedprice
-        FROM ax1 CROSS JOIN ax2
-        LEFT JOIN agg ON agg.estado = ax1.estado AND agg.anio = ax2.anio""")
-
-    add("cube_dimension_properties",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Total Registros"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Nation",
-                           properties=True)])),
-        f"""WITH {_OW}
-        SELECT cust_region AS region, cust_nation AS nation,
-               COUNT(*) AS total_registros
-        FROM {_FACT_OW}
-        GROUP BY 1, 2""")
-
     # the Q13 full-MDX form: named DIMENSION PROPERTIES list resolved to
     # the specific ancestor level (reference scanner emits
     # [Dim].[Hier].[Level] per superior level)
@@ -214,81 +102,7 @@ def register(add) -> None:
         GROUP BY 1
         HAVING {SUM_D('l_quantity')} > 65000""")
 
-    add("cube_supplier_nation",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Extendedprice", "Avg Discount"],
-            rows=[AxisItem("Dim Proveedor", "Geografía Proveedor",
-                           level="Nation")])),
-        f"""WITH {_SUPP}
-        SELECT supp_nation,
-               {SUM_D('l_extendedprice')} AS sum_extendedprice,
-               {AVG_D('l_discount')} AS avg_discount
-        FROM lineitem JOIN supplier_geo ON l_suppkey = s_suppkey
-        GROUP BY 1""")
-
-    add("cube_3dim_crossjoin",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Quantity"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Region"),
-                  AxisItem("Dim Orders", "Estado", level="Estado"),
-                  AxisItem("D Tiempo", "Calendario", level="Año")])),
-        f"""WITH {_OW}
-        SELECT cust_region AS region, order_estado AS estado,
-               CAST(year(l_shipdate) AS INTEGER) AS anio,
-               {SUM_D('l_quantity')} AS sum_quantity
-        FROM {_FACT_OW}
-        GROUP BY 1, 2, 3""")
-
-    add("cube_filter_set",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Total Registros"],
-            rows=[AxisItem("Dim Customer", "Segmento", level="Segmento")],
-            filters=[FilterSpec("Dim Producto", "Producto", members=[
-                "[Dim Producto].[Producto].[Brand].&[Brand#21]",
-                "[Dim Producto].[Producto].[Brand].&[Brand#22]"])])),
-        f"""WITH {_OW_PART}
-        SELECT cust_segment AS segmento, COUNT(*) AS total_registros
-        FROM {_FACT_OW}
-        JOIN part_view ON l_partkey = p_partkey
-        WHERE prod_brand IN ('Brand#21', 'Brand#22')
-        GROUP BY 1""")
-
-    # multi-catalog resolution: the year-scoped VENTAS_1998 catalog routes
-    # to its own cube whose fact is filtered to anio <= 1998 (Q14 + the
-    # reference's one-catalog-per-year layout)
-    add("cube_catalog_1998_nation",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            "VENTAS_1998", measures=["Total Registros", "Sum Quantity"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Nation")])),
-        f"""WITH {_OW}
-        SELECT cust_nation AS nation,
-               COUNT(*) AS total_registros,
-               {SUM_D('l_quantity')} AS sum_quantity
-        FROM {_FACT_OW}
-        WHERE year(l_shipdate) <= 1998
-        GROUP BY cust_nation""")
-    register_r7(add)
-
-
-def register_r7(add) -> None:
-    # ---- round 7: ORDER by a measure NOT on the columns axis ----------
-    # Exercises the ADVICE-r6 resolution path: the ORDER key (Sum
-    # Quantity) must be aggregated as an extra base and projected away,
-    # leaving only the selected measure.  The driver compare is
-    # order-insensitive, so the oracle checks the row SET + values;
-    # ordering itself is pinned by t:test_order_by_unselected_measure.
-    add("cube_order_by_unselected_measure",
-        lambda spark, sf: _eng(spark, sf).execute(QueryRequest(
-            CATALOG, measures=["Sum Extendedprice"],
-            rows=[AxisItem("Dim Customer", "Geografía", level="Nation")],
-            order_by=("Sum Quantity", True))),
-        f"""WITH {_OW}
-        SELECT cust_nation AS nation,
-               {SUM_D('l_extendedprice')} AS sum_extendedprice
-        FROM {_FACT_OW}
-        GROUP BY cust_nation""")
-
-    # ---- round 7: HEAD / TAIL set functions ---------------------------
+    # ---- HEAD / TAIL set functions ---------------------------
     # HEAD without ORDER keeps the first n rows of the canonical
     # group-column ascending order (MDX's natural member order).
     add("cube_head_nations",
@@ -322,7 +136,7 @@ def register_r7(add) -> None:
         SELECT nation, sum_quantity FROM agg
         ORDER BY sum_quantity ASC, nation DESC LIMIT 5""")
 
-    # ---- round 8: member-tree navigation in-query (VERDICT r7 task 6)
+    # ---- member-tree navigation in-query
     # DESCENDANTS(member, level): the members at `level` under the
     # named member — the parent→children walk the reference scanner
     # does in pandas (scanner/DGIS_SCAN_2_stable.py:1041-1049),
@@ -365,10 +179,9 @@ def register_r7(add) -> None:
         WHERE cust_region_key = 2
         GROUP BY 1""")
 
-    # .CHILDREN sugar (== DESCENDANTS distance 1) — behind the gate
-    # window this round (semantics already driver-graded through
+    # .CHILDREN sugar (== DESCENDANTS distance 1): semantics as
     # cube_descendants_region_nations; execution equivalence pinned in
-    # tests/test_mdx.py); rotates into the window round 9.
+    # tests/test_mdx.py.
     add("cube_children_of_region",
         lambda spark, sf: _eng(spark, sf).execute(parse_mdx(
             "SELECT { [Measures].[Sum Quantity] } ON COLUMNS, "
@@ -381,7 +194,7 @@ def register_r7(add) -> None:
         WHERE cust_region_key = 0
         GROUP BY 1""")
 
-    # PrevMember time intelligence (round 8, wave 3): the SSAS
+    # PrevMember time intelligence: the SSAS
     # period-over-period pattern — WITH MEMBER ... AS [Measures].[X] -
     # ([Measures].[X], <hier>.PrevMember) — realized as one lag()
     # window over the materialized axis rows, ordered by the level's
@@ -435,7 +248,7 @@ def register_r7(add) -> None:
           FROM {_FACT_OW}
           GROUP BY 1, 2)""")
 
-    # SUM(YTD(...)) running totals (round 8, wave 4): months accumulate
+    # SUM(YTD(...)) running totals: months accumulate
     # within their year (the axis's ancestor level partitions the
     # window), regions partition independently; accumulation runs in
     # DECIMAL(18,4) so the running sums are order-independent and
@@ -466,7 +279,7 @@ def register_r7(add) -> None:
                  AS DOUBLE) AS ytd_qty
         FROM a""")
 
-    # SUM(LASTPERIODS(3, ...)) rolling window (round 8, wave 5): the
+    # SUM(LASTPERIODS(3, ...)) rolling window: the
     # trailing-quarter sum on the month axis — unlike YTD it CROSSES
     # year boundaries (Jan's window reaches the previous Nov-Dec), the
     # SSAS LastPeriods contract (query.LastPeriodsRef).
@@ -492,7 +305,7 @@ def register_r7(add) -> None:
                  AS DOUBLE) AS roll3_qty
         FROM a""")
 
-    # NextMember (round 8, wave 6): the forward tuple — next period's
+    # NextMember: the forward tuple — next period's
     # value minus the current one (lead(); the last period reports
     # NULL, SSAS's empty cell).
     add("cube_next_month_delta",
@@ -516,7 +329,7 @@ def register_r7(add) -> None:
                  - sum_quantity AS next_delta
         FROM a""")
 
-    # WITH SET named sets (round 8, wave 6): query-scoped set
+    # WITH SET named sets: query-scoped set
     # definition referenced on the row axis — expanded at parse time
     # (the SSAS named-set sugar), so the engine sees the member
     # literals and the plan is the usual pushed key filter.
@@ -534,7 +347,7 @@ def register_r7(add) -> None:
         WHERE cust_region_key IN (1, 3)
         GROUP BY 1""")
 
-    # Composition (round 8, wave 7): FILTER over a PrevMember calc —
+    # Composition: FILTER over a PrevMember calc —
     # the months whose quantity DECLINED vs the previous month.  The
     # lag computes over the full axis first, the filter prunes after
     # (the engine's calc -> having ordering), matching the oracle's
@@ -563,7 +376,7 @@ def register_r7(add) -> None:
         SELECT anio, mes, sum_quantity, qty_delta
         FROM d WHERE qty_delta < 0""")
 
-    # PARALLELPERIOD distance form (round 8, wave 7): month vs the
+    # PARALLELPERIOD distance form: month vs the
     # SAME month last year — lag 12 over the chronological month axis
     # (query.LagRef.n), the canonical SSAS year-over-year-at-month-
     # grain comparison.
@@ -586,14 +399,6 @@ def register_r7(add) -> None:
                sum_quantity - LAG(sum_quantity, 12)
                  OVER (ORDER BY anio, mn) AS yoy_month
         FROM a""")
-
-
-def register_r9(add) -> None:
-    """Round-9 MDX surface: aggregate a named set into a calculated
-    member (SUM/AGGREGATE over a set literal -> query.SetAggRef, ONE
-    conditional aggregate in the same fact scan) and the
-    TOPPERCENT/TOPSUM cumulative-cut family (query.TopPercentSpec, one
-    exact-DECIMAL window over the aggregated axis)."""
 
     # SUM over a WITH SET name: per-year total next to the same total
     # restricted to the named region set — single scan, the set is a
@@ -715,7 +520,7 @@ def register_r9(add) -> None:
         SELECT mes, sum_quantity
         FROM r WHERE cumb < 500000""")
 
-    # DistinctCount measure (SSAS aggregator, round 9): distinct order
+    # DistinctCount measure (SSAS aggregator): distinct order
     # keys per region cell next to the raw row count — Spark plans the
     # exact distinct as a two-phase partial-distinct aggregate.
     add("cube_distinct_orders_by_region",
@@ -731,7 +536,7 @@ def register_r9(add) -> None:
         FROM {_FACT_OW}
         GROUP BY 1""")
 
-    # Set operators on member-literal sets (round 9): EXCEPT prunes,
+    # Set operators on member-literal sets: EXCEPT prunes,
     # UNION(INTERSECT(...)) composes — resolved at parse time into one
     # member-constraint list (key-predicate pushdown like any member
     # filter; no extra plan nodes at all).
@@ -769,7 +574,7 @@ def register_r9(add) -> None:
         WHERE cust_region_key IN (1, 4)
         GROUP BY 1""")
 
-    # SET in the WHERE slicer (round 9): members of one hierarchy OR
+    # SET in the WHERE slicer: members of one hierarchy OR
     # inside the slicer tuple (the SSAS set-in-slicer contract) while
     # a second hierarchy's member ANDs across — one conjunctive
     # key-predicate per hierarchy, pushdown shape unchanged.
@@ -789,7 +594,7 @@ def register_r9(add) -> None:
           AND order_estado = 'F'
         GROUP BY 1""")
 
-    # calc-over-calc (round 9): a calculated measure referencing
+    # calc-over-calc: a calculated measure referencing
     # another — materialized in DFS dependency order, so [Discounted
     # Avg] sees [Avg Price]'s column.  Both stay pure arithmetic over
     # DECIMAL-frozen bases, so every division is one double op each
@@ -816,7 +621,7 @@ def register_r9(add) -> None:
                (se / sq) * (1 - ad) AS discounted_avg
         FROM a""")
 
-    # DRILLTHROUGH (round 9): the fact rows behind a cell — member
+    # DRILLTHROUGH: the fact rows behind a cell — member
     # sets / filters / slicers become row predicates (same pushdown as
     # the aggregate path), no groupBy, natural fact columns returned.
     add("cube_drillthrough_region",
@@ -831,9 +636,7 @@ def register_r9(add) -> None:
         FROM lineitem l JOIN orders_wide ON l.l_orderkey = o_orderkey
         WHERE cust_region_key = 2 AND order_estado = 'F'""")
 
-
-def register_r10(add) -> None:
-    # DRILLTHROUGH RETURN + MAXROWS (round 10): projected drillthrough
+    # DRILLTHROUGH RETURN + MAXROWS: projected drillthrough
     # with a deterministic bound — the engine orders by ALL output
     # columns before the limit (TakeOrderedAndProject), so the output
     # MULTISET is engine- and retry-independent even though ties at
@@ -856,7 +659,7 @@ def register_r10(add) -> None:
         WHERE cust_region_key = 2 AND order_estado = 'F'
         ORDER BY l_quantity, l_shipdate, l_orderkey LIMIT 100""")
 
-    # Subselect space restriction (round 10): FROM (SELECT {members}
+    # Subselect space restriction: FROM (SELECT {members}
     # ON COLUMNS FROM [cube]) restricts its hierarchy on the rows axis
     # AND in the totals (VisualTotals semantics — unlike a Q10 filter
     # it is NOT dropped when its hierarchy is on rows), composing with
@@ -878,3 +681,167 @@ def register_r10(add) -> None:
         FROM {_FACT_OW}
         WHERE cust_region_key IN (1, 3, 4) AND order_estado = 'F'
         GROUP BY 1""")
+
+    # MDX set statistics (query.SetStatRef): MEDIAN/MIN over the
+    # per-region values of a measure — per-member conditional
+    # aggregates in the SAME fact scan, the statistic as a post-agg
+    # array expression.  NOT expressible as one OR-predicate aggregate
+    # (median of per-member sums != any aggregate of the union slice).
+    add("cube_median_region_sales",
+        lambda spark, sf: _eng(spark, sf).execute(parse_mdx(
+            "WITH MEMBER [Measures].[Median Region Sales] AS "
+            f"MEDIAN({_REGION_SET}, [Measures].[Sum Extendedprice]) "
+            "MEMBER [Measures].[Min Region Sales] AS "
+            f"MIN({_REGION_SET}, [Measures].[Sum Extendedprice]) "
+            "SELECT { [Measures].[Sum Extendedprice], "
+            "[Measures].[Median Region Sales], "
+            "[Measures].[Min Region Sales] } ON COLUMNS, "
+            "[D Tiempo].[Calendario].[Año].MEMBERS ON ROWS "
+            "FROM [sales]", CATALOG)),
+        f"""WITH {_OW},
+        a AS (
+          SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
+                 cust_region_key AS rk,
+                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)))
+                      AS DOUBLE) AS v
+          FROM {_FACT_OW} GROUP BY 1, 2),
+        tot AS (
+          SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
+                 {SUM_D('l_extendedprice')} AS sum_extendedprice
+          FROM {_FACT_OW} GROUP BY 1),
+        r AS (
+          SELECT anio, v,
+                 ROW_NUMBER() OVER (PARTITION BY anio ORDER BY v, rk)
+                   AS rn,
+                 COUNT(*) OVER (PARTITION BY anio) AS n
+          FROM a),
+        med AS (
+          SELECT anio,
+                 (MAX(CASE WHEN rn = (n + 1) // 2 THEN v END)
+                  + MAX(CASE WHEN rn = (n + 2) // 2 THEN v END)) / 2.0
+                   AS median_region_sales,
+                 MIN(v) AS min_region_sales
+          FROM r GROUP BY anio)
+        SELECT tot.anio, sum_extendedprice, median_region_sales,
+               min_region_sales
+        FROM tot JOIN med USING (anio)""")
+
+    # RANK over the axis set (query.RankRef): one rank() window over
+    # the aggregated axis rows — axis-sized cost, ties share a rank.
+    add("cube_rank_nations",
+        lambda spark, sf: _eng(spark, sf).execute(parse_mdx(
+            "WITH MEMBER [Measures].[Sales Rank] AS "
+            "RANK([Dim Customer].[Geografía].CurrentMember, "
+            "[Measures].[Sum Extendedprice]) "
+            "SELECT { [Measures].[Sum Extendedprice], "
+            "[Measures].[Sales Rank] } ON COLUMNS, "
+            "[Dim Customer].[Geografía].[Nation].MEMBERS ON ROWS "
+            "FROM [sales]", CATALOG)),
+        f"""WITH {_OW},
+        a AS (
+          SELECT cust_nation AS nation,
+                 {SUM_D('l_extendedprice')} AS sum_extendedprice
+          FROM {_FACT_OW} GROUP BY 1)
+        SELECT nation, sum_extendedprice,
+               CAST(RANK() OVER (ORDER BY sum_extendedprice DESC
+                                 NULLS LAST) AS INTEGER) AS sales_rank
+        FROM a""")
+
+    # NONEMPTY(set, measure) — the PowerBI/Excel function form (drops
+    # axis rows where THAT measure is empty, post-aggregation, so a
+    # calculated lag qualifies): the first month has no PrevMember ->
+    # its row drops; every surviving row's prev is non-null.
+    add("cube_nonempty_prev_months",
+        lambda spark, sf: _eng(spark, sf).execute(parse_mdx(
+            "WITH MEMBER [Measures].[Prev Qty] AS "
+            "([Measures].[Sum Quantity], [D Tiempo].[Calendario]"
+            ".PrevMember) "
+            "SELECT { [Measures].[Sum Quantity], [Measures].[Prev Qty] } "
+            "ON COLUMNS, NONEMPTY([D Tiempo].[Calendario].[Mes].MEMBERS"
+            ", [Measures].[Prev Qty]) "
+            "DIMENSION PROPERTIES MEMBER_CAPTION ON ROWS "
+            "FROM [sales]", CATALOG)),
+        f"""WITH m AS (
+          SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
+                 {MES_CASE} AS mes,
+                 month(l_shipdate) AS mn, l_quantity
+          FROM lineitem),
+        a AS (
+          SELECT anio, mes, mn, {SUM_D('l_quantity')} AS sum_quantity
+          FROM m GROUP BY 1, 2, 3),
+        l AS (
+          SELECT anio, mes, sum_quantity,
+                 LAG(sum_quantity) OVER (ORDER BY anio, mn) AS prev_qty
+          FROM a)
+        SELECT anio, mes, sum_quantity, prev_qty
+        FROM l WHERE prev_qty IS NOT NULL""")
+
+    # FILTER condition referencing a set STATISTIC (ADVICE r10 fix 1:
+    # these refs are collected from req.having now, not only from
+    # req.calculated): keep the years whose total exceeds 5x the
+    # MEDIAN region slice — with 5 near-even regions the ratio
+    # hovers around 5.0, so the screen discriminates (keeps some,
+    # drops some) at every gate SF (measured: 3 of 7 years at
+    # sf0.001, 4 of 7 at sf0.01).
+    def filter_setstat(spark, sf):
+        return _eng(spark, sf).execute(parse_mdx(
+            "SELECT { [Measures].[Sum Extendedprice] } ON COLUMNS, "
+            "FILTER([D Tiempo].[Calendario].[Año].MEMBERS, "
+            "[Measures].[Sum Extendedprice] > "
+            f"5 * MEDIAN({_REGION_SET}, [Measures].[Sum Extendedprice]"
+            ")) ON ROWS FROM [sales]", CATALOG))
+
+    # MEDIAN over the odd-sized (5-member) set is the middle per-
+    # region value on both engines — no interpolation, so the 5x
+    # comparison is the same IEEE multiply+compare bit-for-bit.
+    add("cube_filter_setstat_years", filter_setstat,
+        f"""WITH {_OW},
+        a AS (
+          SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
+                 cust_region_key AS rk,
+                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)))
+                      AS DOUBLE) AS v
+          FROM {_FACT_OW} GROUP BY 1, 2),
+        tot AS (
+          SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
+                 {SUM_D('l_extendedprice')} AS sum_extendedprice
+          FROM {_FACT_OW} GROUP BY 1),
+        md AS (SELECT anio, MEDIAN(v) AS m FROM a GROUP BY 1)
+        SELECT t.anio, t.sum_extendedprice
+        FROM tot t JOIN md USING (anio)
+        WHERE t.sum_extendedprice > 5 * md.m""")
+
+    # NON EMPTY over an ALL-CALCULATED query (ADVICE r10 fix 3: the
+    # test now runs on the calc cells after materialization instead of
+    # silently no-op'ing): months where nation 21 bought brand
+    # Brand#12 at all — the sparse-slice month screen.
+    def nonempty_all_calc(spark, sf):
+        return _eng(spark, sf).execute(parse_mdx(
+            "WITH MEMBER [Measures].[N21 Qty] AS "
+            "AGGREGATE({ [Dim Customer].[Geografía].[Region].&[1]"
+            ".&[21] }, [Measures].[Sum Quantity]) "
+            "SELECT { [Measures].[N21 Qty] } ON COLUMNS, "
+            "NON EMPTY [D Tiempo].[Calendario].[Mes].MEMBERS "
+            "DIMENSION PROPERTIES MEMBER_CAPTION ON ROWS "
+            "FROM [sales] "
+            "WHERE ([Dim Producto].[Producto].[Brand].&[Brand#12])",
+            CATALOG))
+
+    add("cube_nonempty_all_calc_months", nonempty_all_calc,
+        f"""WITH {_OW},
+        pv AS (SELECT p_partkey, p_brand FROM part),
+        f AS (
+          SELECT CAST(year(l_shipdate) AS INTEGER) AS anio,
+                 {MES_CASE} AS mes, month(l_shipdate) AS mn,
+                 l_quantity, cust_region_key, cust_nation_key
+          FROM {_FACT_OW} JOIN pv ON l_partkey = p_partkey
+          WHERE p_brand = 'Brand#12'),
+        a AS (
+          SELECT anio, mes, mn,
+                 CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)))
+                      FILTER (WHERE cust_region_key = 1
+                              AND cust_nation_key = 21)
+                      AS DOUBLE) AS n21_qty
+          FROM f GROUP BY 1, 2, 3)
+        SELECT anio, mes, n21_qty
+        FROM a WHERE n21_qty IS NOT NULL""")

@@ -1,43 +1,176 @@
-"""Token-level pair generators: jaccard / DSIR / BM25 / containment / winnowing.
-
-Entry builders moved VERBATIM from the round-6 ``workloads/similarity.py``
-(round-7 split, VERDICT r6 task 7); build order inside this module is
-unchanged.
+"""Document-level duplicate entries: exact duplicate groups and keep
+rules, MinHash/SimHash/n-gram/containment/winnowing pair detection,
+near-dup clusters and connected components, and the keep decisions
+built on them.
 """
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import load_table
 from ..operators import dedup as D
 from ..operators import sampling as SM
-from ..operators import similarity as S
-from ..operators import text as TX
-from ..workload_shared import (_docs, _emb)
-
-from ..operators.fixedlog import ladder_sql
-
-# Fixed-op ln oracle ladders (libm-free; operators/fixedlog.py) —
-# built once at import, interpolated into the oracle SQL below.  The
-# round-8 driver proved libm-backed ln() diverges across DuckDB
-# builds; these ladders make oracle and engine evaluate the identical
-# IEEE-double op sequence.
-_LLR_LADDER = ladder_sql(
-    "SELECT * FROM corpus, tot",
-    lns=[("ct + 1", "l1"), ("tt + 1024", "l2"),
-         ("cr + 1", "l3"), ("tr + 1024", "l4")])
-_GUMBEL_BUCKET = ("TRY_CAST(concat('0x', substr(md5(concat(CAST(doc_id AS "
-                  "VARCHAR), ':dsir-gumbel-v1')), 1, 15)) AS BIGINT) % 10000")
-_GUMBEL_LADDER = ladder_sql(
-    "SELECT doc_id, weight_micro, (CAST(" + _GUMBEL_BUCKET +
-    " AS DOUBLE) + 0.5e0) / 10000.0e0 AS u FROM base",
-    lns=[("u", "l1"), ("0.0e0 - l1", "l2")])
-_IDF_LADDER = ladder_sql(
-    "SELECT token, df, n_docs FROM dfreq, tot",
-    lns=[("((n_docs - df + 0.5e0) / (df + 0.5e0) + 1.0e0)", "lnv")])
+from ..workload_shared import _docs
 
 
 def register(add) -> None:
+    # cross-dump duplication diagnostic (mixing-weight input): per source,
+    # docs whose fingerprint also appears under another source
+    add("docs_cross_source_dup",
+        lambda spark, sf: D.cross_source_duplication(_docs(spark, sf)),
+        r"""WITH f AS (
+          SELECT doc_id, source,
+                 md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
+          FROM documents),
+        s AS (SELECT fp, COUNT(DISTINCT source) AS n_sources
+              FROM f GROUP BY fp)
+        SELECT f.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(CASE WHEN s.n_sources > 1 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_cross_dup
+        FROM f JOIN s USING (fp)
+        GROUP BY f.source""")
+
+    def incr_dedup(spark, sf):
+        docs = _docs(spark, sf)
+        from ..operators.sampling import _hash_bucket
+        b = _hash_bucket(F.col("doc_id"), "batch-v1")
+        seen = docs.filter(b % 2 == 0)
+        new = docs.filter(b % 2 == 1)
+        return SM.incremental_dedup(new, seen).select("doc_id", "lang")
+
+    _BB = SM.hash_bucket_sql("doc_id", "batch-v1")
+
+    add("docs_incremental_dedup", incr_dedup,
+        f"""WITH fp AS (
+          SELECT doc_id, lang, {_BB} % 2 AS batch,
+                 md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))
+                   AS fingerprint
+          FROM documents)
+        SELECT doc_id, lang FROM fp
+        WHERE batch = 1
+          AND fingerprint NOT IN (SELECT fingerprint FROM fp
+                                  WHERE batch = 0)
+          AND doc_id = (SELECT MIN(doc_id) FROM fp f2
+                        WHERE f2.batch = 1
+                          AND f2.fingerprint = fp.fingerprint)""")
+
+    add("docs_exact_dup_groups",
+        lambda spark, sf: D.exact_dup_groups(_docs(spark, sf)),
+        """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id,
+               COUNT(*) AS copies
+        FROM documents
+        GROUP BY text""")
+
+    def exact_dedup_keep(spark, sf):
+        return D.exact_dedup(_docs(spark, sf), ["text"], "doc_id") \
+            .select("doc_id", F.md5(F.encode(F.col("text"), "UTF-8"))
+                    .alias("text_hash"))
+
+    # deterministic survivor choice: first doc_id per duplicate text group
+    add("docs_exact_dedup_keep", exact_dedup_keep,
+        """SELECT doc_id, md5(text) AS text_hash
+        FROM (SELECT doc_id, text,
+                     ROW_NUMBER() OVER (PARTITION BY text
+                                        ORDER BY doc_id) AS rn
+              FROM documents)
+        WHERE rn = 1""")
+
+    # end-to-end dedup pipeline: exact jaccard pairs → connected
+    # components.  Spark runs distributed min-label propagation; the
+    # oracle computes the same components as a recursive-CTE transitive
+    # closure over the identical exact-jaccard edge set.
+    add("docs_near_dup_clusters",
+        lambda spark, sf: D.near_dup_clusters(
+            D.ngram_jaccard_pairs(_docs(spark, sf), threshold=0.2)),
+        r"""WITH RECURSIVE toks AS (
+          SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+          FROM documents),
+        sh AS (
+          SELECT doc_id, unnest(list_distinct(list_transform(
+            generate_series(1, greatest(len(t) - 2, 1)),
+            i -> array_to_string(t[i:i+2], ' ')))) AS shingle
+          FROM toks),
+        sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+        inter AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
+          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+          GROUP BY 1, 2),
+        pairs AS (
+          SELECT id_a, id_b FROM inter
+          JOIN sizes sa ON sa.doc_id = id_a
+          JOIN sizes sb ON sb.doc_id = id_b
+          WHERE i / (sa.sz + sb.sz - i) >= 0.2),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                  UNION SELECT id_b, id_a FROM pairs),
+        reach(src, dst) AS (
+          SELECT src, dst FROM edges
+          UNION SELECT src, src FROM edges
+          UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
+        SELECT src AS doc_id, MIN(dst) AS cluster FROM reach GROUP BY src""")
+
+    # the full dedup pipeline: exact-jaccard pairs → connected
+    # components → one canonical survivor per cluster (keep-min-id),
+    # singletons untouched — corpus size in, deduped corpus out
+    add("docs_keep_canonical",
+        lambda spark, sf: D.keep_canonical(
+            _docs(spark, sf),
+            D.near_dup_clusters(
+                D.ngram_jaccard_pairs(_docs(spark, sf), threshold=0.2)))
+        .select("doc_id", "lang", "source"),
+        r"""WITH RECURSIVE toks AS (
+          SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+          FROM documents),
+        sh AS (
+          SELECT doc_id, unnest(list_distinct(list_transform(
+            generate_series(1, greatest(len(t) - 2, 1)),
+            i -> array_to_string(t[i:i+2], ' ')))) AS shingle
+          FROM toks),
+        sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+        inter AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
+          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+          GROUP BY 1, 2),
+        pairs AS (
+          SELECT id_a, id_b FROM inter
+          JOIN sizes sa ON sa.doc_id = id_a
+          JOIN sizes sb ON sb.doc_id = id_b
+          WHERE i / (sa.sz + sb.sz - i) >= 0.2),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                  UNION SELECT id_b, id_a FROM pairs),
+        reach(src, dst) AS (
+          SELECT src, dst FROM edges
+          UNION SELECT src, src FROM edges
+          UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+        comp AS (SELECT src AS doc_id, MIN(dst) AS cluster
+                 FROM reach GROUP BY src)
+        SELECT d.doc_id, d.lang, d.source
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+        WHERE c.doc_id IS NULL OR d.doc_id = c.cluster""")
+
+    # rows-only checks (hash functions are engine-specific → no SQL oracle)
+    add("docs_minhash_lsh_pairs",
+        lambda spark, sf: D.minhash_lsh_pairs(_docs(spark, sf), threshold=0.3),
+        None)
+
+    # the SCALE-path dedup pipeline: banded MinHash-LSH candidates (never
+    # all-pairs) -> components -> canonical corpus.  Probabilistic, so
+    # rows-only here; its recall vs the exact pipeline is pinned in
+    # tests/test_recall.py
+    add("docs_minhash_dedup_corpus",
+        lambda spark, sf: D.keep_canonical(
+            _docs(spark, sf),
+            D.near_dup_clusters(
+                D.minhash_lsh_pairs(_docs(spark, sf), threshold=0.3)))
+        .select("doc_id", "lang", "source"),
+        None)
+
+    # hamming <= 6: inside the multi-block pigeonhole guarantee (n_blocks-1)
+    # and tight enough to mean "near-dup" on vocabulary-overlapping corpora
+    # (hamming 16 admits ~24% of ALL pairs of this fixture)
+    add("docs_simhash_pairs",
+        lambda spark, sf: D.simhash_near_pairs(_docs(spark, sf),
+                                               max_hamming=6),
+        None)
+
     # max_doc_freq: finite stop-shingle cap (well above the observed max
     # df at test SFs — 25 at sf0.1 — so results here are exact; at corpus
     # scale it bounds the O(df^2) pair blowup and logs what it drops).
@@ -68,176 +201,6 @@ def register(add) -> None:
         JOIN sizes sa ON sa.doc_id = id_a
         JOIN sizes sb ON sb.doc_id = id_b
         WHERE i / (sa.sz + sb.sz - i) >= 0.2""")
-
-    # DSIR data selection (hashed-ngram importance weights): per-bucket
-    # log-likelihood ratios frozen to integer micro-units once per
-    # corpus, so each doc's weight is exact integer arithmetic — the
-    # single ln happens n_buckets times, never per document, keeping the
-    # cross-engine comparison bit-exact.  DuckDB SUM(BIGINT) → HUGEINT,
-    # hence the final CASTs (the r4 anomalies lesson).
-    add("docs_dsir_weights",
-        lambda spark, sf: SM.dsir_importance_weights(
-            _docs(spark, sf), F.col("source") == "src0"),
-        rf"""WITH d AS (
-          SELECT doc_id, source = 'src0' AS is_target,
-                 regexp_split_to_array(trim(lower(text)), '\s+') AS t
-          FROM documents),
-        f AS (
-          SELECT doc_id, is_target, unnest(list_concat(t,
-                   list_transform(
-                     generate_series(1, greatest(len(t) - 1, 0)),
-                     i -> concat(t[i], ' ', t[i+1])))) AS feat
-          FROM d),
-        b AS (
-          SELECT doc_id, is_target,
-                 TRY_CAST(concat('0x', substr(md5(concat('f:', feat)),
-                   1, 15)) AS BIGINT) % 1024 AS bucket
-          FROM f),
-        dc AS (SELECT doc_id, bucket, COUNT(*) AS c FROM b GROUP BY 1, 2),
-        corpus AS (
-          SELECT bucket, COUNT(*) AS cr,
-                 SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct
-          FROM b GROUP BY 1),
-        tot AS (SELECT SUM(cr) AS tr, SUM(ct) AS tt FROM corpus),
-        llr AS (
-          SELECT bucket, CAST(ROUND((((l1 - l2) - l3) + l4) * 1e6)
-                   AS BIGINT) AS llr_micro
-          FROM ({_LLR_LADDER}))
-        SELECT dc.doc_id, CAST(SUM(c) AS BIGINT) AS n_feats,
-               CAST(SUM(c * llr_micro) AS BIGINT) AS weight_micro
-        FROM dc JOIN llr USING (bucket)
-        GROUP BY 1""")
-
-    # the selection half of DSIR: top-k docs by importance weight,
-    # deterministic ties by id (TakeOrderedAndProject — no global sort)
-    add("docs_dsir_top_docs",
-        lambda spark, sf: SM.dsir_select_top_k(
-            _docs(spark, sf), F.col("source") == "src0", k=50),
-        rf"""WITH base AS (WITH d AS (
-            SELECT doc_id, source = 'src0' AS is_target,
-                   regexp_split_to_array(trim(lower(text)), '\s+') AS t
-            FROM documents),
-          f AS (
-            SELECT doc_id, is_target, unnest(list_concat(t,
-                     list_transform(
-                       generate_series(1, greatest(len(t) - 1, 0)),
-                       i -> concat(t[i], ' ', t[i+1])))) AS feat
-            FROM d),
-          b AS (
-            SELECT doc_id, is_target,
-                   TRY_CAST(concat('0x', substr(md5(concat('f:', feat)),
-                     1, 15)) AS BIGINT) % 1024 AS bucket
-            FROM f),
-          dc AS (SELECT doc_id, bucket, COUNT(*) AS c FROM b GROUP BY 1, 2),
-          corpus AS (
-            SELECT bucket, COUNT(*) AS cr,
-                   SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct
-            FROM b GROUP BY 1),
-          tot AS (SELECT SUM(cr) AS tr, SUM(ct) AS tt FROM corpus),
-          llr AS (
-            SELECT bucket, CAST(ROUND((((l1 - l2) - l3) + l4) * 1e6)
-                     AS BIGINT) AS llr_micro
-            FROM ({_LLR_LADDER}))
-          SELECT dc.doc_id, CAST(SUM(c) AS BIGINT) AS n_feats,
-                 CAST(SUM(c * llr_micro) AS BIGINT) AS weight_micro
-          FROM dc JOIN llr USING (bucket)
-          GROUP BY 1
-          )
-        SELECT CAST(ROW_NUMBER() OVER (
-                 ORDER BY weight_micro DESC, doc_id) AS INTEGER) AS rank,
-               doc_id, n_feats, weight_micro
-        FROM base
-        ORDER BY weight_micro DESC, doc_id
-        LIMIT 50""")
-
-    # stochastic DSIR via Gumbel-top-k with a DETERMINISTIC noise
-    # source (md5-bucket uniform -> -ln(-ln(u))), integer micro-units
-    # before comparison — reproducible resampling any engine replays
-    add("docs_dsir_gumbel_sample",
-        lambda spark, sf: SM.dsir_gumbel_sample(
-            _docs(spark, sf), F.col("source") == "src0", k=50),
-        rf"""WITH base AS (WITH d AS (
-            SELECT doc_id, source = 'src0' AS is_target,
-                   regexp_split_to_array(trim(lower(text)), '\s+') AS t
-            FROM documents),
-          f AS (
-            SELECT doc_id, is_target, unnest(list_concat(t,
-                     list_transform(
-                       generate_series(1, greatest(len(t) - 1, 0)),
-                       i -> concat(t[i], ' ', t[i+1])))) AS feat
-            FROM d),
-          b AS (
-            SELECT doc_id, is_target,
-                   TRY_CAST(concat('0x', substr(md5(concat('f:', feat)),
-                     1, 15)) AS BIGINT) % 1024 AS bucket
-            FROM f),
-          dc AS (SELECT doc_id, bucket, COUNT(*) AS c FROM b GROUP BY 1, 2),
-          corpus AS (
-            SELECT bucket, COUNT(*) AS cr,
-                   SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct
-            FROM b GROUP BY 1),
-          tot AS (SELECT SUM(cr) AS tr, SUM(ct) AS tt FROM corpus),
-          llr AS (
-            SELECT bucket, CAST(ROUND((((l1 - l2) - l3) + l4) * 1e6)
-                     AS BIGINT) AS llr_micro
-            FROM ({_LLR_LADDER}))
-          SELECT dc.doc_id, CAST(SUM(c) AS BIGINT) AS n_feats,
-                 CAST(SUM(c * llr_micro) AS BIGINT) AS weight_micro
-          FROM dc JOIN llr USING (bucket)
-          GROUP BY 1
-          ),
-        keyed AS (
-          SELECT doc_id, weight_micro,
-                 CAST(ROUND(weight_micro / 1.0) AS BIGINT)
-                 + CAST(ROUND((0.0e0 - l2) * 1e6) AS BIGINT) AS key_micro
-          FROM ({_GUMBEL_LADDER}))
-        SELECT CAST(ROW_NUMBER() OVER (
-                 ORDER BY key_micro DESC, doc_id) AS INTEGER) AS rank,
-               doc_id, weight_micro, key_micro
-        FROM keyed
-        ORDER BY key_micro DESC, doc_id
-        LIMIT 50""")
-
-    # BM25 ranked retrieval — idf frozen to micro-units per TERM (the
-    # only ln), each (doc,term) contribution rounded to integer milli
-    # BEFORE the per-doc sum → order-independent exact integer score
-    add("docs_bm25_topk",
-        lambda spark, sf: TX.bm25_topk(_docs(spark, sf),
-                                       ["hash", "join", "stream"], k=10),
-        rf"""WITH toks AS (
-          SELECT doc_id, unnest(regexp_split_to_array(
-                   trim(lower(text)), '\s+')) AS token
-          FROM documents),
-        dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1),
-        tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT)
-                  AS total_len FROM dl),
-        hits AS (SELECT doc_id, token FROM toks
-                 WHERE token IN ('hash', 'join', 'stream')),
-        dfreq AS (SELECT token, COUNT(DISTINCT doc_id) AS df
-                  FROM hits GROUP BY 1),
-        idf AS (
-          SELECT token, CAST(ROUND(lnv * 1e6) AS BIGINT) AS idf_micro
-          FROM ({_IDF_LADDER})),
-        tf AS (SELECT doc_id, token, COUNT(*) AS tf
-               FROM hits GROUP BY 1, 2),
-        contrib AS (
-          SELECT tf.doc_id, CAST(ROUND(
-                   idf_micro * (tf * 2.2 / (tf + 1.2 * (0.25 + 0.75
-                     * (dl * n_docs / total_len)))) / 1000.0)
-                 AS BIGINT) AS contrib_milli
-          FROM tf JOIN dl ON dl.doc_id = tf.doc_id
-          JOIN idf ON idf.token = tf.token, tot),
-        scored AS (
-          SELECT doc_id, CAST(SUM(contrib_milli) AS BIGINT)
-                   AS score_milli,
-                 COUNT(*) AS n_terms_hit
-          FROM contrib GROUP BY 1)
-        SELECT CAST(ROW_NUMBER() OVER (
-                 ORDER BY score_milli DESC, doc_id) AS INTEGER) AS rank,
-               doc_id, n_terms_hit, score_milli
-        FROM scored
-        ORDER BY score_milli DESC, doc_id
-        LIMIT 10""")
 
     # asymmetric containment |A∩B| / min(|A|,|B|) over the same shingle
     # sets — the doc-inside-doc detector Jaccard structurally misses
@@ -515,11 +478,7 @@ def register(add) -> None:
         FROM wfil JOIN dfreq USING (fp)
         GROUP BY doc_id""")
 
-
-def register_r8(add) -> None:
-    from ..operators import dedup as D
-
-    # ORACLE-EXACT MinHash-LSH (round 8): md5-derived hash family makes
+    # ORACLE-EXACT MinHash-LSH: md5-derived hash family makes
     # banding, the bucket self-join, and the signature-similarity
     # estimate bit-reproducible in SQL — upgrading the minhash family
     # from rows-only to a full value oracle (the xxhash64 operator
@@ -568,7 +527,7 @@ def register_r8(add) -> None:
         SELECT id_a, id_b, ROUND(k / 16.0, 4) AS est_jaccard
         FROM eq WHERE k / 16.0 >= 0.5""")
 
-    # ORACLE-EXACT SimHash (round 8): 60-bit md5 token hash, per-bit
+    # ORACLE-EXACT SimHash: 60-bit md5 token hash, per-bit
     # sign votes, pigeonhole block join, Hamming via bit_count(xor) —
     # every stage SQL-reproducible, upgrading the simhash family from
     # rows-only to a full value oracle.  6 blocks of 10 bits give the
@@ -614,7 +573,7 @@ def register_r8(add) -> None:
         WHERE bit_count(xor(sig_a, sig_b)) <= 5""")
 
     # the full SCALE-path dedup pipeline, ORACLE-EXACT end to end
-    # (round 8): md5 MinHash-LSH candidates -> min-label connected
+    #: md5 MinHash-LSH candidates -> min-label connected
     # components -> canonical corpus.  The recursive-CTE components +
     # keep-canonical tail is the docs_near_dup_clusters pattern; the
     # pair stage is docs_minhash_lsh_pairs_exact's CTE chain verbatim.
@@ -678,222 +637,239 @@ def register_r8(add) -> None:
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
         WHERE c.doc_id IS NULL OR d.doc_id = c.cluster""")
 
+    # blocked exact Levenshtein near-dup pairs (the VERIFY-step edit
+    # distance, bounded by (lang, length-bucket) blocking)
+    add("docs_edit_distance_pairs",
+        lambda spark, sf: D.edit_distance_pairs(_docs(spark, sf),
+                                                max_dist=20,
+                                                prefix_chars=80,
+                                                block_width=100),
+        """WITH b AS (
+          SELECT doc_id, lang, substring(text, 1, 80) AS pre,
+                 CAST(floor(length(text) / 100.0) AS BIGINT) AS blk_len
+          FROM documents)
+        SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
+               CAST(levenshtein(a.pre, b2.pre) AS INTEGER) AS edit_dist
+        FROM b a JOIN b b2
+          ON a.lang = b2.lang AND a.blk_len = b2.blk_len
+         AND a.doc_id < b2.doc_id
+        WHERE levenshtein(a.pre, b2.pre) <= 20""")
 
-def register_r10(add) -> None:
-    from ..operators import similarity as S
+    # Soft dedup with repeat weights: drop exact
+    # copies but keep the duplication evidence as per-survivor training
+    # weights — raw multiplicity, the capped epoch-repeat weight (the
+    # data-constrained-scaling signal: repeats beyond ~4 epochs stop
+    # helping), and the distinct-source spread (cross-source copies are
+    # a quality prior, same-source copies a crawler artifact).  One
+    # md5-keyed groupBy; the shuffle never carries document bodies.
+    add("docs_dedup_weighted_keep",
+        lambda spark, sf: D.dedup_weights(_docs(spark, sf)),
+        """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id,
+               CAST(COUNT(*) AS BIGINT) AS weight,
+               CAST(LEAST(COUNT(*), 4) AS BIGINT) AS weight_capped,
+               CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources
+        FROM documents GROUP BY md5(text)""")
 
-    # ORACLE-EXACT embedding LSH near-dup (round 10, VERDICT r9 task
-    # 6): the last rows-only near-dup family member gets a full-oracle
-    # md5 twin like the minhash/simhash ones.  ±1 hyperplanes from md5
-    # nibbles, integer-frozen projections (no float sums until the
-    # final verify cosine, which both engines round to 4 decimals
-    # before the threshold) — the SQL mirrors every stage, so result
-    # sets match bit-for-bit.
-    # CTE chain shared by both md5-LSH twins (near-dup pairs + top-k):
-    # quantized vectors -> md5 planes -> integer dots -> (vec, table,
-    # bucket) signatures.
-    _MD5_LSH = r"""qv AS (
-          SELECT vec_id, embedding,
-                 list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1e3 + 5e-1)
-                        AS BIGINT)) AS q
-          FROM embeddings),
-        planes AS (
-          SELECT t.t, b.b, i.i,
-                 CASE WHEN TRY_CAST(concat('0x', substr(md5(concat(
-                        'lshplane:', t.t, ':', b.b, ':', i.i)), 1, 1))
-                      AS INTEGER) >= 8 THEN 1 ELSE -1 END AS c
-          FROM range(16) t(t), range(4) b(b), range(64) i(i)),
-        dots AS (
-          SELECT v.vec_id, p.t, p.b,
-                 CAST(SUM(p.c * v.q[p.i + 1]) AS BIGINT) AS d
-          FROM qv v, planes p GROUP BY 1, 2, 3),
-        buckets AS (
-          SELECT vec_id, t,
-                 CAST(SUM(CASE WHEN d >= 0 THEN power(2, b)::BIGINT
-                          ELSE 0 END) AS BIGINT) AS bucket
-          FROM dots GROUP BY 1, 2)"""
+    # Leakage-free split: the split decision hashes
+    # the duplicate group's CANONICAL id, so exact copies can never
+    # straddle train/eval — the contamination mode the audit entries
+    # (docs_contamination_check, emb_cross_split_leakage) detect is
+    # prevented by construction.  One text-hash shuffle to pin the
+    # canonical id; the split itself is a projection.
+    def _cluster_split(spark, sf):
+        from pyspark.sql import Window
+        docs = _docs(spark, sf)
+        key = F.md5(F.encode(F.col("text"), "UTF-8"))
+        w = Window.partitionBy("text_hash")
+        canon = (docs.select("doc_id", key.alias("text_hash"))
+                 .withColumn("canon", F.min("doc_id").over(w)))
+        return (SM.cluster_split(
+                    canon, {"train": 0.8, "val": 0.1, "test": 0.1},
+                    "canon")
+                .select("doc_id", "split"))
 
-    _COS_AB = """list_sum(list_transform(
-                     list_zip(a.embedding, b.embedding),
-                     p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                   / (sqrt(list_sum(list_transform(a.embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                    * sqrt(list_sum(list_transform(b.embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
+    _CB = SM.hash_bucket_sql("canon", "split-v1")
+    add("docs_cluster_split",
+        lambda spark, sf: _cluster_split(spark, sf),
+        f"""WITH c AS (
+          SELECT doc_id,
+                 MIN(doc_id) OVER (PARTITION BY text) AS canon
+          FROM documents)
+        SELECT doc_id,
+               CASE WHEN {_CB} < 8000 THEN 'train'
+                    WHEN {_CB} < 9000 THEN 'val'
+                    ELSE 'test' END AS split
+        FROM c""")
 
-    add("emb_lsh_near_dup_pairs_exact",
-        lambda spark, sf: S.lsh_near_dup_pairs_md5(
-            _emb(spark, sf), threshold=0.45, n_tables=16,
-            bits_per_table=4),
-        f"""WITH {_MD5_LSH},
-        cand AS (
-          SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM buckets a JOIN buckets b
-            ON a.t = b.t AND a.bucket = b.bucket
-               AND a.vec_id < b.vec_id)
-        SELECT id_a, id_b, cosine FROM (
-          SELECT c.id_a, c.id_b, ROUND({_COS_AB}, 4) AS cosine
-          FROM cand c
-          JOIN embeddings a ON a.vec_id = c.id_a
-          JOIN embeddings b ON b.vec_id = c.id_b)
-        WHERE cosine >= 0.45""")
+    # Incremental near-dup detection: the daily-crawl
+    # pattern — the NEW half of the corpus (hash-split) scored against
+    # the SEEN half via band-bucket probes only; no self-join on either
+    # side (operators/dedup.minhash_incremental_pairs_md5).  Same md5
+    # family as docs_minhash_lsh_pairs_exact, so fully oracle-exact.
+    _INCB = SM.hash_bucket_sql("doc_id", "incr-near-v1")
 
-    # ORACLE-EXACT LSH top-k: the same signature chain serving the
-    # query side — candidates share ANY (table, bucket) cell with a
-    # query, exact-cosine ranked with the deterministic
-    # (cos DESC, neighbor_id) tiebreak.  Upgrades the last rows-only
-    # ANN family member (emb_lsh_topk) with a value-exact sibling.
-    add("emb_lsh_topk_exact",
-        lambda spark, sf: S.lsh_cosine_topk_md5(
-            _emb(spark, sf), [0, 1, 2, 3, 4], k=3, n_tables=16,
-            bits_per_table=4),
-        f"""WITH {_MD5_LSH},
-        qb AS (
-          SELECT vec_id AS query_id, t, bucket FROM buckets
-          WHERE vec_id IN (0, 1, 2, 3, 4)),
-        cand AS (
-          SELECT DISTINCT q.query_id, s.vec_id AS neighbor_id
-          FROM buckets s JOIN qb q
-            ON s.t = q.t AND s.bucket = q.bucket
-               AND s.vec_id <> q.query_id),
-        scored AS (
-          SELECT c.query_id, c.neighbor_id, {_COS_AB} AS cos
-          FROM cand c
-          JOIN embeddings a ON a.vec_id = c.query_id
-          JOIN embeddings b ON b.vec_id = c.neighbor_id)
-        SELECT query_id, rank, neighbor_id, ROUND(cos, 4) AS cosine
-        FROM (
-          SELECT query_id, neighbor_id, cos,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY cos DESC, neighbor_id) AS INTEGER)
-                   AS rank
-          FROM scored)
-        WHERE rank <= 3""")
+    def _incr_near(spark, sf):
+        from ..operators.sampling import _hash_bucket
+        docs = _docs(spark, sf)
+        b = _hash_bucket(F.col("doc_id"), "incr-near-v1")
+        return D.minhash_incremental_pairs_md5(
+            docs.filter(b >= 5000), docs.filter(b < 5000),
+            n=3, num_hashes=16, bands=4, threshold=0.5)
 
-    from ..operators import dedup as D
-
-    # ORACLE-EXACT cross-split leakage on the LSH scale path (round
-    # 10): the md5 twin pipeline + the deterministic md5 split rule —
-    # the 100 TB no-collect audit shape, now with a full value oracle
-    # (the seeded-float "lsh" variant keeps its differential gate and
-    # stays the fast path).
-    _BA = SM.hash_bucket_sql("a.vec_id", "split-v1")
-    _BB = SM.hash_bucket_sql("b.vec_id", "split-v1")
-    add("emb_cross_split_leakage_lsh_exact",
-        lambda spark, sf: D.cross_split_leakage(
-            _emb(spark, sf), {"train": 0.8, "eval": 0.2},
-            threshold=0.40, method="lsh_md5", n_tables=16,
-            bits_per_table=4),
-        f"""WITH {_MD5_LSH},
-        cand AS (
-          SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM buckets a JOIN buckets b
-            ON a.t = b.t AND a.bucket = b.bucket
-               AND a.vec_id < b.vec_id),
-        pairs AS (
-          SELECT c.id_a, c.id_b,
-                 CASE WHEN {_BA} < 8000 THEN 'train' ELSE 'eval' END
-                   AS split_a,
-                 CASE WHEN {_BB} < 8000 THEN 'train' ELSE 'eval' END
-                   AS split_b,
-                 ROUND({_COS_AB}, 4) AS cosine
-          FROM cand c
-          JOIN embeddings a ON a.vec_id = c.id_a
-          JOIN embeddings b ON b.vec_id = c.id_b)
-        SELECT id_a, id_b, split_a, split_b, cosine
-        FROM pairs WHERE cosine >= 0.40 AND split_a <> split_b""")
-
-    # Decontamination ATTRIBUTION + REMOVAL (round 10): the existing
-    # docs_contamination_check reports eval-side counts; these two
-    # complete the GPT-3 appendix-C workflow — which TRAIN doc hit
-    # which eval doc, and the decontaminated train corpus after the
-    # drop rule.  Split convention: source 'src0' is the held-out
-    # eval slice (the same reference_cond the LM-scoring family uses).
-    _SH = r"""toks AS (
-          SELECT doc_id, source,
+    add("docs_incremental_near_dups", _incr_near,
+        rf"""WITH toks AS (
+          SELECT doc_id, ({_INCB} >= 5000) AS is_new,
                  regexp_split_to_array(trim(lower(text)), '\s+') AS t
           FROM documents),
         sh AS (
-          SELECT doc_id, source,
+          SELECT DISTINCT doc_id, is_new,
                  unnest(list_distinct(list_transform(
                    generate_series(1, greatest(len(t) - 2, 1)),
                    i -> array_to_string(t[i:i+2], ' ')))) AS shingle
-          FROM toks)"""
+          FROM toks),
+        hs AS (
+          SELECT doc_id, is_new,
+                 TRY_CAST(concat('0x', substr(md5(shingle), 1, 12))
+                   AS BIGINT) AS h1,
+                 TRY_CAST(concat('0x', substr(md5(concat(shingle, ':2')),
+                   1, 8)) AS BIGINT) AS h2
+          FROM sh),
+        sig AS (
+          SELECT doc_id, is_new, r.i, MIN(h1 + r.i * h2) AS m
+          FROM hs, range(16) r(i) GROUP BY 1, 2, 3),
+        bnd AS (
+          SELECT doc_id, is_new, i // 4 AS band,
+                 md5(string_agg(CAST(m AS VARCHAR), ',' ORDER BY i))
+                   AS bucket
+          FROM sig GROUP BY doc_id, is_new, i // 4),
+        cand AS (
+          SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS seen_id
+          FROM bnd a JOIN bnd b
+            ON a.band = b.band AND a.bucket = b.bucket
+          WHERE a.is_new AND NOT b.is_new),
+        eq AS (
+          SELECT c.new_id, c.seen_id,
+                 SUM(CASE WHEN sa.m = sb.m THEN 1 ELSE 0 END) AS k
+          FROM cand c
+          JOIN sig sa ON sa.doc_id = c.new_id
+          JOIN sig sb ON sb.doc_id = c.seen_id AND sb.i = sa.i
+          GROUP BY 1, 2)
+        SELECT new_id, seen_id, ROUND(k / 16.0, 4) AS est_jaccard
+        FROM eq WHERE k / 16.0 >= 0.5""")
 
-    add("docs_contamination_attribution",
-        lambda spark, sf: D.contamination_attribution(
-            _docs(spark, sf).filter(F.col("source") != "src0"),
-            _docs(spark, sf).filter(F.col("source") == "src0"),
-            n=3, min_shared=3),
-        f"""WITH {_SH}
-        SELECT a.doc_id AS train_id, b.doc_id AS test_id,
-               COUNT(*) AS shared_ngrams
-        FROM sh a JOIN sh b ON a.shingle = b.shingle
-        WHERE a.source <> 'src0' AND b.source = 'src0'
-        GROUP BY 1, 2 HAVING COUNT(*) >= 3""")
+    # Quality-priority dedup survivor: keep the
+    # highest-priority copy per duplicate text (curated source beats
+    # crawl), not the first-seen one (operators/dedup.keep_best).
+    def _keep_best(spark, sf):
+        docs = _docs(spark, sf).withColumn(
+            "src_priority",
+            F.when(F.col("source") == "src0", F.lit(2))
+             .when(F.col("source") == "src1", F.lit(1))
+             .otherwise(F.lit(0)))
+        return D.keep_best(docs, "src_priority")
 
-    add("docs_decontaminated_corpus",
-        lambda spark, sf: D.decontaminate_corpus(
-            _docs(spark, sf).filter(F.col("source") != "src0"),
-            _docs(spark, sf).filter(F.col("source") == "src0"),
-            n=3, max_shared=2),
-        f"""WITH {_SH},
-        off AS (
-          SELECT DISTINCT train_id FROM (
-            SELECT a.doc_id AS train_id
-            FROM sh a JOIN sh b ON a.shingle = b.shingle
-            WHERE a.source <> 'src0' AND b.source = 'src0'
-            GROUP BY a.doc_id, b.doc_id HAVING COUNT(*) >= 3))
-        SELECT d.doc_id, d.lang, d.source
-        FROM documents d LEFT JOIN off ON d.doc_id = off.train_id
-        WHERE d.source <> 'src0' AND off.train_id IS NULL""")
+    add("docs_dedup_keep_best", _keep_best,
+        """SELECT doc_id, md5(text) AS text_hash, src_priority
+        FROM (
+          SELECT doc_id, text,
+                 CASE source WHEN 'src0' THEN 2 WHEN 'src1' THEN 1
+                      ELSE 0 END AS src_priority,
+                 ROW_NUMBER() OVER (
+                   PARTITION BY text
+                   ORDER BY CASE source WHEN 'src0' THEN 2
+                                 WHEN 'src1' THEN 1 ELSE 0 END DESC,
+                            doc_id) AS rn
+          FROM documents)
+        WHERE rn = 1""")
 
-    # SPAN-level decontamination (surgical excision instead of the
-    # whole-doc drop): the exact stride-1 span machinery pointed
-    # across the train/eval split — k=5 windows, interval-merged into
-    # maximal spans, byte-exact span lists on both engines.
-    add("docs_contamination_spans",
-        lambda spark, sf: D.contamination_spans(
-            _docs(spark, sf).filter(F.col("source") != "src0"),
-            _docs(spark, sf).filter(F.col("source") == "src0"),
-            k=5),
-        r"""WITH t AS (
-          SELECT doc_id, source,
-                 regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+    # Distributed connected components (large-star/small-star), full
+    # oracle #1: minimal spanning CHAINS inside each source group (20
+    # groups x 25 docs -> 24-deep chains, the contraction worst case)
+    # must reunite to min(doc_id) per group — the oracle states the
+    # group identity, the engine has to earn it transitively.
+    def source_chain_components(spark, sf):
+        from ..operators import graph as G
+        from ..workload_shared import _docs
+        return G.chain_components(_docs(spark, sf), "doc_id", "source")
+
+    add("docs_source_chain_components", source_chain_components,
+        """SELECT doc_id,
+               CAST(MIN(doc_id) OVER (PARTITION BY source) AS BIGINT)
+                 AS component
+        FROM documents""")
+
+    # Full oracle #2 — transitive NEAR-dup groups over the blocked
+    # Levenshtein pair table: the engine runs CC on the pair edges;
+    # the oracle computes the same pairs in SQL and closes them with
+    # a recursive CTE (min label over the reachability set).  Only
+    # nodes that appear in a pair are labeled (callers join back for
+    # singletons), matching connected_components' contract.
+    def neardup_components(spark, sf):
+        from ..operators import dedup as D
+        from ..workload_shared import _docs
+        return D.soft_dedup_components(_docs(spark, sf), max_dist=20,
+                                       prefix_chars=80, block_width=100)
+
+    add("docs_neardup_components", neardup_components,
+        """WITH RECURSIVE b AS (
+          SELECT doc_id, lang, substring(text, 1, 80) AS pre,
+                 CAST(floor(length(text) / 100.0) AS BIGINT) AS blk_len
           FROM documents),
-        g AS (
-          SELECT doc_id, source, i - 1 AS pos,
-                 array_to_string(list_slice(toks, i, i + 4), ' ') AS sh
-          FROM t, LATERAL unnest(generate_series(1, len(toks) - 4))
-               AS u(i)),
-        ev AS (SELECT DISTINCT sh FROM g WHERE source = 'src0'),
-        mk AS (
-          SELECT g.doc_id, pos AS s, pos + 4 AS e
-          FROM g JOIN ev USING (sh) WHERE g.source <> 'src0'),
-        r AS (
-          SELECT doc_id, s, e,
-                 CASE WHEN s > coalesce(max(e) OVER (
-                          PARTITION BY doc_id ORDER BY s
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING), -2) + 1
-                      THEN 1 ELSE 0 END AS brk
-          FROM mk),
-        sp AS (SELECT doc_id, s, e,
-                      SUM(brk) OVER (PARTITION BY doc_id ORDER BY s)
-                        AS sid
-               FROM r),
-        ag AS (SELECT doc_id, sid, MIN(s) AS ss, MAX(e) AS se
-               FROM sp GROUP BY 1, 2),
-        pd AS (SELECT doc_id,
-                      CAST(COUNT(*) AS BIGINT) AS n_dup_spans,
-                      CAST(SUM(se - ss + 1) AS BIGINT) AS n_dup_tokens,
-                      string_agg(ss || '-' || se, ',' ORDER BY ss)
-                        AS dup_spans
-               FROM ag GROUP BY 1)
-        SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-               coalesce(pd.n_dup_spans, 0) AS n_dup_spans,
-               coalesce(pd.n_dup_tokens, 0) AS n_dup_tokens,
-               coalesce(pd.dup_spans, '') AS dup_spans
-        FROM t LEFT JOIN pd USING (doc_id)
-        WHERE t.source <> 'src0'""")
+        p AS (
+          SELECT a.doc_id AS u, b2.doc_id AS v
+          FROM b a JOIN b b2
+            ON a.lang = b2.lang AND a.blk_len = b2.blk_len
+           AND a.doc_id < b2.doc_id
+          WHERE levenshtein(a.pre, b2.pre) <= 20),
+        e AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
+        reach(n, m) AS (
+          SELECT u, v FROM e
+          UNION
+          SELECT r.n, e2.v FROM reach r JOIN e e2 ON r.m = e2.u),
+        lbl AS (
+          SELECT n, LEAST(n, MIN(m)) AS component
+          FROM reach GROUP BY n)
+        SELECT CAST(n AS BIGINT) AS doc_id,
+               CAST(component AS BIGINT) AS component
+        FROM lbl""")
+
+    # Soft dedup (full oracle): instead of DROPPING near-duplicates,
+    # down-weight them — every doc's training weight is
+    # 1 / |its transitive near-dup group| (exact integer ppm), the
+    # keep-information-lose-redundancy alternative to hard dedup.
+    # Composes the CC labels over the levenshtein pair table;
+    # singletons weigh 1.0 (1,000,000 ppm).
+    def softdedup_weights(spark, sf):
+        from ..operators import dedup as D
+        from ..workload_shared import _docs
+        return D.soft_dedup_weights(_docs(spark, sf), max_dist=20,
+                                    prefix_chars=80, block_width=100)
+
+    add("docs_softdedup_weights", softdedup_weights,
+        """WITH RECURSIVE b AS (
+          SELECT doc_id, lang, substring(text, 1, 80) AS pre,
+                 CAST(floor(length(text) / 100.0) AS BIGINT) AS blk_len
+          FROM documents),
+        p AS (
+          SELECT a.doc_id AS u, b2.doc_id AS v
+          FROM b a JOIN b b2
+            ON a.lang = b2.lang AND a.blk_len = b2.blk_len
+           AND a.doc_id < b2.doc_id
+          WHERE levenshtein(a.pre, b2.pre) <= 20),
+        e AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
+        reach(n, m) AS (
+          SELECT u, v FROM e
+          UNION
+          SELECT r.n, e2.v FROM reach r JOIN e e2 ON r.m = e2.u),
+        lbl AS (
+          SELECT n, LEAST(n, MIN(m)) AS component
+          FROM reach GROUP BY n),
+        sz AS (
+          SELECT component, COUNT(*) AS gsz FROM lbl GROUP BY 1)
+        SELECT d.doc_id,
+               CAST(COALESCE(sz.gsz, 1) AS INTEGER) AS group_size,
+               CAST(1000000 // COALESCE(sz.gsz, 1) AS BIGINT)
+                 AS weight_ppm
+        FROM documents d
+        LEFT JOIN lbl ON d.doc_id = lbl.n
+        LEFT JOIN sz ON lbl.component = sz.component""")

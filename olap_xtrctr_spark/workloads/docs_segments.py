@@ -1,12 +1,13 @@
-"""Segment-level corpus dedup entries (round 7): first-occurrence
-segment dedup and frequency-based boilerplate segment removal, both
-full-oracle (the 8-token non-overlapping window segmentation is
-deterministic on both engines).
+"""Segment- and span-level document dedup entries (exact substring,
+segment frequency, content-defined chunks) in batch, incremental and
+streaming form, plus the BPE tokenizer entries they share a corpus
+with.
 """
 from __future__ import annotations
 
 from ..operators import segments as SEG
-from ..workload_shared import _docs
+from ..workload_shared import _docs, drain, stage_batches, tertiles
+
 
 # Shared oracle CTE: tokenize, enumerate non-overlapping 8-token
 # windows (final short window kept), render each window back to text.
@@ -26,7 +27,6 @@ _SEG_CTE = r"""t AS (
              array_to_string(list_slice(toks, i * 8 + 1, i * 8 + 8), ' ')
                AS seg
       FROM s0)"""
-
 
 # One-shot stride-1 duplicated-span oracle (shared by the one-shot
 # and online entries: the fold contract makes them value-identical).
@@ -69,8 +69,8 @@ _DUP_SPAN_SQL = r"""WITH t AS (
                coalesce(pd.dup_spans, '') AS dup_spans
         FROM t LEFT JOIN pd USING (doc_id)"""
 
-
 _BPE_MERGES = 24
+
 _BPE_GATE_MAX_VOCAB = 200_000
 
 
@@ -97,6 +97,7 @@ def _trained_bpe(spark, sf):
     checkpoint, which cannot be recomputed; every call builds a new
     frame from the kept rows."""
     from ..operators import bpe as B
+    from ..session import release_local_checkpoint
     merges, syms = B.gated_train_bpe(
         _docs(spark, sf), num_merges=_BPE_MERGES,
         gate_max_vocab=_BPE_GATE_MAX_VOCAB)
@@ -105,14 +106,13 @@ def _trained_bpe(spark, sf):
     def local_syms():
         if not kept:
             kept.append(syms.collect())
-            B.release_local_checkpoint(syms._sgr_ckpt)
+            release_local_checkpoint(syms._sgr_ckpt)
         return spark.createDataFrame(kept[0], syms.schema)
 
     return merges, local_syms
 
 
 def register(add) -> None:
-
     # corpus-wide first-occurrence segment dedup (CCNet / Lee et al.
     # line dedup): a segment survives only at its earliest
     # (doc_id, position); later occurrences are cut from their docs
@@ -193,21 +193,15 @@ def register(add) -> None:
     def seg_dedup_incr(spark, sf):
         from functools import reduce
 
-        from pyspark.sql import functions as F
-
         from ..operators import segments as SEG
         docs = _docs(spark, sf)
-        b1, b2 = docs.agg(
-            F.expr("percentile(doc_id, 0.3333)"),
-            F.expr("percentile(doc_id, 0.6667)")).first()
-        batches = [docs.filter(F.col("doc_id") <= b1),
-                   docs.filter((F.col("doc_id") > b1)
-                               & (F.col("doc_id") <= b2)),
-                   docs.filter(F.col("doc_id") > b2)]
+        batches = [docs.filter(c) for c in tertiles(docs, "doc_id")]
         seen, outs = None, []
         for b in batches:
             res, seen = SEG.segment_dedup_incremental(b, seen,
                                                       seg_tokens=8)
+            # superseded checkpoints stay: each res reads its batch's
+            # seen lazily, and the res frames are unioned below
             seen = seen.localCheckpoint()
             outs.append(res)
         return reduce(lambda a, c: a.unionByName(c), outs)
@@ -261,27 +255,20 @@ def register(add) -> None:
     def dup_spans_incr(spark, sf):
         from functools import reduce
 
-        from pyspark.sql import functions as F
-
         from ..operators import segments as SEG
         docs = _docs(spark, sf)
-        b1, b2 = docs.agg(
-            F.expr("percentile(doc_id, 0.3333)"),
-            F.expr("percentile(doc_id, 0.6667)")).first()
-        batches = [docs.filter(F.col("doc_id") <= b1),
-                   docs.filter((F.col("doc_id") > b1)
-                               & (F.col("doc_id") <= b2)),
-                   docs.filter(F.col("doc_id") > b2)]
+        batches = [docs.filter(c) for c in tertiles(docs, "doc_id")]
         seen, outs = None, []
         for b in batches:
             res, seen = SEG.duplicate_spans_incremental(b, seen, k=8)
+            # superseded checkpoints stay: each res reads its batch's
+            # seen lazily, and the res frames are unioned below
             seen = seen.localCheckpoint()
             outs.append(res)
         return reduce(lambda a, c: a.unionByName(c), outs)
 
     add("docs_duplicate_spans_incremental", dup_spans_incr,
         _DUP_SPAN_SQL)
-
 
     # STREAMING exact-substring dedup at ingestion: an availableNow file
     # stream (one id-ordered batch file per micro-batch) folds each
@@ -291,54 +278,16 @@ def register(add) -> None:
     # are written idempotently (overwrite by batch id).  With id-ordered
     # arrival the fold equals the one-shot operator, so the driver
     # certifies the whole stream→store→report chain against the same
-    # byte-exact span oracle.
-    def _span_stream_src(spark, sf):
-        """Build (once per dataset signature) the 3-file id-ordered
-        batch source both span-dedup streams read; returns the root
-        dir.  A signature change wipes root — sources, checkpoints,
-        stores and reports of BOTH entries."""
-        import os
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        docs = _docs(spark, sf)
-        sig = str(os.path.getsize(f"{sf}/documents.parquet"))
-        root = os.path.join("/tmp", "olap_xtrctr_span_stream",
-                            os.path.basename(os.path.normpath(sf)))
-        marker = os.path.join(root, "_DEMO_SRC")
-        if not (os.path.exists(marker)
-                and open(marker).read().strip() == sig):
-            shutil.rmtree(root, ignore_errors=True)
-            os.makedirs(os.path.join(root, "src"), exist_ok=True)
-            b1, b2 = docs.agg(
-                F.expr("percentile(doc_id, 0.3333)"),
-                F.expr("percentile(doc_id, 0.6667)")).first()
-            conds = [F.col("doc_id") <= b1,
-                     (F.col("doc_id") > b1) & (F.col("doc_id") <= b2),
-                     F.col("doc_id") > b2]
-            for i, cond in enumerate(conds):
-                tmp = os.path.join(root, f"_tmp{i}")
-                docs.filter(cond).coalesce(1).write.mode(
-                    "overwrite").parquet(tmp)
-                part = next(f for f in os.listdir(tmp)
-                            if f.startswith("part-")
-                            and f.endswith(".parquet"))
-                dst = os.path.join(root, "src", f"batch{i}.parquet")
-                shutil.move(os.path.join(tmp, part), dst)
-                shutil.rmtree(tmp)
-                # explicit mtimes pin the file source's arrival order
-                os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            with open(marker, "w") as fh:
-                fh.write(sig)
-        return root
-
+    # byte-exact span oracle.  Both span-dedup streams read one staged
+    # root, so a source change wipes the checkpoints, stores and reports
+    # of both.
     def stream_span_dedup(spark, sf):
         import os
 
         from ..operators import segments as SEG
         docs = _docs(spark, sf)
-        root = _span_stream_src(spark, sf)
+        root = stage_batches("span_stream", sf, docs,
+                             lambda d: tertiles(d, "doc_id"))
         out = os.path.join(root, "out")
         state: dict = {"seen": None}
 
@@ -356,22 +305,14 @@ def register(add) -> None:
             seen.write.mode("overwrite").parquet(store_dir)
             state["seen"] = bspark.read.parquet(store_dir)
 
-        q = (spark.readStream.schema(docs.schema)
-             .option("maxFilesPerTrigger", 1)
-             .parquet(os.path.join(root, "src"))
-             .writeStream.foreachBatch(fold)
-             .option("checkpointLocation", os.path.join(root, "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+        drain(spark, docs.schema, root, fold, "ckpt")
         return spark.read.parquet(os.path.join(out, "report_b*"))
 
     add("docs_stream_span_dedup", stream_span_dedup, _DUP_SPAN_SQL)
 
-    # STREAMING ingestion over the BUCKETED on-disk gram store
-    # (VERDICT r8 task 5) — the 100 TB shape end-to-end: foreachBatch
-    # folds each micro-batch through
-    # duplicate_spans_incremental_bucketed, whose store is a parquet
+    # STREAMING ingestion over the BUCKETED on-disk gram store — the
+    # 100 TB shape end-to-end: foreachBatch folds each micro-batch
+    # through duplicate_spans_incremental_bucketed, whose store is a parquet
     # directory partitioned on pmod(xxhash64(gram), n_buckets); per
     # batch the store write is O(new grams) appends and the probe
     # touches only the batch's _bucket= partitions (the monolithic
@@ -388,7 +329,8 @@ def register(add) -> None:
 
         from ..operators import segments as SEG
         docs = _docs(spark, sf)
-        root = _span_stream_src(spark, sf)
+        root = stage_batches("span_stream", sf, docs,
+                             lambda d: tertiles(d, "doc_id"))
         out = os.path.join(root, "out_bucketed")
         store = os.path.join(out, "gram_store")
         os.makedirs(out, exist_ok=True)
@@ -403,15 +345,7 @@ def register(add) -> None:
                 os.path.join(out, f"report_b{batch_id}"))
             open(marker, "w").close()
 
-        q = (spark.readStream.schema(docs.schema)
-             .option("maxFilesPerTrigger", 1)
-             .parquet(os.path.join(root, "src"))
-             .writeStream.foreachBatch(fold)
-             .option("checkpointLocation", os.path.join(root,
-                                                        "ckpt_bucketed"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+        drain(spark, docs.schema, root, fold, "ckpt_bucketed")
         return spark.read.parquet(os.path.join(out, "report_b*"))
 
     add("docs_stream_span_dedup_bucketed", stream_span_dedup_bucketed,
@@ -466,14 +400,7 @@ def register(add) -> None:
         FROM t LEFT JOIN kept ON kept.doc_id = t.doc_id
         GROUP BY t.doc_id, len(t.toks)""")
 
-
-def register_r8(add) -> None:
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ siblings)
-
-    from ..operators import segments as SEG
-    from ..workload_shared import _docs
-
-    # CONTENT-DEFINED chunk dedup (round 8): boundaries at tokens whose
+    # CONTENT-DEFINED chunk dedup: boundaries at tokens whose
     # md5-60bit % 8 == 0, so chunking re-synchronizes after insertions
     # — the shift-robust sibling of the fixed-grid docs_segment_dedup
     # (robustness pinned in tests/test_segments.py).  Fully md5-keyed,

@@ -1,31 +1,30 @@
-"""Documents: text analysis / quality / sampling entries.
-
-Entry builders moved VERBATIM from ``workload.py`` (round-6 split);
-build order inside this module is unchanged.
+"""Per-document text entries: tokenization and text statistics, language
+id, markup/PII scrubbing, quality scores and filters, sampling and
+sequence packing over the ``documents`` table.
 """
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
+from ..operators import frozen_codebooks as FC
 from ..operators import sampling as SM
 from ..operators import text as TX
+from ..operators.fixedlog import ladder_sql
 from ..workload_shared import _docs
 
-from ..operators.fixedlog import ladder_sql
 
 # Fixed-op ln oracle ladders for the LM family (libm-free;
 # operators/fixedlog.py) — built once at import.
 _CTX_LADDER = ladder_sql("SELECT w, c1, v FROM c1, vocab",
                          lns=[("c1 + v", "lnv")])
+
 _SEEN_LADDER = ladder_sql("SELECT bg, c12 FROM c12",
                           lns=[("c12 + 1", "lnv")])
+
 _OOV_LADDER = ladder_sql("SELECT v FROM vocab", lns=[("v", "lnv")])
 
 
 def register(add) -> None:
-    # ================= extensions: text analysis ==========================
-
     add("docs_token_stats",
         lambda spark, sf: TX.token_stats(_docs(spark, sf)),
         r"""SELECT doc_id,
@@ -190,21 +189,6 @@ def register(add) -> None:
                 i -> toks[i] || ' ' || toks[i+1]))) * 1.0
               / greatest(len(toks) - 1, 1) <= 0.2501""")
 
-    add("docs_top_tokens",
-        lambda spark, sf: TX.top_tokens(_docs(spark, sf), k=20),
-        r"""WITH toks AS (
-          SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-                 AS token
-          FROM documents),
-        counts AS (
-          SELECT token, COUNT(*) AS n FROM toks
-          WHERE token <> '' GROUP BY token)
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY n DESC, token) AS INTEGER)
-                 AS rank, token, n
-        FROM counts
-        ORDER BY n DESC, token
-        LIMIT 20""")
-
     add("docs_fingerprint",
         lambda spark, sf: TX.fingerprint(_docs(spark, sf)),
         """SELECT doc_id,
@@ -277,79 +261,6 @@ def register(add) -> None:
                    '&apos;', ''''), '&amp;', '&'),
                  '\s+', ' ', 'g'))) AS clean_len
         FROM documents""")
-
-    add("docs_token_familiarity",
-        lambda spark, sf: TX.token_familiarity(_docs(spark, sf)),
-        r"""WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-                   AS token
-          FROM documents),
-        vocab AS (
-          SELECT token, COUNT(*) AS tok_freq FROM toks GROUP BY token)
-        SELECT doc_id, COUNT(*) AS n_tokens,
-               CAST(SUM(tok_freq) AS BIGINT) AS familiarity_sum
-        FROM toks JOIN vocab USING (token)
-        GROUP BY doc_id""")
-
-    def contamination(spark, sf):
-        from ..operators.sampling import _hash_bucket
-        docs = _docs(spark, sf)
-        b = _hash_bucket(F.col("doc_id"), "contam-v1")
-        test = docs.filter(b < 1000)          # held-out 10%
-        train = docs.filter(b >= 1000)
-        return D.contamination_check(train, test)
-
-    _CB = SM.hash_bucket_sql("doc_id", "contam-v1")
-
-    # eval-leakage detector: distinct-shingle vocabulary of TRAIN joined
-    # against the held-out TEST split's shingles; exact integer outputs
-    add("docs_contamination_check", contamination,
-        rf"""WITH toks AS (
-          SELECT doc_id, {_CB} AS b,
-                 regexp_split_to_array(trim(lower(text)), '\s+') AS t
-          FROM documents),
-        sh AS (
-          SELECT doc_id, b,
-                 unnest(list_distinct(list_transform(
-                   generate_series(1, greatest(len(t) - 2, 1)),
-                   i -> array_to_string(t[i:i+2], ' ')))) AS shingle
-          FROM toks),
-        vocab AS (SELECT DISTINCT shingle FROM sh WHERE b >= 1000)
-        SELECT s.doc_id, COUNT(*) AS n_shingles,
-               CAST(SUM(CASE WHEN v.shingle IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_contaminated
-        FROM sh s LEFT JOIN vocab v ON s.shingle = v.shingle
-        WHERE s.b < 1000
-        GROUP BY s.doc_id""")
-
-    def mixing(spark, sf):
-        return D.mix_corpus(_docs(spark, sf),
-                            {"src0": 0.6, "src1": 0.3, "src2": 0.1},
-                            token_budget=20_000) \
-            .select("doc_id", "source")
-
-    _MB = SM.hash_bucket_sql("doc_id", "mix-v1")
-
-    # budgeted domain mixing: per-source rate = budget*weight/source_tokens
-    # derived in-plan, keep decision by the deterministic id hash
-    add("docs_mix_corpus", mixing,
-        rf"""WITH ntok AS (
-          SELECT doc_id, source,
-                 length(regexp_split_to_array(trim(text), '\s+')) AS n_tok
-          FROM documents),
-        totals AS (
-          SELECT source, SUM(n_tok) AS stok FROM ntok GROUP BY source),
-        rates AS (
-          SELECT source,
-                 LEAST(10000, CAST(FLOOR(20000.0 *
-                   CASE source WHEN 'src0' THEN 0.6 WHEN 'src1' THEN 0.3
-                        WHEN 'src2' THEN 0.1 ELSE 0.0 END
-                   * 10000 / stok) AS BIGINT)) AS rate_b
-          FROM totals)
-        SELECT d.doc_id, d.source
-        FROM documents d JOIN rates r ON d.source = r.source
-        WHERE {_MB} < r.rate_b""")
 
     # ---- deterministic sampling / splitting (training-data mixing) -------
     # All hash-derived (md5(id:salt)), so the DuckDB oracle recomputes the
@@ -424,66 +335,6 @@ def register(add) -> None:
                CAST(ROW_NUMBER() OVER (PARTITION BY key % 8
                     ORDER BY key, doc_id) AS BIGINT) AS shard_pos
         FROM keyed""")
-
-    # frequency vocabulary with deterministic ids (count desc, token) —
-    # TakeOrderedAndProject, never a full-vocab sort
-    add("docs_vocab_build",
-        lambda spark, sf: TX.build_vocab(_docs(spark, sf), max_size=500,
-                                         min_count=2),
-        r"""WITH toks AS (
-          SELECT unnest(regexp_split_to_array(trim(lower(text)),
-                 '\s+')) AS token
-          FROM documents),
-        counts AS (
-          SELECT token, COUNT(*) AS n FROM toks
-          WHERE token <> '' GROUP BY 1 HAVING COUNT(*) >= 2)
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY n DESC, token) - 1
-                    AS BIGINT) AS token_id,
-               token, CAST(n AS BIGINT) AS n
-        FROM counts ORDER BY n DESC, token LIMIT 500""")
-
-    # "the best 20k tokens": greedy quality-ordered prefix under a hard
-    # token budget; integer milli scores make the boundary engine-exact
-    def _budget_fill(spark, sf):
-        qs = TX.quality_score(_docs(spark, sf))
-        scored = qs.select(
-            "doc_id", "n_tokens",
-            F.round(F.col("quality_score") * 1000).cast("bigint")
-             .alias("score_milli"))
-        return SM.token_budget_fill(scored, budget_tokens=20_000)
-
-    add("docs_token_budget_fill", _budget_fill,
-        r"""WITH q AS (
-          SELECT doc_id,
-            len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-            greatest(length(text), 1) AS n_chars,
-            CAST(len(regexp_extract_all(lower(text),
-              '\b(the|and|of|to|in|is)\b')) AS INTEGER) AS stop_hits,
-            CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                 AS INTEGER) AS punct
-          FROM documents),
-        scored AS (
-          -- two-stage rounding mirrors the Spark side exactly: the
-          -- quality score is rounded to 4 decimals FIRST (that is the
-          -- operator's published value), then scaled to milli
-          SELECT doc_id, n_tokens,
-            CAST(ROUND(ROUND((
-              (CASE WHEN n_tokens >= 10 AND n_tokens <= 5000
-                    THEN 0.4 ELSE 0.0 END)
-              + least(stop_hits / greatest(n_tokens, 1) * 2.0, 0.4)
-              - least(punct / n_chars * 5.0, 0.2)
-              + (CASE WHEN n_chars / greatest(n_tokens, 1) >= 3.0
-                       AND n_chars / greatest(n_tokens, 1) <= 12.0
-                      THEN 0.2 ELSE 0.0 END)), 4) * 1000)
-              AS BIGINT) AS score_milli
-          FROM q),
-        cum AS (
-          SELECT *, SUM(n_tokens) OVER (ORDER BY score_milli DESC,
-                                        doc_id) AS cum_tokens
-          FROM scored)
-        SELECT doc_id, n_tokens, score_milli,
-               CAST(cum_tokens AS BIGINT) AS cum_tokens
-        FROM cum WHERE cum_tokens <= 20000""")
 
     _SBUCKET = SM.hash_bucket_sql("doc_id", "strat-v1")
 
@@ -561,41 +412,6 @@ def register(add) -> None:
             ORDER BY md5(concat(CAST(doc_id AS VARCHAR), ':grpk-v1')))
             <= 10""")
 
-    # tokenizer-prep vocab coverage: per-doc OOV mass against the
-    # top-30 corpus vocabulary, exact integers
-    add("docs_vocab_coverage",
-        lambda spark, sf: TX.vocab_coverage(_docs(spark, sf),
-                                            vocab_size=30),
-        r"""WITH toks AS (
-          SELECT doc_id, unnest(regexp_split_to_array(
-            trim(lower(text)), '\s+')) AS token
-          FROM documents),
-        ne AS (SELECT * FROM toks WHERE token <> ''),
-        vocab AS (
-          SELECT token FROM ne GROUP BY token
-          ORDER BY COUNT(*) DESC, token LIMIT 30)
-        SELECT doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_tokens,
-          CAST(SUM(CASE WHEN token NOT IN (SELECT token FROM vocab)
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-        FROM ne GROUP BY doc_id""")
-
-    # cross-dump duplication diagnostic (mixing-weight input): per source,
-    # docs whose fingerprint also appears under another source
-    add("docs_cross_source_dup",
-        lambda spark, sf: D.cross_source_duplication(_docs(spark, sf)),
-        r"""WITH f AS (
-          SELECT doc_id, source,
-                 md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-          FROM documents),
-        s AS (SELECT fp, COUNT(DISTINCT source) AS n_sources
-              FROM f GROUP BY fp)
-        SELECT f.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN s.n_sources > 1 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_cross_dup
-        FROM f JOIN s USING (fp)
-        GROUP BY f.source""")
-
     # per-source type-token ratio (integer milli-units for bit-equality)
     add("docs_lexical_diversity",
         lambda spark, sf: TX.lexical_diversity(_docs(spark, sf)),
@@ -610,73 +426,6 @@ def register(add) -> None:
                CAST((COUNT(*) * 1000) // SUM(n) AS BIGINT) AS ttr_milli
         FROM per GROUP BY source""")
 
-    # corpus composition: shared CTE chain for the distribution-shift and
-    # distinctive-terms diagnostics (exact cross-multiplied integers —
-    # HUGEINT on the DuckDB side mirrors Spark's DECIMAL(19,0) lane)
-    _JOINT_SQL = r"""WITH toks AS (
-          SELECT source, unnest(regexp_split_to_array(
-            trim(lower(text)), '\s+')) AS token
-          FROM documents),
-        ne AS (SELECT * FROM toks WHERE token <> ''),
-        per AS (SELECT source, token, CAST(COUNT(*) AS HUGEINT) AS c
-                FROM ne GROUP BY 1, 2),
-        corpus AS (SELECT token, SUM(c) AS ct FROM per GROUP BY 1),
-        src AS (SELECT source, SUM(c) AS ts FROM per GROUP BY 1),
-        tot AS (SELECT SUM(ct) AS t FROM corpus),
-        j AS (SELECT p.source, p.token, p.c, co.ct, s.ts, tot.t
-              FROM per p JOIN corpus co USING (token)
-              JOIN src s USING (source), tot)"""
-
-    add("docs_source_tv_distance",
-        lambda spark, sf: TX.source_tv_distance(_docs(spark, sf)),
-        _JOINT_SQL + """,
-        agg AS (SELECT source, SUM(abs(c*t - ct*ts)) AS abs_part,
-                       SUM(ct) AS cov, any_value(ts) AS ts,
-                       any_value(t) AS t
-                FROM j GROUP BY source)
-        SELECT source, CAST(ts AS BIGINT) AS n_tokens,
-               CAST((500 * (abs_part + ts*(t - cov))) // (ts * t)
-                    AS BIGINT) AS tv_milli
-        FROM agg""")
-
-    add("docs_distinctive_terms",
-        lambda spark, sf: TX.distinctive_terms(_docs(spark, sf),
-                                               top_n=5, min_count=5),
-        _JOINT_SQL + """,
-        lift AS (SELECT source, token, c,
-                        CAST((c * t * 1000000) // (ct * ts) AS BIGINT)
-                          AS lift_ppm
-                 FROM j WHERE c >= 5),
-        r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY source
-                ORDER BY lift_ppm DESC, token ASC) AS rn FROM lift)
-        SELECT source, token, CAST(c AS BIGINT) AS n, lift_ppm,
-               CAST(rn AS INTEGER) AS rn
-        FROM r WHERE rn <= 5""")
-
-    def incr_dedup(spark, sf):
-        docs = _docs(spark, sf)
-        from ..operators.sampling import _hash_bucket
-        b = _hash_bucket(F.col("doc_id"), "batch-v1")
-        seen = docs.filter(b % 2 == 0)
-        new = docs.filter(b % 2 == 1)
-        return SM.incremental_dedup(new, seen).select("doc_id", "lang")
-
-    _BB = SM.hash_bucket_sql("doc_id", "batch-v1")
-
-    add("docs_incremental_dedup", incr_dedup,
-        f"""WITH fp AS (
-          SELECT doc_id, lang, {_BB} % 2 AS batch,
-                 md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))
-                   AS fingerprint
-          FROM documents)
-        SELECT doc_id, lang FROM fp
-        WHERE batch = 1
-          AND fingerprint NOT IN (SELECT fingerprint FROM fp
-                                  WHERE batch = 0)
-          AND doc_id = (SELECT MIN(doc_id) FROM fp f2
-                        WHERE f2.batch = 1
-                          AND f2.fingerprint = fp.fingerprint)""")
-
     add("docs_length_histogram",
         lambda spark, sf: SM.length_histogram(_docs(spark, sf)),
         """SELECT CAST(n_chars // 200 AS BIGINT) * 200 AS bucket_lo,
@@ -684,28 +433,7 @@ def register(add) -> None:
         FROM documents
         GROUP BY 1""")
 
-    add("docs_exact_dup_groups",
-        lambda spark, sf: D.exact_dup_groups(_docs(spark, sf)),
-        """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id,
-               COUNT(*) AS copies
-        FROM documents
-        GROUP BY text""")
-
-    def exact_dedup_keep(spark, sf):
-        return D.exact_dedup(_docs(spark, sf), ["text"], "doc_id") \
-            .select("doc_id", F.md5(F.encode(F.col("text"), "UTF-8"))
-                    .alias("text_hash"))
-
-    # deterministic survivor choice: first doc_id per duplicate text group
-    add("docs_exact_dedup_keep", exact_dedup_keep,
-        """SELECT doc_id, md5(text) AS text_hash
-        FROM (SELECT doc_id, text,
-                     ROW_NUMBER() OVER (PARTITION BY text
-                                        ORDER BY doc_id) AS rn
-              FROM documents)
-        WHERE rn = 1""")
-
-    # ---- trained quality classifier (round 7, beyond-reference) -------
+    # ---- trained quality classifier (beyond-reference) -------
     # The GPT-3-style classifier filter: hashed-BoW logistic regression
     # trained on weak labels from the oracle-green quality heuristic,
     # holdout-AUC-gated INSIDE the entry (raises below 0.75 — a
@@ -886,3 +614,136 @@ def register(add) -> None:
                     WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
         FROM ranked""")
 
+    # unicode normalization: a combining-acute suffix is synthesized
+    # in-plan on BOTH engines, so the hashes only match if NFC really
+    # composed it (DuckDB ships nfc_normalize; NFKC has no DuckDB
+    # counterpart and stays pytest-covered)
+    def unicode_norm(spark, sf):
+        from ..operators.text import normalize_unicode
+        d = _docs(spark, sf).withColumn(
+            "text", F.concat(F.col("text"), F.lit(" café")))
+        return (normalize_unicode(d, form="NFC")
+                .select("doc_id",
+                        F.md5(F.encode(F.col("text_norm"), "UTF-8"))
+                         .alias("norm_hash"),
+                        F.length("text_norm").cast("bigint")
+                         .alias("n_chars_norm")))
+
+    add("docs_unicode_normalize", unicode_norm,
+        """SELECT doc_id,
+               md5(nfc_normalize(text || ' cafe' || chr(769)))
+                 AS norm_hash,
+               CAST(length(nfc_normalize(text || ' cafe' || chr(769)))
+                    AS BIGINT) AS n_chars_norm
+        FROM documents""")
+
+    # intra-corpus boilerplate: verbatim 8-gram spans shared by >= 3
+    # distinct documents (RefinedWeb-style repeated-span detector)
+    add("docs_boilerplate_ngrams",
+        lambda spark, sf: TX.boilerplate_ngrams(_docs(spark, sf),
+                                                n=8, min_docs=3),
+        r"""WITH t AS (
+          SELECT doc_id,
+                 regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+          FROM documents),
+        g AS (
+          SELECT doc_id,
+                 unnest(list_transform(
+                   range(1, greatest(len(toks) - 7, 0) + 1),
+                   i -> array_to_string(toks[i : i + 7], ' '))) AS ngram
+          FROM t)
+        SELECT ngram, COUNT(DISTINCT doc_id) AS n_docs,
+               COUNT(*) AS n_occurrences
+        FROM g GROUP BY ngram
+        HAVING COUNT(DISTINCT doc_id) >= 3""")
+
+    # the actionable boilerplate op: drop documents that are MOSTLY
+    # corpus-shared 8-gram spans (template pages that no exact dedup
+    # catches); short docs with no 8-grams are kept
+    add("docs_boilerplate_filter",
+        lambda spark, sf: TX.boilerplate_filter(_docs(spark, sf),
+                                                n=8, min_docs=3,
+                                                max_frac=0.5),
+        r"""WITH t AS (
+          SELECT doc_id,
+                 regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+          FROM documents),
+        g AS (
+          SELECT doc_id,
+                 unnest(list_transform(
+                   range(1, greatest(len(toks) - 7, 0) + 1),
+                   i -> array_to_string(toks[i : i + 7], ' '))) AS ngram
+          FROM t),
+        boiler AS (
+          SELECT ngram FROM g GROUP BY ngram
+          HAVING COUNT(DISTINCT doc_id) >= 3),
+        per_doc AS (
+          SELECT g.doc_id, COUNT(*) AS n_grams,
+                 CAST(SUM(CASE WHEN b.ngram IS NOT NULL
+                               THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler
+          FROM g LEFT JOIN boiler b USING (ngram)
+          GROUP BY g.doc_id)
+        SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
+        FROM documents d LEFT JOIN per_doc p USING (doc_id)
+        WHERE p.doc_id IS NULL OR p.n_boiler <= 0.5 * p.n_grams""")
+
+    _ENT_LC = ladder_sql("SELECT c FROM dc", lns=[("c", "lnv")])
+    _ENT_LN = ladder_sql("SELECT n FROM dn", lns=[("n", "lnv")])
+    add("docs_char_entropy",
+        lambda spark, sf: __import__(
+            "olap_xtrctr_spark.operators.text", fromlist=["char_entropy"]
+        ).char_entropy(_docs(spark, sf)),
+        rf"""WITH chars AS (
+          SELECT doc_id, unnest(string_split(text, '')) AS ch
+          FROM documents),
+        counts AS (
+          SELECT doc_id, ch, COUNT(*) AS c
+          FROM chars WHERE ch != '' GROUP BY 1, 2),
+        tot AS (SELECT doc_id, SUM(c) AS n FROM counts GROUP BY 1),
+        dc AS (SELECT DISTINCT c FROM counts),
+        dn AS (SELECT DISTINCT n FROM tot),
+        lc AS (SELECT c, CAST(ROUND(lnv * 1e6) AS BIGINT) AS lc_micro
+               FROM ({_ENT_LC})),
+        lnn AS (SELECT n, CAST(ROUND(lnv * 1e6) AS BIGINT) AS ln_micro
+                FROM ({_ENT_LN})),
+        s AS (SELECT counts.doc_id,
+                     CAST(SUM(c * lc_micro) AS BIGINT) AS clc
+              FROM counts JOIN lc USING (c) GROUP BY 1)
+        SELECT t.doc_id, CAST(t.n AS BIGINT) AS n_chars,
+               CAST((lnn.ln_micro * t.n - s.clc) // t.n AS BIGINT)
+                 AS entropy_micro
+        FROM tot t JOIN lnn ON lnn.n = t.n
+        JOIN s ON s.doc_id = t.doc_id""")
+
+    # Frozen quality classifier: the value-exact sibling of the
+    # rows-only hashed-BoW docs_quality_classifier — an exact int64
+    # logit over the four oracle-exact text stats, weights frozen by
+    # the generator.  keep ⇔ logit > 0 on both engines bit-for-bit.
+    def quality_classifier_exact(spark, sf):
+        from ..operators.classifier import quality_classifier_frozen
+        from ..workload_shared import _docs
+        return quality_classifier_frozen(_docs(spark, sf))
+
+    _qw = FC.QUALITY_LR_WEIGHTS_I
+    _QCL_SQL = rf"""WITH q AS (
+          SELECT doc_id,
+            CAST(len(regexp_split_to_array(trim(text), '\s+'))
+                 AS BIGINT) AS n_tokens,
+            CAST(greatest(length(text), 1) AS BIGINT) AS n_chars,
+            CAST(len(regexp_extract_all(lower(text),
+              '\b(the|and|of|to|in|is)\b')) AS BIGINT) AS stop_hits,
+            CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
+                 AS BIGINT) AS punct
+          FROM documents)
+        SELECT doc_id,
+          CAST(({_qw[0]}) * n_tokens + ({_qw[1]}) * n_chars
+             + ({_qw[2]}) * stop_hits + ({_qw[3]}) * punct
+             + ({FC.QUALITY_LR_BIAS_I}) AS BIGINT) AS logit_u,
+          CASE WHEN ({_qw[0]}) * n_tokens + ({_qw[1]}) * n_chars
+                  + ({_qw[2]}) * stop_hits + ({_qw[3]}) * punct
+                  + ({FC.QUALITY_LR_BIAS_I}) > 0
+               THEN 1 ELSE 0 END AS keep
+        FROM q"""
+
+    add("docs_quality_classifier_exact", quality_classifier_exact,
+        _QCL_SQL)

@@ -1,27 +1,38 @@
-"""Events: batch analytics + structured-streaming entries (part 1).
-
-Entry builders moved VERBATIM from the round-6 ``workloads/events.py``
-(round-7 split, VERDICT r6 task 7); build order inside this module is
-unchanged.
+"""Batch event analytics entries: hourly rollups, drift and anomaly
+reports, sessions, funnels, cohorts, segments and distributions over
+the ``events`` table.
 """
 from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
 from ..operators import sampling as SM
-from ..operators import text as TX
+from ..session import load_events as _events
 from ..streaming import events as EV
-from ..workload_shared import SUM_D, _docs
-
+from ..workload_shared import SUM_D
 
 
 def register(add) -> None:
-    # ================= extensions: events / streaming =====================
-
-    from ..session import events_schema as _events_schema
-    from ..session import load_events as _events
+    # GROUPING SETS over events (hour-of-day × type, each-alone, grand
+    # total) — the cube-style subtotal lattice on the stream table
+    add("events_grouping_sets",
+        lambda spark, sf: (_events(spark, sf)
+            .withColumn("hod", F.hour("ts"))
+            .groupingSets([["hod", "event_type"], ["hod"],
+                           ["event_type"], []], "hod", "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.coalesce(F.col("hod"), F.lit(-1)).alias("hod"),
+                    F.coalesce("event_type", F.lit("All"))
+                     .alias("event_type"),
+                    F.col("n").cast("bigint").alias("n"))),
+        """SELECT COALESCE(hod, -1) AS hod,
+               COALESCE(event_type, 'All') AS event_type,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM (SELECT CAST(EXTRACT(hour FROM ts) AS INTEGER) AS hod,
+                     event_type FROM events)
+        GROUP BY GROUPING SETS ((hod, event_type), (hod),
+                                (event_type), ())""")
 
     add("events_hourly_rollup",
         lambda spark, sf: EV.hourly_rollup(_events(spark, sf)),
@@ -235,38 +246,6 @@ def register(add) -> None:
                CAST(COUNT(*) AS BIGINT) AS n_events
         FROM r GROUP BY user_id, run_id""")
 
-    def stream_hourly(spark, sf):
-        return EV.replay_hourly_rollup(spark, sf, _events_schema(spark, sf))
-
-    # Structured Streaming end-to-end (readStream → watermark → window →
-    # availableNow replay): bounded replay of the events table equals the
-    # batch rollup, so the SAME SQL oracle applies to the streaming path.
-    add("events_stream_hourly", stream_hourly,
-        f"""SELECT date_trunc('hour', ts) AS hour, event_type,
-               COUNT(*) AS n_events,
-               {SUM_D('value')} AS sum_value
-        FROM events
-        GROUP BY 1, 2""")
-
-    # streaming OHLC replay equals the batch bars -> same oracle as
-    # events_ohlc_hourly
-    add("events_stream_ohlc", lambda spark, sf: EV.replay_ohlc_hourly(
-            spark, sf, _events_schema(spark, sf)),
-        """WITH r AS (
-          SELECT date_trunc('hour', ts) AS hour, event_type, value,
-                 ROW_NUMBER() OVER (PARTITION BY date_trunc('hour', ts),
-                   event_type ORDER BY ts, event_id) AS rn_a,
-                 ROW_NUMBER() OVER (PARTITION BY date_trunc('hour', ts),
-                   event_type ORDER BY ts DESC, event_id DESC) AS rn_d
-          FROM events)
-        SELECT hour, event_type,
-               ROUND(MAX(CASE WHEN rn_a = 1 THEN value END), 4) AS open,
-               ROUND(MAX(CASE WHEN rn_d = 1 THEN value END), 4) AS close,
-               ROUND(MIN(value), 4) AS low,
-               ROUND(MAX(value), 4) AS high,
-               COUNT(*) AS n_events
-        FROM r GROUP BY 1, 2""")
-
     add("events_sessionize",
         lambda spark, sf: EV.sessionize(_events(spark, sf)),
         """WITH secs AS (
@@ -286,47 +265,6 @@ def register(add) -> None:
                CAST(SUM(new_session) AS BIGINT) AS n_sessions,
                COUNT(*) AS n_events
         FROM flagged
-        GROUP BY user_id""")
-
-    def stream_sessions(spark, sf):
-        sess = EV.replay_sessionize(spark, sf, _events_schema(spark, sf),
-                                    second_resolution=True)
-        return (sess.groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n_sessions")))
-
-    # stateful streaming sessionization (session_window merging state);
-    # merging is boundary-INCLUSIVE, so the 30-min gap over second-truncated
-    # timestamps equals the batch strict-> convention -> oracle-checkable
-    add("events_stream_sessionize", stream_sessions,
-        """WITH secs AS (
-          SELECT user_id, event_id, ts,
-                 CAST(floor(epoch(ts)) AS BIGINT) AS sec
-          FROM events),
-        flagged AS (
-          SELECT user_id,
-                 CASE WHEN sec - lag(sec) OVER
-                          (PARTITION BY user_id ORDER BY ts, event_id)
-                      IS NULL THEN 1
-                      WHEN sec - lag(sec) OVER
-                          (PARTITION BY user_id ORDER BY ts, event_id) > 1800
-                      THEN 1 ELSE 0 END AS new_session
-          FROM secs)
-        SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions
-        FROM flagged
-        GROUP BY user_id""")
-
-    def stream_user_totals(spark, sf):
-        from ..streaming.stateful import replay_user_totals
-        return replay_user_totals(spark, sf, _events_schema(spark, sf))
-
-    # custom stateful operator (applyInPandasWithState): per-user running
-    # totals in explicit GroupState; integer-milli accumulation makes the
-    # bounded replay exactly equal a batch SQL aggregate
-    add("events_stream_user_totals", stream_user_totals,
-        """SELECT user_id, COUNT(*) AS n_events,
-               CAST(SUM(CAST(FLOOR(CAST(value AS DOUBLE) * 1000) AS BIGINT))
-                    AS BIGINT) AS sum_value_milli
-        FROM events
         GROUP BY user_id""")
 
     # trailing-window burst detector in exact integer arithmetic
@@ -424,151 +362,6 @@ def register(add) -> None:
         FROM uw JOIN first ON uw.user_id = first.user_id
         GROUP BY 1, 2""")
 
-    def stream_anomalies(spark, sf):
-        rolled = EV.replay_hourly_rollup(spark, sf,
-                                         _events_schema(spark, sf))
-        return EV.anomalies_from_rollup(
-            rolled.select("hour", "event_type", "n_events"),
-            threshold_sq=9)
-
-    # the same detector over the REPLAYED streaming rollup — stream and
-    # batch rollups are provably equal, so one oracle covers both
-    add("events_stream_anomalies", stream_anomalies,
-        """WITH h AS (
-          SELECT date_trunc('hour', ts) AS hour, event_type,
-                 COUNT(*) AS n_events
-          FROM events GROUP BY 1, 2),
-        win AS (
-          SELECT event_type, hour, n_events,
-                 SUM(n_events) OVER w AS win_sum,
-                 SUM(n_events * n_events) OVER w AS win_sq,
-                 COUNT(*) OVER w AS win_n
-          FROM h
-          WINDOW w AS (PARTITION BY event_type ORDER BY hour
-                       ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        SELECT event_type, hour, n_events,
-               CAST(win_sum AS BIGINT) AS win_sum,
-               CAST(win_n AS INTEGER) AS win_n
-        FROM win
-        WHERE win_n >= 24
-          AND (win_n * n_events - win_sum) * (win_n * n_events - win_sum)
-              > 9 * (win_n * win_sq - win_sum * win_sum)
-          AND win_n * n_events > win_sum""")
-
-    def stream_dedup(spark, sf):
-        return EV.replay_dedup_counts(spark, sf, _events_schema(spark, sf))
-
-    # streaming exactly-once ingestion: the self-unioned (redelivered)
-    # stream deduped on event_id must count exactly the batch distinct
-    add("events_stream_dedup", stream_dedup,
-        """SELECT event_type, COUNT(DISTINCT event_id) AS n_events
-        FROM events
-        GROUP BY event_type""")
-
-    # streaming ingestion-quality drift monitor: watermarked daily
-    # type-mix rollup streamed (one legal streaming agg), then batch TV
-    # scoring vs a STATIC baseline period (first 10 days) with an alert
-    # flag — exact cross-multiplied integers, no floats anywhere
-    def stream_type_drift(spark, sf):
-        ev = _events(spark, sf)
-        baseline = (ev.filter(F.col("ts").cast("date")
-                              < F.lit("2024-01-11").cast("date"))
-                    .groupBy("event_type")
-                    .agg(F.count(F.lit(1)).alias("n")))
-        out = EV.replay_type_drift(spark, sf,
-                                   _events_schema(spark, sf), baseline,
-                                   alert_milli=25)
-        return out.select("day", "n_events", "tv_milli",
-                          F.col("alert").cast("int").alias("alert"))
-
-    add("events_stream_type_drift", stream_type_drift,
-        """WITH c AS (
-          SELECT CAST(ts AS DATE) AS day, event_type,
-                 CAST(COUNT(*) AS BIGINT) AS c
-          FROM events GROUP BY 1, 2),
-        b AS (
-          SELECT event_type, CAST(COUNT(*) AS BIGINT) AS b
-          FROM events WHERE CAST(ts AS DATE) < DATE '2024-01-11'
-          GROUP BY 1),
-        bt AS (SELECT CAST(SUM(b) AS BIGINT) AS b_total FROM b),
-        days AS (SELECT day, CAST(SUM(c) AS BIGINT) AS c_total
-                 FROM c GROUP BY 1),
-        types AS (SELECT DISTINCT event_type FROM c
-                  UNION SELECT event_type FROM b),
-        grid AS (SELECT * FROM days CROSS JOIN types CROSS JOIN bt),
-        j AS (
-          SELECT g.day, g.c_total, g.b_total,
-                 COALESCE(c.c, 0) AS c, COALESCE(b.b, 0) AS b
-          FROM grid g
-          LEFT JOIN c ON c.day = g.day AND c.event_type = g.event_type
-          LEFT JOIN b ON b.event_type = g.event_type)
-        SELECT day, CAST(any_value(c_total) AS BIGINT) AS n_events,
-               CAST((500 * CAST(SUM(abs(c * b_total - b * c_total))
-                                AS HUGEINT))
-                    // (any_value(c_total) * any_value(b_total))
-                    AS BIGINT) AS tv_milli,
-               CAST(CASE WHEN (500 * CAST(SUM(abs(c * b_total
-                                 - b * c_total)) AS HUGEINT))
-                    // (any_value(c_total) * any_value(b_total)) >= 25
-                    THEN 1 ELSE 0 END AS INTEGER) AS alert
-        FROM j GROUP BY day""")
-
-    # exactly-once streaming MERGE: availableNow stream upserted into a
-    # versioned table (one CoW version per epoch, batchId idempotence),
-    # then the converged per-user latest state read back — the oracle
-    # is the plain arg-max SQL, so the driver certifies the whole
-    # stream→merge→commit→read chain.  Scratch keyed by source size;
-    # re-runs with an existing checkpoint see no new data and no-op.
-    def stream_upsert_latest(spark, sf):
-        import os
-
-        from ..sources import versioned as V
-        sig = str(os.path.getsize(f"{sf}/events.parquet"))
-        root = os.path.join("/tmp", "olap_xtrctr_upsert_demo",
-                            os.path.basename(os.path.normpath(sf)))
-        marker = os.path.join(root, "_DEMO_SRC")
-        if not (os.path.exists(marker)
-                and open(marker).read().strip() == sig):
-            import shutil
-            shutil.rmtree(root, ignore_errors=True)
-            os.makedirs(root, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write(sig)
-        sdf = (EV.event_stream(spark, sf, _events_schema(spark, sf),
-                               glob="events.parquet")
-               .withColumn("_ord", F.struct("ts", "event_id")))
-        q = V.stream_upsert_versioned(
-            sdf, os.path.join(root, "tbl"), ["user_id"], "_ord",
-            os.path.join(root, "ckpt"))
-        q.awaitTermination()
-        return (V.read_version(spark, os.path.join(root, "tbl"))
-                .select("user_id", "event_id", "event_type",
-                        F.round("value", 4).alias("value")))
-
-    add("events_stream_upsert_latest", stream_upsert_latest,
-        """WITH r AS (
-          SELECT user_id, event_id, event_type, value,
-                 ROW_NUMBER() OVER (PARTITION BY user_id
-                   ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events)
-        SELECT user_id, event_id, event_type,
-               ROUND(value, 4) AS value
-        FROM r WHERE rn = 1""")
-
-    def stream_dedup_bounded(spark, sf):
-        return EV.replay_dedup_counts_bounded(spark, sf,
-                                              _events_schema(spark, sf))
-
-    # bounded-state exactly-once dedup (dropDuplicatesWithinWatermark):
-    # keys evict once the watermark passes their event time + delay, so
-    # state is O(watermark window), not O(stream) — the form that
-    # survives an unbounded deployment; instant self-union redelivery
-    # is inside any delay, so the replay equals the batch distinct
-    add("events_stream_dedup_bounded", stream_dedup_bounded,
-        """SELECT event_type, COUNT(DISTINCT event_id) AS n_events
-        FROM events
-        GROUP BY event_type""")
-
     def skew_distinct(spark, sf):
         from ..operators.skew import count_distinct_skew_safe
         return count_distinct_skew_safe(_events(spark, sf), ["event_type"],
@@ -603,61 +396,185 @@ def register(add) -> None:
         FROM events
         GROUP BY 1, 2""")
 
-    # stream-stream interval join: purchases ⋈ preceding-hour clicks per
-    # user, both sides watermarked, event time bounded in both
-    # directions (state = O(window·rate)); bounded append-mode replay
-    # equals the batch interval join, so a plain SQL join is the oracle.
-    def stream_ssjoin(spark, sf):
-        return EV.replay_interval_join(spark, sf, _events_schema(spark, sf))
+    # semi-structured extraction: the events `props` JSON column parsed
+    # JVM-side (get_json_object stays in codegen — no Python, no UDF),
+    # aggregated, and top-10'd with an explicit deterministic rank.
+    def props_topk(spark, sf):
+        from pyspark.sql import Window
+        agg = (_events(spark, sf)
+               .select(F.get_json_object("props", "$.k").cast("int")
+                        .alias("k"), "value")
+               .groupBy("k")
+               .agg(F.count(F.lit(1)).alias("n_events"),
+                    F.sum(F.col("value").cast("decimal(18,4)"))
+                     .cast("double").alias("sum_value")))
+        # nulls LAST to match DuckDB's ASC default (Spark's asc puts
+        # nulls first) — latent k-less-props hardening, no effect today
+        top = agg.orderBy(F.desc("n_events"),
+                          F.asc_nulls_last("k")).limit(10)
+        w = Window.orderBy(F.desc("n_events"),
+                           F.asc_nulls_last("k"))  # 10 rows only
+        return (top.withColumn("rank", F.row_number().over(w))
+                .select("rank", "k", "n_events", "sum_value"))
 
-    add("events_stream_click_purchase_join", stream_ssjoin,
-        """SELECT p.event_id, p.user_id,
-               CAST(p.ts AS TIMESTAMP) AS purchase_ts,
-               p.value AS purchase_value,
-               CAST(c.ts AS TIMESTAMP) AS click_ts,
-               c.value AS click_value
-        FROM events p JOIN events c
-          ON p.user_id = c.user_id
-         AND p.event_type = 'purchase' AND c.event_type = 'click'
-         AND c.ts <= p.ts AND p.ts <= c.ts + INTERVAL 1 HOUR""")
+    add("events_props_topk", props_topk,
+        f"""WITH e AS (
+          SELECT CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
+                 value
+          FROM events),
+        c AS (
+          SELECT k, COUNT(*) AS n_events, {SUM_D('value')} AS sum_value
+          FROM e GROUP BY k)
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_events DESC, k)
+                    AS INTEGER) AS rank, k, n_events, sum_value
+        FROM c ORDER BY n_events DESC, k LIMIT 10""")
 
-    # stream-stream LEFT OUTER interval join, null-filtered: clicks with
-    # no purchase in the following hour.  Unlike the inner join, the
-    # null-padded rows are released only on state EVICTION, so clicks
-    # whose match window hasn't fallen behind the final watermark
-    # (min of both sides' max event time - delay) stay in state and are
-    # never emitted in a bounded replay — the oracle encodes exactly
-    # that clause (verified set-equal at sf0.001 and sf0.01).
-    def stream_unconverted(spark, sf):
-        return EV.replay_unconverted_clicks(spark, sf,
-                                            _events_schema(spark, sf))
+    # incremental materialized-view discipline: two partial rollups
+    # (disjoint halves of the corpus) merged on the rollup grain must
+    # equal the single-pass rollup — the oracle IS the full rollup
+    def rollup_incremental(spark, sf):
+        ev = _events(spark, sf)
+        old = EV.hourly_rollup(ev.filter(F.col("event_id") % 2 == 0))
+        delta = EV.hourly_rollup(ev.filter(F.col("event_id") % 2 == 1))
+        return EV.merge_rollup(old, delta)
 
-    add("events_stream_unconverted_clicks", stream_unconverted,
-        """WITH w AS (SELECT LEAST(
-              (SELECT MAX(ts) FROM events WHERE event_type='click'),
-              (SELECT MAX(ts) FROM events WHERE event_type='purchase')
-            ) - INTERVAL 2 HOUR AS wm)
-        SELECT c.event_id AS click_id, c.user_id,
-               CAST(c.ts AS TIMESTAMP) AS click_ts,
-               c.value AS click_value
-        FROM events c, w
-        WHERE c.event_type = 'click'
-          AND c.ts + INTERVAL 1 HOUR < w.wm
-          AND NOT EXISTS (
-            SELECT 1 FROM events p
-            WHERE p.event_type = 'purchase' AND p.user_id = c.user_id
-              AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR)""")
+    add("events_rollup_incremental", rollup_incremental,
+        f"""SELECT date_trunc('hour', ts) AS hour, event_type,
+               COUNT(*) AS n_events,
+               {SUM_D('value')} AS sum_value
+        FROM events
+        GROUP BY 1, 2""")
 
-    # HLL distinct users per event type, built by MERGING per-hour
-    # partial sketches (the persisted-state rollup path, not a direct
-    # pass) — rows-only: DataSketches estimates are deterministic for
-    # Spark but no SQL oracle reproduces them; tests/test_operators.py
-    # pins the estimate within 2% of exact.
-    def hll_users(spark, sf):
-        from ..operators import sketches as SK
-        ev = _events(spark, sf).withColumn(
-            "hour", F.date_trunc("hour", F.col("ts")))
-        partials = SK.hll_partial(ev, ["event_type", "hour"], "user_id")
-        return SK.hll_rollup(partials, ["event_type"]).orderBy("event_type")
+    # VARIANT semi-structured path (Spark 4 binary-encoded JSON): parse
+    # once, typed variant_get extraction, aggregate per key range — the
+    # modern lakehouse alternative to per-query string JSON parsing
+    add("events_props_variant_stats",
+        lambda spark, sf: (_events(spark, sf)
+            .select(F.parse_json("props").alias("v"), "value")
+            .select(F.expr("variant_get(v, '$.k', 'int')").alias("k"),
+                    "value")
+            .groupBy(F.floor(F.col("k") / 10).cast("int")
+                      .alias("k_bucket"))
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 F.count_distinct("k").alias("n_distinct_k"),
+                 F.sum(F.col("value").cast("decimal(18,4)"))
+                  .cast("double").alias("sum_value"))),
+        f"""WITH e AS (
+          SELECT CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
+                 value
+          FROM events)
+        SELECT CAST(FLOOR(k / 10.0) AS INTEGER) AS k_bucket,
+               COUNT(*) AS n_events,
+               COUNT(DISTINCT k) AS n_distinct_k,
+               {SUM_D('value')} AS sum_value
+        FROM e GROUP BY 1""")
 
-    add("events_hll_users_by_type", hll_users, None)
+    # value-based activity deciles: the cumulative window runs over
+    # DISTINCT event-count values (bounded), never over users — the
+    # scalable replacement for a global NTILE ranking
+    add("events_user_deciles",
+        lambda spark, sf: EV.user_activity_deciles(_events(spark, sf)),
+        """WITH ua AS (
+          SELECT user_id, COUNT(*) AS n_events FROM events
+          GROUP BY user_id),
+        vc AS (
+          SELECT n_events, COUNT(*) AS n_users_v FROM ua
+          GROUP BY n_events),
+        tot AS (SELECT COUNT(*) AS _total FROM ua),
+        vd AS (
+          SELECT n_events, n_users_v,
+                 CAST(least(CEIL((SUM(n_users_v) OVER
+                     (ORDER BY n_events DESC
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     * 10) / _total), 10) AS INTEGER) AS decile
+          FROM vc, tot)
+        SELECT decile,
+               CAST(SUM(n_users_v) AS BIGINT) AS n_users,
+               MIN(n_events) AS min_events,
+               MAX(n_events) AS max_events,
+               CAST(SUM(n_events * n_users_v) AS BIGINT) AS total_events
+        FROM vd GROUP BY decile""")
+
+    # sequential-pattern mining lite: most common consecutive event-type
+    # trigrams across user timelines (one user_id shuffle + bounded-key
+    # count + TakeOrderedAndProject — no self-join)
+    add("events_type_trigrams",
+        lambda spark, sf: EV.event_type_sequences(_events(spark, sf),
+                                                  n=3, k=15),
+        """WITH s AS (
+          SELECT event_type AS t1,
+                 lead(event_type, 1) OVER
+                   (PARTITION BY user_id ORDER BY ts, event_id) AS t2,
+                 lead(event_type, 2) OVER
+                   (PARTITION BY user_id ORDER BY ts, event_id) AS t3
+          FROM events),
+        c AS (
+          SELECT t1 || ' > ' || t2 || ' > ' || t3 AS seq,
+                 COUNT(*) AS n_occurrences
+          FROM s WHERE t3 IS NOT NULL
+          GROUP BY 1)
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_occurrences DESC, seq)
+                    AS INTEGER) AS rank, seq, n_occurrences
+        FROM c ORDER BY n_occurrences DESC, seq LIMIT 15""")
+
+    # Trailing moving average: dashboard smoothing
+    # over the hourly rollup — exact window SUMs divided once, so the
+    # doubles are engine-identical (streaming/events.hourly_moving_avg).
+
+    add("events_hourly_moving_avg",
+        lambda spark, sf: EV.hourly_moving_avg(_events(spark, sf)),
+        f"""WITH b AS (
+          SELECT date_trunc('hour', ts) AS hour, event_type,
+                 COUNT(*) AS n_events,
+                 {SUM_D('value')} AS sum_value
+          FROM events GROUP BY 1, 2)
+        SELECT hour, event_type, n_events,
+               CAST(SUM(n_events) OVER w AS DOUBLE)
+                 / CAST(COUNT(*) OVER w AS DOUBLE) AS ma_events,
+               CAST(SUM(CAST(sum_value AS DECIMAL(18,4))) OVER w
+                    AS DOUBLE)
+                 / CAST(COUNT(*) OVER w AS DOUBLE) AS ma_value
+        FROM b
+        WINDOW w AS (PARTITION BY event_type ORDER BY hour
+                     ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""")
+
+    # k-anonymity release suppression over a published aggregate (the
+    # reference's domain — a health ministry reporting stack — is
+    # exactly where this discipline applies): cells under k=8
+    # contributors are primary-suppressed, and a parent group with
+    # exactly ONE primary suppression also hides its smallest remaining
+    # cell (complementary suppression — otherwise parent total minus
+    # visible cells reconstructs the hidden value).  On this data k=8
+    # exercises BOTH rules: 8 primaries across 4 parents, one of which
+    # triggers the complementary path.
+    def _kanon(spark, sf):
+        from ..session import load_events
+        ev = load_events(spark, sf).withColumn(
+            "user_cohort", (F.col("user_id") % 97).cast("bigint"))
+        return SM.kanon_release(ev, "event_type", "user_cohort",
+                                k=8, value_col="value")
+
+    add("events_kanon_release", _kanon,
+        """WITH c AS (
+          SELECT event_type, CAST(user_id % 97 AS BIGINT) AS user_cohort,
+                 CAST(COUNT(*) AS BIGINT) AS n,
+                 ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE),
+                       4) AS sum_value
+          FROM events GROUP BY 1, 2),
+        m AS (
+          SELECT *, (n < 8) AS prim,
+                 SUM(CASE WHEN n < 8 THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY event_type) AS npar,
+                 ROW_NUMBER() OVER (PARTITION BY event_type, (n < 8)
+                                    ORDER BY n, user_cohort) AS rn
+          FROM c),
+        s AS (
+          SELECT *, (prim OR (npar = 1 AND NOT prim AND rn = 1))
+                      AS suppressed
+          FROM m)
+        SELECT event_type, user_cohort,
+               CASE WHEN suppressed THEN NULL ELSE n END AS n,
+               CASE WHEN suppressed THEN NULL ELSE sum_value END
+                 AS sum_value,
+               suppressed
+        FROM s""")

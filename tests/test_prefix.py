@@ -56,7 +56,8 @@ def test_milestones_negative_values_floor_semantics(spark):
     indices (python's ``//`` contract; the symmetric boundary rule) —
     not Spark's truncate-toward-zero ``div`` (ADVICE r10: a negative
     stream silently diverged).  NB: DuckDB's integer ``//`` truncates
-    too, so SQL oracles spell floor out explicitly (wave11)."""
+    too, so SQL oracles spell floor out explicitly
+    (workloads/events_running)."""
     # running: -30, -120, -70, 40.  With step=50 and floor division
     # the milestone index sequence is -1, -3, -2, 0; a row crosses
     # when hi > lo (up-crossings only, same filter as the oracles).

@@ -80,3 +80,13 @@ def test_readme_cli_examples_parse():
         except SystemExit:
             bad.append(" ".join(argv))
     assert not bad, bad
+
+
+def test_workload_md_matches_generator():
+    """The checked-in WORKLOAD.md is exactly what
+    ``scripts/gen_workload_md.py`` renders from the workload registry
+    (importing the registry starts no JVM)."""
+    import runpy
+    gen = runpy.run_path(str(ROOT / "scripts" / "gen_workload_md.py"))
+    assert (ROOT / "WORKLOAD.md").read_text(encoding="utf-8") \
+        == gen["render"]()
