@@ -341,6 +341,11 @@ def _subblock_oversized(assigned: DataFrame, max_cell_rows: int,
     return df.drop("_pqc"), block_cols
 
 
+# Fixed partition count of the SemDeDup KMeans fit input: a constant,
+# not a setting, so the trained cells never follow the host's cores.
+_SEMDEDUP_FIT_PARTITIONS = 4
+
+
 def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.995,
                          n_clusters: int = 8, n_assign: int = 3,
                          id_col: str = "vec_id",
@@ -372,7 +377,18 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.995,
     sub-blocks (recall reduction confined to those cells, logged;
     corpora with every cell in bound are bit-identical to the exact
     path), ``oversize="error"`` restores the loud refusal — raise
-    n_clusters."""
+    n_clusters.
+
+    Determinism: the trained cells, and so the pairs, depend only on
+    the corpus and ``seed`` — not on the input partitioning or the
+    core count.  k-means|| seeding samples per partition, so the fit
+    reads the features in a fixed layout of ``_SEMDEDUP_FIT_PARTITIONS``
+    (4) hash partitions on ``id_col``, each sorted by ``id_col``; the
+    assignment, size guard and pair join run on ``emb`` as it came in.
+    The value 4 is not tuned: each fixed count tried (1, 2, 3, 4, 5,
+    8, 16 and 32) finds all 7 exact pairs of the sf0.001 fixture at
+    threshold 0.45; only a layout that follows ``local[N]`` loses
+    one."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -381,7 +397,9 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.995,
         array_to_vector(F.col(vec_col).cast("array<double>"))
         .alias("features"))
     model = KMeans(k=n_clusters, seed=seed, maxIter=10,
-                   featuresCol="features").fit(feats)
+                   featuresCol="features").fit(
+        feats.repartition(_SEMDEDUP_FIT_PARTITIONS, id_col)
+             .sortWithinPartitions(id_col))
     from pyspark import StorageLevel
 
     cells = _cell_assign_udf(
